@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
+
 
 def new_keys(staging: DataFrame, live: DataFrame, keys: Sequence[str]) -> DataFrame:
     """M1 — left-anti join: staging rows whose key has no match in live.
@@ -261,7 +263,7 @@ def generate_ids(
     for pid, cnt in counts:
         offsets.append((pid, acc))
         acc += cnt
-    offs = sess.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
+    offs = local_frame(sess, offsets or [(0, 0)], "__pid int, __off long")
     idc = F.col("__off") + F.col("__rn") + F.lit(start - 1)
     out = ranked.join(F.broadcast(offs), "__pid", "left")
     if prefix:

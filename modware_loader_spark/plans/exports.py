@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.functions import reverse_complement
 from modware_loader_spark.plans.gff3_load import ChadoGFF3Loader
 
@@ -212,7 +213,8 @@ def chado2alignment_rows(
         (F.col("name") == feature_type) & (F.col("cv") == "sequence")
     ).first()
     if type_id_row is None:
-        return loader.spark.createDataFrame(
+        return local_frame(
+            loader.spark,
             [],
             "seq_id string, source string, type string, start long, end long, "
             "score double, strand int, phase int, "

@@ -29,9 +29,11 @@ Merge statements (M1/M5/M11/M12 patterns; golden counts
 - dependent tables join through the freshly-updated live feature table
 
 Scale: dims (db, cvterm, analysis) are broadcast-sized; every fact merge
-shuffles once on uniquename. Live tables are localCheckpoint()ed per load
-so lineage stays flat across incremental loads (swap for checkpoint() on a
-cluster).
+shuffles once on uniquename. Each statement's new rows are
+localCheckpoint()ed once, counted from that materialization and unioned
+onto the live table; a live table that is already such a union is
+materialized first, so lineage stays at most two leaves deep across
+incremental loads (swap for checkpoint() on a cluster).
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators.merge import generate_ids, new_keys
 from modware_loader_spark.sources.gff3 import parse_gff3
 from modware_loader_spark.sources.stitch import running_stitch
@@ -80,10 +83,10 @@ class ChadoGFF3Loader:
         self.synonym_pub_id = 1
         self._auto_counter = 0
         self.tables = {
-            name: spark.createDataFrame([], schema) for name, schema in EMPTY_SCHEMAS.items()
+            name: local_frame(spark, [], schema) for name, schema in EMPTY_SCHEMAS.items()
         }
         self.dims = {
-            name: spark.createDataFrame([], schema) for name, schema in DIM_SCHEMAS.items()
+            name: local_frame(spark, [], schema) for name, schema in DIM_SCHEMAS.items()
         }
 
     # -- dimension find-or-create (U1: batch anti-join-create, never row-at-a-time)
@@ -92,7 +95,7 @@ class ChadoGFF3Loader:
         fresh = rows.distinct().join(live.select(*keys), keys, "left_anti")
         base = live.agg(F.max(id_col).alias("m")).first().m or 0
         fresh = generate_ids(fresh, keys, id_col=id_col, start=base + 1)
-        self.dims[dim] = live.unionByName(fresh.select(live.columns)).localCheckpoint()
+        self.dims[dim] = _append(live, fresh.select(live.columns).localCheckpoint())
         return self.dims[dim]
 
     def _cvterm_ids(self, names_df: DataFrame) -> DataFrame:
@@ -111,7 +114,10 @@ class ChadoGFF3Loader:
         has_id = attrs["ID"].isNotNull()
         # dense auto-numbering of ID-less rows in line order, via the
         # chunked two-phase running count (no single-partition window —
-        # same machinery as the record parsers, sources/stitch.py)
+        # same machinery as the record parsers, sources/stitch.py).
+        # Checkpointed, not persisted: AQE sizes a checkpoint's output
+        # partitions but never a cached plan's, and every staging frame
+        # and merge statement below inherits this partitioning.
         feats = (
             running_stitch(
                 features, counts={"__auto_cnt": ~has_id}, idx_col="line_idx"
@@ -125,7 +131,7 @@ class ChadoGFF3Loader:
                 ),
             )
             .withColumn("fname", attrs["Name"][0])
-            .persist()
+            .localCheckpoint()
         )
         self._auto_counter += feats.filter(~has_id).count()
 
@@ -268,7 +274,7 @@ class ChadoGFF3Loader:
         ).distinct()
         dbs = (
             st["feature_dbxref"].select(F.col("db").alias("name")).distinct()
-            .unionByName(self.spark.createDataFrame([("GFF_source",), ("local",), ("internal",)], "name string"))
+            .unionByName(local_frame(self.spark, ["GFF_source", "local", "internal"], "name string"))
         )
         db_dim = F.broadcast(self._dim_upsert("db", dbs.distinct(), ["name"], "db_id"))
         # source dbxrefs are find-or-created into live dbxref at staging time
@@ -281,7 +287,8 @@ class ChadoGFF3Loader:
             st["feature"].select(F.col("type").alias("name")).distinct()
             .withColumn("cv", F.lit("sequence"))
             .unionByName(
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [("part_of", "sequence"), ("derives_from", "sequence"),
                      ("symbol", "synonym_type")],
                     "name string, cv string",
@@ -347,9 +354,8 @@ class ChadoGFF3Loader:
             F.col("md5").alias("md5checksum"),
             F.col("seqlen"),
         )
-        counts["new_feature"] = new_feature.count()
-        feature = feature.unionByName(new_feature).localCheckpoint()
-        self.tables["feature"] = feature
+        counts["new_feature"] = self._add("feature", new_feature)
+        feature = self.tables["feature"]
         fkey = feature.select("feature_id", "uniquename")
 
         # [insert_new_featureloc] (+ target variant) — M5 key resolution
@@ -374,14 +380,11 @@ class ChadoGFF3Loader:
                 )
             )
 
-        new_floc = resolve_loc(st["featureloc"], F.lit(0))
+        new_floc = resolve_loc(st["featureloc"], F.lit(0)).localCheckpoint()
+        new_floc_t = resolve_loc(st["featureloc_target"], F.col("rank")).localCheckpoint()
         counts["new_featureloc"] = new_floc.count()
-        new_floc_t = resolve_loc(st["featureloc_target"], F.col("rank"))
         counts["new_featureloc_target"] = new_floc_t.count()
-        self.tables["featureloc"] = (
-            self.tables["featureloc"].unionByName(new_floc).unionByName(new_floc_t)
-            .localCheckpoint()
-        )
+        self.tables["featureloc"] = _append(self.tables["featureloc"], new_floc, new_floc_t)
 
         # [insert_new_analysisfeature]
         new_af = (
@@ -391,10 +394,7 @@ class ChadoGFF3Loader:
             .join(analysis_dim.select("program", "analysis_id"), "program")
             .select("feature_id", F.col("score").alias("significance"), "analysis_id")
         )
-        counts["new_analysisfeature"] = new_af.count()
-        self.tables["analysisfeature"] = (
-            self.tables["analysisfeature"].unionByName(new_af).localCheckpoint()
-        )
+        counts["new_analysisfeature"] = self._add("analysisfeature", new_af)
 
         # [insert_new_synonym] — M12 DISTINCT + anti-join on (name, type_id)
         syn_cand = (
@@ -411,10 +411,7 @@ class ChadoGFF3Loader:
         syn_new = syn_new.select(
             "synonym_id", "name", "type_id", F.col("name").alias("synonym_sgml")
         )
-        counts["new_synonym"] = syn_new.count()
-        self.tables["synonym"] = (
-            self.tables["synonym"].unionByName(syn_new).localCheckpoint()
-        )
+        counts["new_synonym"] = self._add("synonym", syn_new)
 
         # [insert_new_feature_synonym] — join on alias = synonym.name only
         new_fs = (
@@ -427,10 +424,7 @@ class ChadoGFF3Loader:
             .join(fkey.withColumnsRenamed({"uniquename": "id"}), "id")
             .select("feature_id", "synonym_id", F.lit(self.synonym_pub_id).alias("pub_id"))
         )
-        counts["new_feature_synonym"] = new_fs.count()
-        self.tables["feature_synonym"] = (
-            self.tables["feature_synonym"].unionByName(new_fs).localCheckpoint()
-        )
+        counts["new_feature_synonym"] = self._add("feature_synonym", new_fs)
 
         # [insert_new_feature_relationship] — subject must be new, parent
         # resolved against the post-insert live feature table
@@ -455,10 +449,7 @@ class ChadoGFF3Loader:
             .join(rel_terms, "rel_type")
             .select("object_id", "subject_id", F.col("rel_type_id").alias("type_id"))
         )
-        counts["new_feature_relationship"] = new_fr.count()
-        self.tables["feature_relationship"] = (
-            self.tables["feature_relationship"].unionByName(new_fr).localCheckpoint()
-        )
+        counts["new_feature_relationship"] = self._add("feature_relationship", new_fr)
 
         # [insert_new_dbxref] — M11 window dedup by accession
         fd = st["feature_dbxref"].join(
@@ -471,6 +462,7 @@ class ChadoGFF3Loader:
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(F.col("dbxref").alias("accession"), "db_id")
+            .localCheckpoint()
         )
         counts["new_dbxref"] = dx_new.count()
         self._insert_dbxrefs(dx_new)
@@ -486,10 +478,7 @@ class ChadoGFF3Loader:
             .join(fkey.withColumnsRenamed({"uniquename": "id"}), "id")
             .select("dbxref_id", "feature_id")
         )
-        counts["new_feature_dbxref"] = new_fd.count()
-        self.tables["feature_dbxref"] = (
-            self.tables["feature_dbxref"].unionByName(new_fd).localCheckpoint()
-        )
+        counts["new_feature_dbxref"] = self._add("feature_dbxref", new_fd)
 
         # [insert_new_featureprop]
         new_fp = (
@@ -500,11 +489,15 @@ class ChadoGFF3Loader:
             .select("feature_id", F.col("property").alias("value"),
                     F.col("prop_type_id").alias("type_id"))
         )
-        counts["new_featureprop"] = new_fp.count()
-        self.tables["featureprop"] = (
-            self.tables["featureprop"].unionByName(new_fp).localCheckpoint()
-        )
+        counts["new_featureprop"] = self._add("featureprop", new_fp)
         return counts
+
+    def _add(self, table: str, new: DataFrame) -> int:
+        """Materialize one statement's new rows once, append them to the
+        live ``table`` and return their count."""
+        new = new.localCheckpoint()
+        self.tables[table] = _append(self.tables[table], new)
+        return new.count()
 
     # ------------------------------------------------------------------
     def dims_dbxref_for_sources(self, db_dim: DataFrame) -> DataFrame:
@@ -526,6 +519,18 @@ class ChadoGFF3Loader:
         )
         base = live.agg(F.max("dbxref_id").alias("m")).first().m or 0
         fresh = generate_ids(fresh, ["db_id", "accession"], id_col="dbxref_id", start=base + 1)
-        self.tables["dbxref"] = live.unionByName(
-            fresh.select("dbxref_id", "accession", "db_id")
-        ).localCheckpoint()
+        self.tables["dbxref"] = _append(
+            live, fresh.select("dbxref_id", "accession", "db_id").localCheckpoint()
+        )
+
+
+def _append(live: DataFrame, *new: DataFrame) -> DataFrame:
+    """``live`` ∪ already-materialized ``new`` rows, without re-running the
+    plans that produced them. A ``live`` that is itself such a union (from
+    an earlier statement or load) is materialized first, so a live table
+    is at most one materialized or scanned leaf plus this statement's."""
+    if live._jdf.queryExecution().logical().nodeName() == "Union":
+        live = live.localCheckpoint()
+    for df in new:
+        live = live.unionByName(df)
+    return live

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators import components as C
 from modware_loader_spark.operators import dedup as D
 from modware_loader_spark.operators import ivf as IVF
@@ -77,46 +78,6 @@ def _session_df(spark: SparkSession, sf_dir: str, key: tuple, build,
         df = build()
         _DF_MEMO[full] = df
     return df
-
-
-def _values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """A tiny driver-known table as a TRUE ``LocalRelation`` (SQL
-    ``VALUES``), not ``createDataFrame`` — PySpark's local-data path
-    parallelizes rows into an ``ExistingRDD`` whose size statistics are
-    UNKNOWN, so every static join against it falls back to sort-merge
-    and only AQE rescues the broadcast at runtime (one shuffle map
-    stage too late). A ``VALUES`` LocalRelation carries exact row
-    counts/sizes, so the planner picks the broadcast join statically —
-    the plan shape the pre-memo eager ``localCheckpoint`` used to give
-    (r13; guide §3.1 "estimates are often badly wrong — make the small
-    side's size known"). Supports str/int/float cells (the artifact
-    row shapes: host strings, micro longs)."""
-    if not rows:
-        raise ValueError("_values_df needs at least one row")
-
-    def cell(v) -> str:
-        if isinstance(v, str):
-            if not all(ch.isalnum() or ch in "._-:/" for ch in v):
-                raise ValueError(f"unexpected characters in VALUES cell {v!r}")
-            return f"'{v}'"
-        if isinstance(v, bool):
-            raise TypeError("bool cells unsupported")
-        if isinstance(v, int):
-            return f"{v}L"
-        if isinstance(v, float):
-            return f"{v!r}D"
-        raise TypeError(f"unsupported VALUES cell type {type(v).__name__}")
-
-    cols = ", ".join(c.strip().split()[0] for c in schema.split(","))
-    tuples = ", ".join(
-        "(" + ", ".join(cell(v) for v in (r if isinstance(r, tuple) else (r,))) + ")"
-        for r in rows
-    )
-    out = spark.sql(f"SELECT * FROM VALUES {tuples} AS t({cols})")
-    # cast to the declared types (VALUES infers, e.g. INT for small
-    # longs would break unions downstream; the L suffix pins BIGINT and
-    # strings are strings, so this is belt-and-braces)
-    return out.to(spark.createDataFrame([], schema).schema)
 
 
 # DuckDB fragments shared by several oracles
@@ -2065,12 +2026,14 @@ def _host_graph_dfs(spark: SparkSession, sf_dir: str) -> tuple:
     edges_rows, hosts = _host_graph_artifacts(spark, sf_dir)
     edges = _session_df(
         spark, sf_dir, ("host_link_edges_df", _LINK_H),
-        lambda: _values_df(spark, edges_rows, "src string, dst string"),
+        lambda: local_frame(
+            spark, edges_rows, "src string not null, dst string not null"
+        ),
         table="documents",
     )
     nodes = _session_df(
         spark, sf_dir, ("host_link_nodes_df", _LINK_H),
-        lambda: _values_df(spark, hosts, "host string"),
+        lambda: local_frame(spark, hosts, "host string not null"),
         table="documents",
     )
     return edges, nodes, len(hosts)
@@ -2113,7 +2076,9 @@ def _host_token_weights_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return _session_df(
         spark, sf_dir, ("host_token_weights_df", _LINK_H),
-        lambda: _values_df(spark, rows, "host string, w_micros long"),
+        lambda: local_frame(
+            spark, rows, "host string not null, w_micros long not null"
+        ),
         table="documents",
     )
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
+
 GFF3_COLS = ["seq_id", "source", "type", "start", "end", "score", "strand", "phase"]
 
 
@@ -81,7 +83,7 @@ def write_gff3(
     header = [("##gff-version 3", "", -2)]
     for sid, lo, hi in sequence_regions or []:
         header.append((f"##sequence-region {sid} {lo} {hi}", sid, -1))
-    head_df = spark.createDataFrame(header, "line string, seq_id string, start long")
+    head_df = local_frame(spark, header, "line string, seq_id string, start long")
     body = gff3_lines(features, attr_col).select("line", "seq_id", "start")
     (
         head_df.unionByName(body)

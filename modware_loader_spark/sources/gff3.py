@@ -7,9 +7,10 @@ parsing via Bio::GFF3::LowLevel): per line → feature hashref with a
 file to FASTA records; ``##`` directives are passed through; ``#`` comments
 skipped.
 
-Spark shape: one ``textFile`` scan with a global line index (zipWithIndex —
-deterministic per file), the FASTA boundary found with one tiny agg, then
-two branch DataFrames. Attributes parse as
+Spark shape: one JVM text scan with a dense global line index (the line's
+position inside its file block plus the block's offset — the indexes
+``zipWithIndex`` would give, without a Python worker), the FASTA boundary
+found with one tiny agg, then two branch DataFrames. Attributes parse as
 ``str_to_map(';', '=')`` + comma-split → ``map<string, array<string>>`` —
 all JVM-side. Values are percent-decoded (%2C/%3B/%09 … —
 ``Bio::GFF3::LowLevel`` semantics) with literal '+' untouched; the GFF3
@@ -25,16 +26,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.sources.stitch import running_stitch
-
-LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("line", T.StringType(), False),
-        T.StructField("idx", T.LongType(), False),
-    ]
-)
 
 FEATURE_COLS = [
     "seq_id",
@@ -51,8 +45,32 @@ FEATURE_COLS = [
 
 
 def _lines_with_index(spark: SparkSession, path: str) -> DataFrame:
-    rdd = spark.sparkContext.textFile(path).zipWithIndex()
-    return spark.createDataFrame(rdd, LINES_SCHEMA)
+    """``(line, idx)`` for every line of the text file(s) at ``path``, with
+    ``idx`` dense from 0 in file order (files by path).
+
+    ``monotonically_increasing_id`` numbers rows consecutively inside a
+    scan partition, and each file block is scanned by exactly one
+    partition, so a row's position in its block is its id minus the
+    block's smallest id. One small aggregate counts the lines per block;
+    Python folds those counts into per-block shifts, which join back
+    as a broadcast ``LocalRelation``."""
+    raw = spark.read.text(path).select(
+        F.col("value").alias("line"),
+        F.col("_metadata.file_path").alias("__file"),
+        F.col("_metadata.file_block_start").alias("__block"),
+        F.monotonically_increasing_id().alias("__id"),
+    )
+    blocks = raw.groupBy("__file", "__block").agg(
+        F.count(F.lit(1)).alias("n"), F.min("__id").alias("first")
+    )
+    shifts, acc = [], 0
+    for r in sorted(blocks.collect(), key=lambda r: (r["__file"], r["__block"])):
+        shifts.append((r["__file"], r["__block"], acc - r["first"]))
+        acc += r["n"]
+    shift = local_frame(spark, shifts, "__file string, __block long, __shift long")
+    return raw.join(F.broadcast(shift), ["__file", "__block"]).select(
+        "line", (F.col("__id") + F.col("__shift")).alias("idx")
+    )
 
 
 def parse_fasta(spark: SparkSession, path: str) -> DataFrame:
@@ -129,9 +147,7 @@ def parse_gff3(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     )
 
     if fasta_start is None:
-        sequences = spark.createDataFrame(
-            [], "seq_id string, sequence string"
-        )
+        sequences = local_frame(spark, [], "seq_id string, sequence string")
     else:
         tail = lines.filter(F.col("idx") > fasta_start)
         tagged = running_stitch(

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from modware_loader_spark.frames import local_frame
+
 DEFAULT_CHUNK = 4096
 
 
@@ -109,7 +111,7 @@ def running_stitch(
         + [T.StructField(f"__off_{n}", T.LongType(), False) for n in counts]
         + [T.StructField(f"__in_{n}", fin_types[f"__fin_{n}"], True) for n in lasts]
     )
-    carries = lines.sparkSession.createDataFrame(carry_rows, carry_schema)
+    carries = local_frame(lines.sparkSession, carry_rows, carry_schema)
 
     # Phase 4 — broadcast the carries back; combine map-side.
     out = local.join(F.broadcast(carries), "__chunk", "left")

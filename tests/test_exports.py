@@ -18,6 +18,7 @@ from modware_loader_spark.sources.gaf import parse_gaf
 from modware_loader_spark.sources.gff3 import parse_gff3
 
 DATA = "/root/reference/t/test_data"
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
 @pytest.fixture(scope="module")
@@ -138,7 +139,7 @@ def test_chado2alignment_export(spark):
     from modware_loader_spark.plans.exports import chado2alignment_rows
 
     ldr = ChadoGFF3Loader(spark)
-    ldr.load_file("/root/reference/t/test_data/gff3/test1.gff3")
+    ldr.load_file(os.path.join(FIXTURES, "est_alignment.gff3"))
     rows = chado2alignment_rows(ldr, "EST_match", match_type="EST_match").collect()
     parents = [r for r in rows if r.type == "EST_match"]
     parts = sorted(

@@ -148,29 +148,6 @@ def test_host_graph_memo_matches_fresh_harvest(spark):
     assert sorted(r["host"] for r in w.collect()) == fresh_hosts
 
 
-def test_values_df_types_and_rows(spark):
-    from modware_loader_spark.plans.pipeline_queries import _values_df
-
-    df = _values_df(
-        spark, [("a.example.org", 7), ("b.example.org", -3)],
-        "host string, w long",
-    )
-    assert dict(df.dtypes) == {"host": "string", "w": "bigint"}
-    assert sorted((r["host"], r["w"]) for r in df.collect()) == [
-        ("a.example.org", 7),
-        ("b.example.org", -3),
-    ]
-    # LocalRelation, not a parallelized RDD: exact stats -> static BHJ
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
-    assert "LocalTableScan" in plan or "LocalRelation" in plan
-    with pytest.raises(ValueError):
-        _values_df(spark, [], "x string")
-    with pytest.raises(ValueError):
-        _values_df(spark, [("bad'quote",)], "x string")
-
-
 # --------------------------------- training pipeline single scan
 
 
