@@ -18,8 +18,10 @@ partition pruning on the read side.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -136,45 +138,55 @@ class ChadoCatalog:
         }
 
 
-def save_loader_state(loader, catalog: ChadoCatalog) -> None:
-    """Persist a loader's tables + dims + scalar state (the auto-id
-    counter is the analog of the reference's DB sequence position —
-    without it a fresh process would mint colliding auto uniquenames)."""
-    import json
+def _state_tables(loader) -> dict[str, DataFrame]:
+    """A loader's tables plus its dims, saved as ``dim_<name>``."""
+    dims = getattr(loader, "dims", {})
+    return {**loader.tables, **{f"dim_{name}": df for name, df in dims.items()}}
 
-    tables = dict(loader.tables)
-    for name, df in getattr(loader, "dims", {}).items():
-        tables[f"dim_{name}"] = df
-    catalog.save(tables)
-    meta = {
+
+def _state_meta(loader) -> dict:
+    """A loader's scalar state: the auto-id counter (the analog of the
+    reference's DB sequence position — without it a fresh process would
+    mint colliding auto uniquenames) and its metadata."""
+    return {
         "auto_counter": getattr(loader, "_auto_counter", 0),
         "metadata": getattr(loader, "metadata", {}),
     }
+
+
+def _restore_state(
+    loader, load: Callable[[list[str]], dict[str, DataFrame]], meta: dict | None
+) -> None:
+    """Rehydrate ``loader`` from ``load(names)``, which returns the saved
+    tables among ``names``, and from the scalar state ``meta`` (as written
+    by :func:`_state_meta`), if there is one."""
+    loader.tables.update(load(list(loader.tables)))
+    dims = getattr(loader, "dims", {})
+    for name, df in load([f"dim_{name}" for name in dims]).items():
+        dims[name.removeprefix("dim_")] = df
+    if meta is None:
+        return
+    if hasattr(loader, "_auto_counter"):
+        loader._auto_counter = meta.get("auto_counter", 0)
+    if hasattr(loader, "metadata"):
+        loader.metadata.update(meta.get("metadata", {}))
+
+
+def save_loader_state(loader, catalog: ChadoCatalog) -> None:
+    """Persist a loader's tables + dims + scalar state."""
+    catalog.save(_state_tables(loader))
     os.makedirs(catalog.root, exist_ok=True)
     with open(os.path.join(catalog.root, "_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+        json.dump(_state_meta(loader), fh)
 
 
 def restore_loader_state(loader, catalog: ChadoCatalog) -> None:
-    import json
-
-    table_names = list(loader.tables)
-    restored = catalog.load(table_names)
-    loader.tables.update(restored)
-    dims = getattr(loader, "dims", None)
-    if dims is not None:
-        for name in list(dims):
-            got = catalog.load([f"dim_{name}"])
-            if got:
-                dims[name] = got[f"dim_{name}"]
     meta_path = os.path.join(catalog.root, "_meta.json")
+    meta = None
     if os.path.exists(meta_path):
         with open(meta_path) as fh:
             meta = json.load(fh)
-        if hasattr(loader, "_auto_counter"):
-            loader._auto_counter = meta.get("auto_counter", 0)
-        if hasattr(loader, "metadata"):
-            loader.metadata.update(meta.get("metadata", {}))
+    _restore_state(loader, catalog.load, meta)
 
 
 # FK-parent-first write order for a REAL Chado RDBMS sink (the reference
@@ -232,13 +244,9 @@ def save_loader_state_jdbc(
     Scalar state (auto-id counter = the reference's sequence position,
     plus loader metadata) lands in a 1-row-per-key ``loader_meta`` table
     so a fresh process resumes without minting colliding ids."""
-    import json
-
     props = dict(properties or {})
     props.setdefault("batchsize", str(batchsize))
-    tables = dict(loader.tables)
-    for name, df in getattr(loader, "dims", {}).items():
-        tables[f"dim_{name}"] = df
+    tables = _state_tables(loader)
     for name, df in _jdbc_ordered(tables):
         # Break lineage before the overwrite: a restored loader's
         # untouched tables still READ from the very JDBC table being
@@ -249,11 +257,9 @@ def save_loader_state_jdbc(
         df.localCheckpoint().write.mode("overwrite").jdbc(
             url, name, properties=props
         )
-    meta_rows = [
-        ("auto_counter", str(getattr(loader, "_auto_counter", 0))),
-        ("metadata", json.dumps(getattr(loader, "metadata", {}))),
-        ("tables", json.dumps(sorted(tables))),
-    ]
+    # one JSON value per key (the counter's JSON text is its decimal)
+    meta = {**_state_meta(loader), "tables": sorted(tables)}
+    meta_rows = [(k, json.dumps(v)) for k, v in meta.items()]
     loader.spark.createDataFrame(meta_rows, "k string, v string").write.mode(
         "overwrite"
     ).jdbc(url, "loader_meta", properties=props)
@@ -318,8 +324,6 @@ def restore_loader_state_jdbc(
     reads are unpartitioned single-task scans, right for dimension /
     merge-target tables; a bulk re-export of a billion-row feature
     table would pass ``partitionColumn`` bounds instead."""
-    import json
-
     props = dict(properties or {})
     try:
         meta = {
@@ -347,20 +351,14 @@ def restore_loader_state_jdbc(
         ):
             return  # nothing saved yet — keep the loader's empty state
         raise
-    saved = set(json.loads(meta.get("tables", "[]")))
-    for name in list(loader.tables):
-        if name in saved:
-            loader.tables[name] = _jdbc_read_state(
-                loader.spark, url, name, props
-            )
-    dims = getattr(loader, "dims", None)
-    if dims is not None:
-        for name in list(dims):
-            if f"dim_{name}" in saved:
-                dims[name] = _jdbc_read_state(
-                    loader.spark, url, f"dim_{name}", props
-                )
-    if hasattr(loader, "_auto_counter"):
-        loader._auto_counter = int(meta.get("auto_counter", "0"))
-    if hasattr(loader, "metadata"):
-        loader.metadata.update(json.loads(meta.get("metadata", "{}")))
+    meta = {k: json.loads(v) for k, v in meta.items()}
+    saved = set(meta.get("tables", []))
+    _restore_state(
+        loader,
+        lambda names: {
+            name: _jdbc_read_state(loader.spark, url, name, props)
+            for name in names
+            if name in saved
+        },
+        meta,
+    )

@@ -7,12 +7,25 @@ joins/EXCEPT/anti-joins → INSERT/UPDATE/DELETE (SQL in
 variants). Here each pattern is one declarative DataFrame function; Catalyst
 picks the physical join (broadcast-hash for dim-sized sides, sort-merge
 otherwise, AQE skew-splitting at runtime). No temp tables exist — a
-"staging relation" is just a DataFrame, cached if reused.
+"staging relation" is a DataFrame; the loaders ``localCheckpoint`` the ones
+every statement re-reads.
 
-Scale notes (100 TB): every function below is a pure DataFrame expression,
-so predicate pushdown / column pruning reach the scan; merges on a natural
-key shuffle once on that key; dim-sided lookups (M5) should pass
-``broadcast=True``. Nothing collects to the driver.
+The live-table half of every loader's merge is :func:`append` and
+:func:`find_or_create`. Their contract: new rows get surrogate ids after
+the live table's max id (M13, in a caller-given order, so ids are
+reproducible), are materialized exactly once — counting them or joining
+against them never re-runs the diff that produced them — and are unioned
+onto the live table. A live table that is not a single leaf (a scan, a
+local relation or an earlier materialization) is materialized before the
+union, so across any number of appends its plan stays at most one
+materialized leaf plus the newest rows (use ``checkpoint`` instead of
+``localCheckpoint`` on a cluster that must survive executor loss).
+
+Scale notes (100 TB): M1–M12 are pure DataFrame expressions, so predicate
+pushdown / column pruning reach the scan; merges on a natural key shuffle
+once on that key; dim-sided lookups (M5) should pass ``broadcast=True``.
+Only small values reach the driver: M13 collects one count per
+partition, and :func:`append` reads the live max id with one ``first()``.
 
 Operator numbering follows SURVEY.md §2.3.
 """
@@ -289,3 +302,48 @@ def upsert(
     updated = scd1_update(live, staging, keys, update_cols)
     fresh = new_keys(staging, live, keys).select(*live.columns)
     return updated.unionByName(fresh)
+
+
+def append(
+    live: DataFrame,
+    *new: DataFrame,
+    id_col: str | None = None,
+    order_by: Sequence[Column | str] = (),
+) -> tuple[DataFrame, ...]:
+    """Live-table INSERT: returns ``(live ∪ new…, *new as materialized)``.
+
+    With ``id_col``, the single ``new`` frame first gets ``id_col`` ids
+    continuing after ``live``'s max (from 1 on an empty table), numbered
+    over ``order_by`` (M13). Each new frame is ``localCheckpoint``-ed once
+    and unioned under ``live``'s columns (extra columns stay on the
+    returned frame only); ``live`` itself is materialized first unless it
+    is a single leaf, which bounds its lineage (module docstring).
+    """
+    if id_col is not None:
+        if len(new) != 1:
+            raise ValueError("ids are allocated for exactly one new frame")
+        base = live.agg(F.max(id_col).alias("m")).first().m or 0
+        new = (generate_ids(new[0], order_by, id_col=id_col, start=base + 1),)
+    new = tuple(df.localCheckpoint() for df in new)
+    if not live._jdf.queryExecution().logical().children().isEmpty():
+        live = live.localCheckpoint()
+    for df in new:
+        live = live.unionByName(df.select(*live.columns))
+    return (live, *new)
+
+
+def find_or_create(
+    live: DataFrame,
+    rows: DataFrame,
+    keys: Sequence[str],
+    id_col: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Batch find-or-create (U1): the distinct ``rows`` whose ``keys`` are
+    not in ``live`` yet, appended with ids ordered by ``keys``. Returns
+    ``(live, created rows)``.
+
+    This is M12 without the DISTINCT on the live side: a left-anti join
+    needs none, and it would cost a shuffle stage per call.
+    """
+    fresh = rows.distinct().join(live.select(*keys), list(keys), "left_anti")
+    return append(live, fresh, id_col=id_col, order_by=keys)

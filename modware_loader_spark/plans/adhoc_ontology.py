@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from modware_loader_spark.operators.merge import generate_ids
+from modware_loader_spark.operators.merge import append, find_or_create
 from modware_loader_spark.plans.ontology_load import ChadoOntologyLoader
 from modware_loader_spark.sources.obo import parse_obo
 
@@ -67,8 +67,8 @@ def adhoc_load(
         raise ValueError("OBO file has neither default-namespace nor ontology header")
 
     # load_namespaces: global cv + _global db + helper namespaces
-    onto._find_or_create_db(["_global", "internal"])
-    onto._find_or_create_cv([cv_name])
+    onto._find_or_create_names("db", ["_global", "internal"])
+    onto._find_or_create_names("cv", [cv_name])
     cv_id = (
         onto.tables["cv"].filter(F.col("name") == cv_name).first().cv_id
     )
@@ -93,7 +93,8 @@ def adhoc_load(
         )
         .distinct()
     )
-    db_dim = F.broadcast(onto._upsert("db", db_names, ["name"], "db_id"))
+    onto.tables["db"], _ = find_or_create(onto.tables["db"], db_names, ["name"], "db_id")
+    db_dim = F.broadcast(onto.tables["db"])
 
     st = (
         terms.join(db_dim.withColumnsRenamed({"name": "db"}), "db")
@@ -140,27 +141,18 @@ def adhoc_load(
     fresh = st.join(keyed.select("accession", "db_id"), ["accession", "db_id"], "left_anti")
     counts["inserted_terms"] = fresh.count()
     if counts["inserted_terms"]:
-        onto._insert_dbxref_rows(fresh.select("accession", "db_id"))
-        dx = onto.tables["dbxref"]
-        dx_base = onto.tables["cvterm"].agg(F.max("cvterm_id").alias("m")).first().m or 0
-        new_terms = generate_ids(
-            fresh.join(dx, ["accession", "db_id"]).select(
-                "accession", "db_id", "dbxref_id", "name", "definition",
-                "is_obsolete", "is_relationshiptype",
-            ),
-            ["db_id", "accession"],
-            id_col="cvterm_id",
-            start=dx_base + 1,
+        acc_keys = ["accession", "db_id"]
+        onto.tables["dbxref"], _ = find_or_create(
+            onto.tables["dbxref"], fresh.select(*acc_keys), acc_keys, "dbxref_id"
         )
-        onto.tables["cvterm"] = (
-            onto.tables["cvterm"]
-            .unionByName(
-                new_terms.select(
-                    "cvterm_id", "name", "definition", "is_obsolete",
-                    "is_relationshiptype", F.lit(cv_id).alias("cv_id"), "dbxref_id",
-                )
-            )
-            .localCheckpoint()
+        onto.tables["cvterm"], _ = append(
+            onto.tables["cvterm"],
+            fresh.join(onto.tables["dbxref"], acc_keys).select(
+                "accession", "db_id", "dbxref_id", "name", "definition",
+                "is_obsolete", "is_relationshiptype", F.lit(cv_id).alias("cv_id"),
+            ),
+            id_col="cvterm_id",
+            order_by=["db_id", "accession"],
         )
 
     if include_metadata:
@@ -205,16 +197,11 @@ def _refresh_metadata(
     syn = keyed_join(
         _rekey(parsed["synonyms"], cv_name, [("db", "accession")])
     ).join(scope_ids, "scope")
-    onto.tables["cvtermsynonym"] = (
-        onto.tables["cvtermsynonym"]
-        .join(exist_ids, "cvterm_id", "left_anti")
-        .unionByName(
-            syn.select(
-                "cvterm_id", F.col("syn").alias("synonym"),
-                F.col("scope_id").alias("type_id"),
-            )
-        )
-        .localCheckpoint()
+    onto.tables["cvtermsynonym"], _ = append(
+        onto.tables["cvtermsynonym"].join(exist_ids, "cvterm_id", "left_anti"),
+        syn.select(
+            "cvterm_id", F.col("syn").alias("synonym"), F.col("scope_id").alias("type_id")
+        ),
     )
     counts["synonyms"] = onto.tables["cvtermsynonym"].count()
 
@@ -224,22 +211,12 @@ def _refresh_metadata(
             [("db", "accession")],
         ).select("db", "accession", "cmmnt")
     )
-    props = onto.tables["cvtermprop"]
-    onto.tables["cvtermprop"] = (
-        props.filter(F.col("type_id") != comment_type_id)
-        .unionByName(
-            props.filter(F.col("type_id") == comment_type_id).join(
-                exist_ids, "cvterm_id", "left_anti"
-            )
-        )
-        .unionByName(
-            cm.select(
-                "cvterm_id",
-                F.lit(comment_type_id).alias("type_id"),
-                F.col("cmmnt").alias("value"),
-            )
-        )
-        .localCheckpoint()
+    comment_of = F.lit(comment_type_id).cast("long").alias("type_id")
+    onto.tables["cvtermprop"], _ = append(
+        onto.tables["cvtermprop"].join(
+            exist_ids.select("cvterm_id", comment_of), ["cvterm_id", "type_id"], "left_anti"
+        ),
+        cm.select("cvterm_id", comment_of, F.col("cmmnt").alias("value")),
     )
     counts["comments"] = cm.count()
 
@@ -265,16 +242,18 @@ def _refresh_metadata(
         .select("cvterm_id", F.col("xacc").alias("accession"), F.col("xdb_id").alias("db_id"))
         .localCheckpoint()
     )
-    onto._insert_dbxref_rows(links.select("accession", "db_id").distinct())
+    onto.tables["dbxref"], _ = find_or_create(
+        onto.tables["dbxref"], links.select("accession", "db_id"),
+        ["accession", "db_id"], "dbxref_id",
+    )
     link_rows = links.join(onto.tables["dbxref"], ["accession", "db_id"]).select(
         "cvterm_id", "dbxref_id"
     )
-    onto.tables["cvterm_dbxref"] = (
-        onto.tables["cvterm_dbxref"]
-        .join(exist_ids, "cvterm_id", "left_anti")
-        .unionByName(link_rows)
-        .distinct()
-        .localCheckpoint()
+    # set semantics: (kept ∪ link_rows).distinct()
+    onto.tables["cvterm_dbxref"], _ = find_or_create(
+        onto.tables["cvterm_dbxref"].join(exist_ids, "cvterm_id", "left_anti").distinct(),
+        link_rows,
+        ["cvterm_id", "dbxref_id"],
     )
     counts["term_xrefs"] = link_rows.count()
     return counts
@@ -310,13 +289,10 @@ def _create_relationships(
     resolved = resolve(resolved, "type_db", "type", "type_id")
     resolved = resolved.select("subject_id", "object_id", "type_id").distinct()
 
-    live = onto.tables["cvterm_relationship"]
-    fresh = resolved.join(
-        live, ["subject_id", "object_id", "type_id"], "left_anti"
-    ).localCheckpoint()
-    n_new = fresh.count()
-    onto.tables["cvterm_relationship"] = live.unionByName(fresh).localCheckpoint()
+    onto.tables["cvterm_relationship"], fresh = find_or_create(
+        onto.tables["cvterm_relationship"], resolved, ["subject_id", "object_id", "type_id"]
+    )
     return {
-        "relationships": n_new,
+        "relationships": fresh.count(),
         "skipped_relationships": n_all - resolved.count() if n_all else 0,
     }

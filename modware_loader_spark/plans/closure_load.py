@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from modware_loader_spark.operators.merge import find_or_create
 from modware_loader_spark.plans.ontology_load import ChadoOntologyLoader
 from modware_loader_spark.sources.closure_file import parse_closure_file
 
@@ -86,9 +87,8 @@ class ClosureLoader:
         counts["deleted_paths"] = live.count() - kept.count()
 
         # M6: set-semantics EXCEPT before append
-        new_paths = resolved.distinct().join(
-            kept, ["object_id", "subject_id", "type_id", "pathdistance", "cv_id"], "left_anti"
-        ).localCheckpoint()
+        self.ontology.tables["cvtermpath"], new_paths = find_or_create(
+            kept, resolved, ["object_id", "subject_id", "type_id", "pathdistance", "cv_id"]
+        )
         counts["new_paths"] = new_paths.count()
-        self.ontology.tables["cvtermpath"] = kept.unionByName(new_paths).localCheckpoint()
         return counts

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from modware_loader_spark.operators.merge import generate_ids
+from modware_loader_spark.operators.merge import append
 from modware_loader_spark.sources.gaf import parse_gaf
 
 FEATURE_CVTERM_SCHEMA = (
@@ -126,19 +126,14 @@ class GAFLoader:
                 ).cast("int"),
             )
         )
-        base_id = live.agg(F.max("feature_cvterm_id").alias("m")).first().m or 0
         # surrogate ids over the natural-key order — partition-offset
         # row_number (scale-safe M13), not a global window
-        keyed = generate_ids(
+        self.feature_cvterm, keyed = append(
+            live,
             ranked,
-            ["feature_id", "cvterm_id", "pub_id", "rank"],
             id_col="feature_cvterm_id",
-            start=base_id + 1,
+            order_by=["feature_id", "cvterm_id", "pub_id", "rank"],
         )
-        fresh = keyed.select(
-            "feature_cvterm_id", "feature_id", "cvterm_id", "pub_id", "rank", "is_not"
-        )
-        self.feature_cvterm = live.unionByName(fresh).localCheckpoint()
         # dependent props (U3's feature_cvtermprop creation), one row per
         # present prop type — unpivot via stack
         prop_cols = [
@@ -163,8 +158,8 @@ class GAFLoader:
                 )
             ).alias("p"),
         ).select("feature_cvterm_id", "p.type", "p.value")
-        self.feature_cvtermprop = self.feature_cvtermprop.unionByName(props).localCheckpoint()
-        return {"loaded": fresh.count(), "total": self.feature_cvterm.count()}
+        self.feature_cvtermprop, _ = append(self.feature_cvtermprop, props)
+        return {"loaded": keyed.count(), "total": self.feature_cvterm.count()}
 
     def load_file(self, path: str) -> dict[str, int]:
         return self.load(parse_gaf(self.spark, path))

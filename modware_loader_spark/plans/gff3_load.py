@@ -29,11 +29,10 @@ Merge statements (M1/M5/M11/M12 patterns; golden counts
 - dependent tables join through the freshly-updated live feature table
 
 Scale: dims (db, cvterm, analysis) are broadcast-sized; every fact merge
-shuffles once on uniquename. Each statement's new rows are
-localCheckpoint()ed once, counted from that materialization and unioned
-onto the live table; a live table that is already such a union is
-materialized first, so lineage stays at most two leaves deep across
-incremental loads (swap for checkpoint() on a cluster).
+shuffles once on uniquename. Each statement's new rows go onto the live
+table through ``operators.merge.append``/``find_or_create``: materialized
+once, counted from that materialization, with lineage bounded across
+incremental loads.
 """
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from modware_loader_spark.frames import local_frame
-from modware_loader_spark.operators.merge import generate_ids, new_keys
+from modware_loader_spark.operators.merge import append, find_or_create, new_keys
 from modware_loader_spark.sources.gff3 import parse_gff3
 from modware_loader_spark.sources.stitch import running_stitch
 
@@ -88,20 +87,6 @@ class ChadoGFF3Loader:
         self.dims = {
             name: local_frame(spark, [], schema) for name, schema in DIM_SCHEMAS.items()
         }
-
-    # -- dimension find-or-create (U1: batch anti-join-create, never row-at-a-time)
-    def _dim_upsert(self, dim: str, rows: DataFrame, keys: list[str], id_col: str) -> DataFrame:
-        live = self.dims[dim]
-        fresh = rows.distinct().join(live.select(*keys), keys, "left_anti")
-        base = live.agg(F.max(id_col).alias("m")).first().m or 0
-        fresh = generate_ids(fresh, keys, id_col=id_col, start=base + 1)
-        self.dims[dim] = _append(live, fresh.select(live.columns).localCheckpoint())
-        return self.dims[dim]
-
-    def _cvterm_ids(self, names_df: DataFrame) -> DataFrame:
-        """names_df(name, cv) → (name, cv, cvterm_id), creating as needed."""
-        dim = self._dim_upsert("cvterm", names_df, ["cv", "name"], "cvterm_id")
-        return F.broadcast(dim)
 
     def load_file(self, path: str) -> dict[str, int]:
         features, sequences = parse_gff3(self.spark, path)
@@ -276,12 +261,16 @@ class ChadoGFF3Loader:
             st["feature_dbxref"].select(F.col("db").alias("name")).distinct()
             .unionByName(local_frame(self.spark, ["GFF_source", "local", "internal"], "name string"))
         )
-        db_dim = F.broadcast(self._dim_upsert("db", dbs.distinct(), ["name"], "db_id"))
+        self.dims["db"], _ = find_or_create(self.dims["db"], dbs.distinct(), ["name"], "db_id")
+        db_dim = F.broadcast(self.dims["db"])
         # source dbxrefs are find-or-created into live dbxref at staging time
         src_rows = sources.join(
             db_dim.filter(F.col("name") == "GFF_source").select("db_id"), how="cross"
         )
-        self._insert_dbxrefs(src_rows.select("accession", "db_id"))
+        self.tables["dbxref"], _ = find_or_create(
+            self.tables["dbxref"], src_rows.select("db_id", "accession"),
+            ["db_id", "accession"], "dbxref_id",
+        )
 
         type_terms = (
             st["feature"].select(F.col("type").alias("name")).distinct()
@@ -299,7 +288,10 @@ class ChadoGFF3Loader:
                 .withColumn("cv", F.lit("feature_property"))
             )
         )
-        cvterm_dim = self._cvterm_ids(type_terms)
+        self.dims["cvterm"], _ = find_or_create(
+            self.dims["cvterm"], type_terms, ["cv", "name"], "cvterm_id"
+        )
+        cvterm_dim = F.broadcast(self.dims["cvterm"])
         seq_terms = cvterm_dim.filter(F.col("cv") == "sequence").select(
             F.col("name").alias("type"), F.col("cvterm_id").alias("type_id")
         )
@@ -311,16 +303,15 @@ class ChadoGFF3Loader:
             .first()
             .cvterm_id
         )
-        analysis_dim = F.broadcast(
-            self._dim_upsert(
-                "analysis",
-                st["analysisfeature"].select("program").distinct().withColumn(
-                    "programversion", F.lit("1.0")
-                ),
-                ["program"],
-                "analysis_id",
-            )
+        self.dims["analysis"], _ = find_or_create(
+            self.dims["analysis"],
+            st["analysisfeature"].select("program").distinct().withColumn(
+                "programversion", F.lit("1.0")
+            ),
+            ["program"],
+            "analysis_id",
         )
+        analysis_dim = F.broadcast(self.dims["analysis"])
 
         # [insert_temp_new_feature_ids] — M1 anti-join on uniquename
         new_ids = new_keys(
@@ -334,28 +325,29 @@ class ChadoGFF3Loader:
         src_xref = F.broadcast(
             self.dims_dbxref_for_sources(db_dim)
         )
-        base = feature.agg(F.max("feature_id").alias("m")).first().m or 0
         new_feature = (
             st["feature"]
             .join(new_ids.select("id"), "id")
             .join(F.broadcast(seq_terms), "type", "left")
             .join(src_xref, st["feature"].source == src_xref.src_accession, "left")
             .join(st["featureseq"], "id", "left")
+            .select(
+                "ord",
+                F.col("id").alias("uniquename"),
+                "name",
+                "type_id",
+                F.lit(self.organism_id).alias("organism_id"),
+                F.col("src_dbxref_id").alias("dbxref_id"),
+                F.col("residue").alias("residues"),
+                F.col("md5").alias("md5checksum"),
+                F.col("seqlen"),
+            )
         )
-        new_feature = generate_ids(new_feature, ["ord", "id"], id_col="feature_id", start=base + 1)
-        new_feature = new_feature.select(
-            "feature_id",
-            F.col("id").alias("uniquename"),
-            "name",
-            "type_id",
-            F.lit(self.organism_id).alias("organism_id"),
-            F.col("src_dbxref_id").alias("dbxref_id"),
-            F.col("residue").alias("residues"),
-            F.col("md5").alias("md5checksum"),
-            F.col("seqlen"),
+        feature, new_feature = append(
+            feature, new_feature, id_col="feature_id", order_by=["ord", "uniquename"]
         )
-        counts["new_feature"] = self._add("feature", new_feature)
-        feature = self.tables["feature"]
+        self.tables["feature"] = feature
+        counts["new_feature"] = new_feature.count()
         fkey = feature.select("feature_id", "uniquename")
 
         # [insert_new_featureloc] (+ target variant) — M5 key resolution
@@ -380,11 +372,13 @@ class ChadoGFF3Loader:
                 )
             )
 
-        new_floc = resolve_loc(st["featureloc"], F.lit(0)).localCheckpoint()
-        new_floc_t = resolve_loc(st["featureloc_target"], F.col("rank")).localCheckpoint()
+        self.tables["featureloc"], new_floc, new_floc_t = append(
+            self.tables["featureloc"],
+            resolve_loc(st["featureloc"], F.lit(0)),
+            resolve_loc(st["featureloc_target"], F.col("rank")),
+        )
         counts["new_featureloc"] = new_floc.count()
         counts["new_featureloc_target"] = new_floc_t.count()
-        self.tables["featureloc"] = _append(self.tables["featureloc"], new_floc, new_floc_t)
 
         # [insert_new_analysisfeature]
         new_af = (
@@ -394,7 +388,10 @@ class ChadoGFF3Loader:
             .join(analysis_dim.select("program", "analysis_id"), "program")
             .select("feature_id", F.col("score").alias("significance"), "analysis_id")
         )
-        counts["new_analysisfeature"] = self._add("analysisfeature", new_af)
+        self.tables["analysisfeature"], new_af = append(
+            self.tables["analysisfeature"], new_af
+        )
+        counts["new_analysisfeature"] = new_af.count()
 
         # [insert_new_synonym] — M12 DISTINCT + anti-join on (name, type_id)
         syn_cand = (
@@ -405,13 +402,11 @@ class ChadoGFF3Loader:
         )
         syn_new = syn_cand.join(
             self.tables["synonym"].select("name", "type_id"), ["name", "type_id"], "left_anti"
+        ).withColumn("synonym_sgml", F.col("name"))
+        self.tables["synonym"], syn_new = append(
+            self.tables["synonym"], syn_new, id_col="synonym_id", order_by=["name"]
         )
-        syn_base = self.tables["synonym"].agg(F.max("synonym_id").alias("m")).first().m or 0
-        syn_new = generate_ids(syn_new, ["name"], id_col="synonym_id", start=syn_base + 1)
-        syn_new = syn_new.select(
-            "synonym_id", "name", "type_id", F.col("name").alias("synonym_sgml")
-        )
-        counts["new_synonym"] = self._add("synonym", syn_new)
+        counts["new_synonym"] = syn_new.count()
 
         # [insert_new_feature_synonym] — join on alias = synonym.name only
         new_fs = (
@@ -424,7 +419,10 @@ class ChadoGFF3Loader:
             .join(fkey.withColumnsRenamed({"uniquename": "id"}), "id")
             .select("feature_id", "synonym_id", F.lit(self.synonym_pub_id).alias("pub_id"))
         )
-        counts["new_feature_synonym"] = self._add("feature_synonym", new_fs)
+        self.tables["feature_synonym"], new_fs = append(
+            self.tables["feature_synonym"], new_fs
+        )
+        counts["new_feature_synonym"] = new_fs.count()
 
         # [insert_new_feature_relationship] — subject must be new, parent
         # resolved against the post-insert live feature table
@@ -449,7 +447,10 @@ class ChadoGFF3Loader:
             .join(rel_terms, "rel_type")
             .select("object_id", "subject_id", F.col("rel_type_id").alias("type_id"))
         )
-        counts["new_feature_relationship"] = self._add("feature_relationship", new_fr)
+        self.tables["feature_relationship"], new_fr = append(
+            self.tables["feature_relationship"], new_fr
+        )
+        counts["new_feature_relationship"] = new_fr.count()
 
         # [insert_new_dbxref] — M11 window dedup by accession
         fd = st["feature_dbxref"].join(
@@ -465,7 +466,9 @@ class ChadoGFF3Loader:
             .localCheckpoint()
         )
         counts["new_dbxref"] = dx_new.count()
-        self._insert_dbxrefs(dx_new)
+        self.tables["dbxref"], _ = find_or_create(
+            self.tables["dbxref"], dx_new, ["db_id", "accession"], "dbxref_id"
+        )
 
         # [insert_new_feature_dbxref]
         new_fd = (
@@ -478,7 +481,10 @@ class ChadoGFF3Loader:
             .join(fkey.withColumnsRenamed({"uniquename": "id"}), "id")
             .select("dbxref_id", "feature_id")
         )
-        counts["new_feature_dbxref"] = self._add("feature_dbxref", new_fd)
+        self.tables["feature_dbxref"], new_fd = append(
+            self.tables["feature_dbxref"], new_fd
+        )
+        counts["new_feature_dbxref"] = new_fd.count()
 
         # [insert_new_featureprop]
         new_fp = (
@@ -489,15 +495,9 @@ class ChadoGFF3Loader:
             .select("feature_id", F.col("property").alias("value"),
                     F.col("prop_type_id").alias("type_id"))
         )
-        counts["new_featureprop"] = self._add("featureprop", new_fp)
+        self.tables["featureprop"], new_fp = append(self.tables["featureprop"], new_fp)
+        counts["new_featureprop"] = new_fp.count()
         return counts
-
-    def _add(self, table: str, new: DataFrame) -> int:
-        """Materialize one statement's new rows once, append them to the
-        live ``table`` and return their count."""
-        new = new.localCheckpoint()
-        self.tables[table] = _append(self.tables[table], new)
-        return new.count()
 
     # ------------------------------------------------------------------
     def dims_dbxref_for_sources(self, db_dim: DataFrame) -> DataFrame:
@@ -510,27 +510,3 @@ class ChadoGFF3Loader:
                 F.col("dbxref_id").alias("src_dbxref_id"),
             )
         )
-
-    def _insert_dbxrefs(self, rows: DataFrame) -> None:
-        """Batch find-or-create into the live dbxref table (U1)."""
-        live = self.tables["dbxref"]
-        fresh = rows.distinct().join(
-            live.select("accession", "db_id"), ["accession", "db_id"], "left_anti"
-        )
-        base = live.agg(F.max("dbxref_id").alias("m")).first().m or 0
-        fresh = generate_ids(fresh, ["db_id", "accession"], id_col="dbxref_id", start=base + 1)
-        self.tables["dbxref"] = _append(
-            live, fresh.select("dbxref_id", "accession", "db_id").localCheckpoint()
-        )
-
-
-def _append(live: DataFrame, *new: DataFrame) -> DataFrame:
-    """``live`` ∪ already-materialized ``new`` rows, without re-running the
-    plans that produced them. A ``live`` that is itself such a union (from
-    an earlier statement or load) is materialized first, so a live table
-    is at most one materialized or scanned leaf plus this statement's."""
-    if live._jdf.queryExecution().logical().nodeName() == "Union":
-        live = live.localCheckpoint()
-    for df in new:
-        live = live.unionByName(df)
-    return live

@@ -24,8 +24,10 @@ The version gate (OBO header date vs stored metadata,
 
 Scale: dims (db, cv, scope terms) broadcast; cvterm/dbxref merges shuffle
 on (accession, db_id); relationship resolution is three broadcast-able
-joins against the cvterm⋈dbxref key map. Live tables localCheckpoint per
-load.
+joins against the cvterm⋈dbxref key map. Inserts go through
+``operators.merge.append``/``find_or_create`` (new rows materialized once,
+live-table lineage bounded); deletes and updates localCheckpoint the
+table they rewrite.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modware_loader_spark.operators.merge import generate_ids
+from modware_loader_spark.operators.merge import append, find_or_create
 from modware_loader_spark.sources.obo import parse_obo
 
 TABLE_SCHEMAS = {
@@ -55,6 +57,30 @@ TABLE_SCHEMAS = {
 
 OBO_DATE_FORMAT = "%d:%m:%Y %H:%M"
 
+# Chado declares ON DELETE CASCADE on every foreign key to cvterm: child
+# table → its cvterm_id columns
+CVTERM_CHILD_FKS = {
+    "cvtermsynonym": ("cvterm_id",),
+    "cvtermprop": ("cvterm_id",),
+    "cvterm_dbxref": ("cvterm_id",),
+    "cvterm_relationship": ("subject_id", "object_id", "type_id"),
+    "cvtermpath": ("subject_id", "object_id", "type_id"),
+}
+
+
+def _cascade_cvterm_delete(tables: dict[str, DataFrame], cvterm_ids: DataFrame) -> None:
+    """Emulate the cascade of a cvterm DELETE: the reference's single
+    DELETE implicitly removes dependents, so without this deleted terms
+    leave dangling child rows. Drops every row of the present child tables
+    that references one of ``cvterm_ids``."""
+    for child, fks in CVTERM_CHILD_FKS.items():
+        if child not in tables:
+            continue
+        out = tables[child]
+        for fk in fks:
+            out = out.join(cvterm_ids.withColumnRenamed("cvterm_id", fk), fk, "left_anti")
+        tables[child] = out.localCheckpoint()
+
 
 class ChadoOntologyLoader:
     """Stateful obo2chado-equivalent loader over an in-memory catalog."""
@@ -70,9 +96,9 @@ class ChadoOntologyLoader:
     # -- namespace bootstrap (Ontology.pm:295-305) + the is_a relationship
     # term the reference test preset fixture (cvprop.tar.bz2) provides
     def _bootstrap(self) -> None:
-        self._find_or_create_db(["internal"])
-        self._find_or_create_cv(
-            ["cvterm_property_type", "synonym_type", "relationship", "cv_property"]
+        self._find_or_create_names("db", ["internal"])
+        self._find_or_create_names(
+            "cv", ["cvterm_property_type", "synonym_type", "relationship", "cv_property"]
         )
         self._find_or_create_terms(
             [("date", "cv_property"), ("data-version", "cv_property"),
@@ -89,13 +115,13 @@ class ChadoOntologyLoader:
         # 'is_a' exists as a relationship-type cvterm reachable through BOTH
         # the internal-db dbxref (obo2chado's normalize of bare 'is_a') and
         # the OBO_REL-db dbxref (owltools closure files say 'OBO_REL:is_a').
-        self._find_or_create_db(["OBO_REL"])
+        self._find_or_create_names("db", ["OBO_REL"])
         db = self.tables["db"]
         internal = db.filter(F.col("name") == "internal").first().db_id
         obo_rel = db.filter(F.col("name") == "OBO_REL").first().db_id
         rel_cv = self.tables["cv"].filter(F.col("name") == "relationship").first().cv_id
-        self._upsert(
-            "dbxref",
+        self.tables["dbxref"], _ = find_or_create(
+            self.tables["dbxref"],
             self.spark.createDataFrame(
                 [("is_a", internal), ("is_a", obo_rel)], "accession string, db_id long"
             ),
@@ -113,35 +139,24 @@ class ChadoOntologyLoader:
             F.lit(rel_cv).alias("cv_id"),
             "dbxref_id",
         )
-        self._upsert("cvterm", cand, ["name", "cv_id", "dbxref_id"], "cvterm_id")
-
-    def _upsert(self, table: str, rows: DataFrame, keys: list[str], id_col: str) -> DataFrame:
-        live = self.tables[table]
-        fresh = rows.distinct().join(live.select(*keys), keys, "left_anti")
-        base = live.agg(F.max(id_col).alias("m")).first().m or 0
-        fresh = generate_ids(fresh, keys, id_col=id_col, start=base + 1)
-        self.tables[table] = live.unionByName(fresh.select(live.columns)).localCheckpoint()
-        return self.tables[table]
-
-    def _find_or_create_db(self, names: list[str]) -> DataFrame:
-        return self._upsert(
-            "db", self.spark.createDataFrame([(n,) for n in names], "name string"),
-            ["name"], "db_id",
+        self.tables["cvterm"], _ = find_or_create(
+            self.tables["cvterm"], cand, ["name", "cv_id", "dbxref_id"], "cvterm_id"
         )
 
-    def _find_or_create_cv(self, names: list[str]) -> DataFrame:
-        return self._upsert(
-            "cv", self.spark.createDataFrame([(n,) for n in names], "name string"),
-            ["name"], "cv_id",
+    def _find_or_create_names(self, table: str, names: list[str]) -> None:
+        """db or cv rows by name."""
+        rows = self.spark.createDataFrame([(n,) for n in names], "name string")
+        self.tables[table], _ = find_or_create(
+            self.tables[table], rows, ["name"], f"{table}_id"
         )
 
     def _find_or_create_terms(self, name_cv: list[tuple[str, str]]) -> None:
         """find_or_create_cvterm_namespace: internal-db dbxref + cvterm."""
         rows = self.spark.createDataFrame(name_cv, "name string, cv string")
-        self._find_or_create_cv(sorted({cv for _, cv in name_cv}))
+        self._find_or_create_names("cv", sorted({cv for _, cv in name_cv}))
         internal = self.tables["db"].filter(F.col("name") == "internal").first().db_id
-        self._upsert(
-            "dbxref",
+        self.tables["dbxref"], _ = find_or_create(
+            self.tables["dbxref"],
             rows.select(F.col("name").alias("accession"), F.lit(internal).alias("db_id")),
             ["accession", "db_id"],
             "dbxref_id",
@@ -162,7 +177,9 @@ class ChadoOntologyLoader:
                 "dbxref_id",
             )
         )
-        self._upsert("cvterm", cand, ["name", "cv_id"], "cvterm_id")
+        self.tables["cvterm"], _ = find_or_create(
+            self.tables["cvterm"], cand, ["name", "cv_id"], "cvterm_id"
+        )
 
     def _scope_term_ids(self) -> DataFrame:
         syn_cv = self.tables["cv"].filter(F.col("name") == "synonym_type")
@@ -191,7 +208,7 @@ class ChadoOntologyLoader:
         """store_metadata (Ontology.pm:241-293): per-namespace cvprop rows
         for date / data-version / saved-by / remark (SCD-1 upsert)."""
         ns = header.get("default-namespace") or header.get("ontology")
-        self._find_or_create_cv([ns])
+        self._find_or_create_names("cv", [ns])
         cv_id = self.tables["cv"].filter(F.col("name") == ns).first().cv_id
         prop_cv = self.tables["cv"].filter(F.col("name") == "cv_property").first().cv_id
         types = {
@@ -209,7 +226,7 @@ class ChadoOntologyLoader:
         kept = self.tables["cvprop"].join(
             staged.select("cv_id", "type_id"), ["cv_id", "type_id"], "left_anti"
         )
-        self.tables["cvprop"] = kept.unionByName(staged).localCheckpoint()
+        self.tables["cvprop"], _ = append(kept, staged)
         self.metadata[f"{ns}:date"] = header.get("date", "")
 
     def is_newer(self, header: dict) -> bool:
@@ -247,15 +264,14 @@ class ChadoOntologyLoader:
             .unionByName(alt_ids.select(F.col("alt_db").alias("name")))
             .distinct()
         )
-        db_dim = F.broadcast(self._upsert("db", db_names, ["name"], "db_id"))
-        cv_dim = F.broadcast(
-            self._upsert("cv", terms.select(F.col("cv").alias("name")).distinct(),
-                         ["name"], "cv_id")
+        t = self.tables
+        t["db"], _ = find_or_create(t["db"], db_names, ["name"], "db_id")
+        t["cv"], _ = find_or_create(
+            t["cv"], terms.select(F.col("cv").alias("name")).distinct(), ["name"], "cv_id"
         )
+        db_dim, cv_dim = F.broadcast(t["db"]), F.broadcast(t["cv"])
         scope_ids = self._scope_term_ids()
-        comment_type_id = (
-            self.tables["cvterm"].filter(F.col("name") == "comment").first().cvterm_id
-        )
+        comment_type_id = t["cvterm"].filter(F.col("name") == "comment").first().cvterm_id
 
         # staging with resolved surrogate dims (cv_id, db_id)
         st = (
@@ -286,7 +302,38 @@ class ChadoOntologyLoader:
             "accession", "db_id", F.col("cmmnt").alias("comment")
         )
 
-        cvterm, dbxref = self.tables["cvterm"], self.tables["dbxref"]
+        def add_children(terms: DataFrame, alt: DataFrame) -> None:
+            """Synonyms, comment and alt_id links of ``terms`` (cvterm_id,
+            accession); ``alt`` is their already-joined st_alt rows."""
+            t["cvtermsynonym"], _ = append(
+                t["cvtermsynonym"],
+                st_syn.join(terms, "accession").select(
+                    "cvterm_id", F.col("syn").alias("synonym"),
+                    F.col("syn_scope_id").alias("type_id"),
+                ),
+            )
+            t["cvtermprop"], _ = append(
+                t["cvtermprop"],
+                st_comment.join(terms, "accession").select(
+                    "cvterm_id", F.lit(comment_type_id).alias("type_id"),
+                    F.col("comment").alias("value"),
+                ),
+            )
+            alt_acc = alt.select(
+                F.col("alt_id").alias("accession"), F.col("alt_db_id").alias("db_id")
+            )
+            t["dbxref"], _ = find_or_create(
+                t["dbxref"], alt_acc, ["accession", "db_id"], "dbxref_id"
+            )
+            alt_dx = t["dbxref"].withColumnsRenamed(
+                {"accession": "alt_id", "db_id": "alt_db_id"}
+            )
+            t["cvterm_dbxref"], _ = append(
+                t["cvterm_dbxref"],
+                alt.join(alt_dx, ["alt_id", "alt_db_id"]).select("cvterm_id", "dbxref_id"),
+            )
+
+        cvterm, dbxref = t["cvterm"], t["dbxref"]
         keyed = cvterm.join(dbxref, "dbxref_id").select(
             "cvterm_id", "dbxref_id", "accession", "db_id", "cv_id", "name"
         )
@@ -302,40 +349,15 @@ class ChadoOntologyLoader:
             .localCheckpoint()
         )
         counts["deleted_terms"] = term_delete.count()
-        self.tables["cvterm"] = cvterm.join(term_delete.select("cvterm_id"), "cvterm_id", "left_anti")
-        self.tables["dbxref"] = dbxref.join(term_delete.select("dbxref_id"), "dbxref_id", "left_anti")
-        # Chado declares ON DELETE CASCADE on every cvterm/dbxref FK — the
-        # reference's single DELETE implicitly removes dependents; emulate
-        # it or pruned terms leave dangling child rows.
-        del_ids = term_delete.select("cvterm_id")
-        self.tables["cvtermsynonym"] = self.tables["cvtermsynonym"].join(
-            del_ids, "cvterm_id", "left_anti"
+        t["cvterm"] = cvterm.join(term_delete.select("cvterm_id"), "cvterm_id", "left_anti")
+        t["dbxref"] = dbxref.join(term_delete.select("dbxref_id"), "dbxref_id", "left_anti")
+        _cascade_cvterm_delete(t, term_delete.select("cvterm_id"))
+        t["cvterm_dbxref"] = t["cvterm_dbxref"].join(
+            term_delete.select("dbxref_id"), "dbxref_id", "left_anti"
         )
-        self.tables["cvtermprop"] = self.tables["cvtermprop"].join(
-            del_ids, "cvterm_id", "left_anti"
-        )
-        rel = self.tables["cvterm_relationship"]
-        for fk in ("subject_id", "object_id", "type_id"):
-            rel = rel.join(
-                del_ids.withColumnRenamed("cvterm_id", fk), fk, "left_anti"
-            )
-        self.tables["cvterm_relationship"] = rel
-        self.tables["cvterm_dbxref"] = (
-            self.tables["cvterm_dbxref"]
-            .join(del_ids, "cvterm_id", "left_anti")
-            .join(term_delete.select("dbxref_id"), "dbxref_id", "left_anti")
-        )
-        if "cvtermpath" in self.tables:
-            path = self.tables["cvtermpath"]
-            for fk in ("subject_id", "object_id", "type_id"):
-                if fk in path.columns:
-                    path = path.join(
-                        del_ids.withColumnRenamed("cvterm_id", fk), fk, "left_anti"
-                    )
-            self.tables["cvtermpath"] = path
 
         # 2. existing terms (M2) + SCD-1 update (M8)
-        keyed = self.tables["cvterm"].join(self.tables["dbxref"], "dbxref_id").select(
+        keyed = t["cvterm"].join(t["dbxref"], "dbxref_id").select(
             "cvterm_id", "accession", "db_id"
         )
         existing = keyed.join(st, ["accession", "db_id"]).select(
@@ -348,8 +370,8 @@ class ChadoOntologyLoader:
             F.col("definition").alias("__def"),
             F.col("is_obsolete").alias("__obs"),
         )
-        self.tables["cvterm"] = (
-            self.tables["cvterm"]
+        t["cvterm"] = (
+            t["cvterm"]
             .join(upd, "cvterm_id", "left")
             .select(
                 "cvterm_id",
@@ -365,36 +387,16 @@ class ChadoOntologyLoader:
         exist_ids = existing.select("cvterm_id", "accession")
 
         # 3. child-set refresh (M9): synonyms, comments, alt_ids of existing
-        self.tables["cvtermsynonym"] = (
-            self.tables["cvtermsynonym"]
-            .join(exist_ids.select("cvterm_id"), "cvterm_id", "left_anti")
-            .unionByName(
-                st_syn.join(exist_ids, "accession").select(
-                    "cvterm_id", F.col("syn").alias("synonym"),
-                    F.col("syn_scope_id").alias("type_id"),
-                )
-            )
-            .localCheckpoint()
+        t["cvtermsynonym"] = t["cvtermsynonym"].join(
+            exist_ids.select("cvterm_id"), "cvterm_id", "left_anti"
         )
-        self.tables["cvtermprop"] = (
-            self.tables["cvtermprop"]
-            .filter(F.col("type_id") != comment_type_id)
-            .unionByName(
-                self.tables["cvtermprop"]
-                .filter(F.col("type_id") == comment_type_id)
-                .join(exist_ids.select("cvterm_id"), "cvterm_id", "left_anti")
-            )
-            .unionByName(
-                st_comment.join(exist_ids, "accession").select(
-                    "cvterm_id", F.lit(comment_type_id).alias("type_id"),
-                    F.col("comment").alias("value"),
-                )
-            )
-            .localCheckpoint()
+        comment_of = F.lit(comment_type_id).cast("long").alias("type_id")
+        t["cvtermprop"] = t["cvtermprop"].join(
+            exist_ids.select("cvterm_id", comment_of), ["cvterm_id", "type_id"], "left_anti"
         )
         # alt ids of existing terms: delete matching dbxrefs, reinsert
         upd_alt = st_alt.join(exist_ids, "accession").localCheckpoint()
-        self.tables["dbxref"] = self.tables["dbxref"].join(
+        t["dbxref"] = t["dbxref"].join(
             upd_alt.select(F.col("alt_id").alias("accession"), F.col("alt_db_id").alias("db_id")),
             ["accession", "db_id"],
             "left_anti",
@@ -402,88 +404,38 @@ class ChadoOntologyLoader:
         # cascade: drop link rows whose dbxref row was just deleted —
         # without this, re-minted alt dbxref_ids leave the old links
         # dangling and duplicate links accumulate on every reload
-        self.tables["cvterm_dbxref"] = self.tables["cvterm_dbxref"].join(
-            self.tables["dbxref"].select("dbxref_id"), "dbxref_id", "left_semi"
+        t["cvterm_dbxref"] = t["cvterm_dbxref"].join(
+            t["dbxref"].select("dbxref_id"), "dbxref_id", "left_semi"
         )
-        self._insert_dbxref_rows(
-            upd_alt.select(F.col("alt_id").alias("accession"), F.col("alt_db_id").alias("db_id"))
-        )
-        alt_dx = self.tables["dbxref"].withColumnsRenamed(
-            {"accession": "alt_id", "db_id": "alt_db_id"}
-        )
-        self.tables["cvterm_dbxref"] = (
-            self.tables["cvterm_dbxref"]
-            .unionByName(
-                upd_alt.join(alt_dx, ["alt_id", "alt_db_id"]).select("cvterm_id", "dbxref_id")
-            )
-            .localCheckpoint()
-        )
+        add_children(exist_ids, upd_alt)
 
         # 4. create new accessions (M1) → dbxref → cvterm → child sets
-        new_acc = (
-            st.join(
-                self.tables["dbxref"].select("accession", "db_id"),
-                ["accession", "db_id"],
-                "left_anti",
-            )
-            .localCheckpoint()
-        )
+        acc_keys = ["accession", "db_id"]
+        new_acc = st.join(t["dbxref"].select(*acc_keys), acc_keys, "left_anti")
+        new_acc = new_acc.localCheckpoint()
         counts["new_dbxrefs"] = new_acc.count()
-        self._insert_dbxref_rows(new_acc.select("accession", "db_id"))
+        t["dbxref"], _ = find_or_create(
+            t["dbxref"], new_acc.select(*acc_keys), acc_keys, "dbxref_id"
+        )
         temp_accession = new_acc.select("accession").distinct().localCheckpoint()
-
-        dx_now = self.tables["dbxref"]
         new_terms = (
             st.join(temp_accession, "accession")
-            .join(dx_now, ["accession", "db_id"])
+            .join(t["dbxref"], ["accession", "db_id"])
             .select(
                 "ord", "accession", "name", "definition", "is_obsolete",
                 "is_relationshiptype", "cv_id", "dbxref_id",
             )
         )
-        base = self.tables["cvterm"].agg(F.max("cvterm_id").alias("m")).first().m or 0
-        new_terms = generate_ids(new_terms, ["ord", "accession"], id_col="cvterm_id", start=base + 1)
+        t["cvterm"], new_terms = append(
+            t["cvterm"], new_terms, id_col="cvterm_id", order_by=["ord", "accession"]
+        )
         counts["new_cvterms"] = new_terms.count()
-        self.tables["cvterm"] = (
-            self.tables["cvterm"]
-            .unionByName(
-                new_terms.select(
-                    "cvterm_id", "name", "definition", "is_obsolete",
-                    "is_relationshiptype", "cv_id", "dbxref_id",
-                )
-            )
-            .localCheckpoint()
-        )
-
         new_keyed = new_terms.select("cvterm_id", "accession")
-        self.tables["cvtermsynonym"] = self.tables["cvtermsynonym"].unionByName(
-            st_syn.join(new_keyed, "accession").select(
-                "cvterm_id", F.col("syn").alias("synonym"),
-                F.col("syn_scope_id").alias("type_id"),
-            )
-        ).localCheckpoint()
-        self.tables["cvtermprop"] = self.tables["cvtermprop"].unionByName(
-            st_comment.join(new_keyed, "accession").select(
-                "cvterm_id", F.lit(comment_type_id).alias("type_id"),
-                F.col("comment").alias("value"),
-            )
-        ).localCheckpoint()
-        new_alt = st_alt.join(new_keyed, "accession").localCheckpoint()
-        self._insert_dbxref_rows(
-            new_alt.select(F.col("alt_id").alias("accession"), F.col("alt_db_id").alias("db_id"))
-        )
-        alt_dx = self.tables["dbxref"].withColumnsRenamed(
-            {"accession": "alt_id", "db_id": "alt_db_id"}
-        )
-        self.tables["cvterm_dbxref"] = self.tables["cvterm_dbxref"].unionByName(
-            new_alt.join(alt_dx, ["alt_id", "alt_db_id"]).select("cvterm_id", "dbxref_id")
-        ).localCheckpoint()
+        add_children(new_keyed, st_alt.join(new_keyed, "accession").localCheckpoint())
 
         # 5. relationships: triple key resolution (M5) + EXCEPT (M6)
-        keymap = (
-            self.tables["cvterm"]
-            .join(self.tables["dbxref"], "dbxref_id")
-            .select("cvterm_id", "accession", "db_id")
+        keymap = t["cvterm"].join(t["dbxref"], "dbxref_id").select(
+            "cvterm_id", "accession", "db_id"
         )
         resolved = (
             rels.join(
@@ -512,17 +464,11 @@ class ChadoOntologyLoader:
             )
             .select("object_id", "subject_id", "type_id")
         )
-        new_rels = resolved.distinct().join(
-            self.tables["cvterm_relationship"], ["object_id", "subject_id", "type_id"], "left_anti"
-        ).localCheckpoint()
-        counts["new_relationships"] = new_rels.count()
-        self.tables["cvterm_relationship"] = (
-            self.tables["cvterm_relationship"].unionByName(new_rels).localCheckpoint()
+        t["cvterm_relationship"], new_rels = find_or_create(
+            t["cvterm_relationship"], resolved, ["object_id", "subject_id", "type_id"]
         )
+        counts["new_relationships"] = new_rels.count()
         return counts
-
-    def _insert_dbxref_rows(self, rows: DataFrame) -> None:
-        self._upsert("dbxref", rows, ["accession", "db_id"], "dbxref_id")
 
     # -- query helpers for tests / exports ------------------------------
     def cvterm_count(self, cv: str, obsolete: int = 0) -> int:
@@ -595,26 +541,7 @@ def drop_ontology(
     n_terms = doomed_ids.count()
 
     t["cvterm"] = t["cvterm"].join(doomed_ids, "cvterm_id", "left_anti").localCheckpoint()
-    for child, fks in (
-        ("cvtermsynonym", ["cvterm_id"]),
-        ("cvtermprop", ["cvterm_id"]),
-        ("cvterm_dbxref", ["cvterm_id"]),
-        ("cvterm_relationship", ["subject_id", "object_id", "type_id"]),
-    ):
-        out = t[child]
-        for fk in fks:
-            out = out.join(
-                doomed_ids.withColumnRenamed("cvterm_id", fk), fk, "left_anti"
-            )
-        t[child] = out.localCheckpoint()
-    if "cvtermpath" in t:
-        path = t["cvtermpath"]
-        for fk in ("subject_id", "object_id", "type_id"):
-            if fk in path.columns:
-                path = path.join(
-                    doomed_ids.withColumnRenamed("cvterm_id", fk), fk, "left_anti"
-                )
-        t["cvtermpath"] = path.localCheckpoint()
+    _cascade_cvterm_delete(t, doomed_ids)
 
     # delete_dbxrefs: sweep dbxrefs referenced by no remaining cvterm or
     # cvterm_dbxref link

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from modware_loader_spark.operators.merge import generate_ids
+from modware_loader_spark.operators.merge import append, find_or_create, generate_ids
 
 SCHEMAS = {
     "stock": (
@@ -99,27 +99,19 @@ class StockImporter:
         self._existing: DataFrame | None = None
 
     # -- find-or-create dims (broadcast-sized, anti-join-create) ----------
-    def _upsert(self, table: str, rows: DataFrame, keys: list[str], id_col: str) -> DataFrame:
-        live = self.tables[table]
-        fresh = rows.distinct().join(live.select(*keys), keys, "left_anti")
-        base = live.agg(F.max(id_col).alias("m")).first().m or 0
-        fresh = generate_ids(fresh, keys, id_col=id_col, start=base + 1)
-        self.tables[table] = live.unionByName(
-            fresh.select(live.columns)
-        ).localCheckpoint()
-        return self.tables[table]
-
     def cvterm_ids(self, cv: str, create: list[str] | None = None) -> DataFrame:
         """(name, cvterm_id) within one cv, creating listed names."""
-        cvrow = self._upsert(
-            "cv", self.spark.createDataFrame([(cv,)], "name string"), ["name"], "cv_id"
-        ).filter(F.col("name") == cv).first()
+        t = self.tables
+        t["cv"], _ = find_or_create(
+            t["cv"], self.spark.createDataFrame([(cv,)], "name string"), ["name"], "cv_id"
+        )
+        cvrow = t["cv"].filter(F.col("name") == cv).first()
         if create:
             rows = self.spark.createDataFrame(
                 [(n, cvrow.cv_id) for n in create], "name string, cv_id long"
             )
-            self._upsert("cvterm", rows, ["name", "cv_id"], "cvterm_id")
-        return self.tables["cvterm"].filter(F.col("cv_id") == cvrow.cv_id).select(
+            t["cvterm"], _ = find_or_create(t["cvterm"], rows, ["name", "cv_id"], "cvterm_id")
+        return t["cvterm"].filter(F.col("cv_id") == cvrow.cv_id).select(
             "name", "cvterm_id"
         )
 
@@ -130,7 +122,9 @@ class StockImporter:
 
     def _pub_ids(self, pmids: DataFrame) -> DataFrame:
         """(uniquename, pub_id) find-or-create by PMID."""
-        self._upsert("pub", pmids.select("uniquename"), ["uniquename"], "pub_id")
+        self.tables["pub"], _ = find_or_create(
+            self.tables["pub"], pmids.select("uniquename"), ["uniquename"], "pub_id"
+        )
         return self.tables["pub"]
 
     def _stock_ids(self) -> DataFrame:
@@ -149,17 +143,17 @@ class StockImporter:
         species_col: str | None = "species",
         descr_col: str | None = "strain_descr",
     ) -> dict[str, int]:
+        t = self.tables
         type_id = self._cvterm_id(stock_type, self.cv_namespace)
-        coll = self._upsert(
-            "stockcollection",
-            self.spark.createDataFrame(
-                [(collection, type_id)], "name string, type_id long"
-            ),
+        t["stockcollection"], _ = find_or_create(
+            t["stockcollection"],
+            self.spark.createDataFrame([(collection, type_id)], "name string, type_id long"),
             ["name"],
             "stockcollection_id",
-        ).filter(F.col("name") == collection).first()
+        )
+        coll = t["stockcollection"].filter(F.col("name") == collection).first()
 
-        live = self.tables["stock"]
+        live = t["stock"]
         keyed = rows.withColumnsRenamed({id_col: "uniquename"})
         existing = keyed.join(
             live.select("uniquename", "stock_id"), "uniquename"
@@ -168,43 +162,37 @@ class StockImporter:
         fresh = keyed.join(live.select("uniquename"), "uniquename", "left_anti")
 
         if species_col:
-            self._upsert(
-                "organism",
+            t["organism"], _ = find_or_create(
+                t["organism"],
                 fresh.select(F.col(species_col).alias("name")).filter(
                     F.col("name").isNotNull()
                 ),
                 ["name"],
                 "organism_id",
             )
-            org = self.tables["organism"].withColumnsRenamed(
-                {"name": species_col}
-            )
+            org = t["organism"].withColumnsRenamed({"name": species_col})
             fresh = fresh.join(F.broadcast(org), species_col, "left")
         else:
             fresh = fresh.withColumn("organism_id", F.lit(None).cast("long"))
-        base = live.agg(F.max("stock_id").alias("m")).first().m or 0
-        new_rows = generate_ids(
-            fresh, ["uniquename"], id_col="stock_id", start=base + 1
-        ).select(
-            "stock_id",
-            "uniquename",
-            F.col(name_col).alias("name"),
-            "organism_id",
-            (F.col(descr_col) if descr_col else F.lit(None).cast("string")).alias(
-                "description"
+        t["stock"], new_rows = append(
+            live,
+            fresh.select(
+                "uniquename",
+                F.col(name_col).alias("name"),
+                "organism_id",
+                (F.col(descr_col) if descr_col else F.lit(None).cast("string")).alias(
+                    "description"
+                ),
+                F.lit(type_id).alias("type_id"),
             ),
-            F.lit(type_id).alias("type_id"),
-        ).localCheckpoint()
-        self.tables["stock"] = live.unionByName(new_rows).localCheckpoint()
-        self.tables["stockcollection_stock"] = (
-            self.tables["stockcollection_stock"]
-            .unionByName(
-                new_rows.select(
-                    F.lit(coll.stockcollection_id).alias("stockcollection_id"),
-                    "stock_id",
-                )
-            )
-            .localCheckpoint()
+            id_col="stock_id",
+            order_by=["uniquename"],
+        )
+        t["stockcollection_stock"], _ = append(
+            t["stockcollection_stock"],
+            new_rows.select(
+                F.lit(coll.stockcollection_id).alias("stockcollection_id"), "stock_id"
+            ),
         )
         return {"new": new_rows.count(), "existing": existing.count()}
 
@@ -238,15 +226,15 @@ class StockImporter:
             )
         )
         w = Window.partitionBy("stock_id", "cvterm_id").orderBy("line_idx")
-        new_props = resolved.select(
-            "stock_id",
-            F.col("cvterm_id").alias("type_id"),
-            "value",
-            (F.row_number().over(w) - 1).alias("rank"),
-        ).localCheckpoint()
-        self.tables["stockprop"] = self.tables["stockprop"].unionByName(
-            new_props
-        ).localCheckpoint()
+        self.tables["stockprop"], new_props = append(
+            self.tables["stockprop"],
+            resolved.select(
+                "stock_id",
+                F.col("cvterm_id").alias("type_id"),
+                "value",
+                (F.row_number().over(w) - 1).alias("rank"),
+            ),
+        )
         return {"props": new_props.count(), "missed": rows.count() - new_props.count()}
 
     def import_inventory(
@@ -278,18 +266,12 @@ class StockImporter:
         ).withColumn(
             "key", F.element_at(F.array(*[F.lit(k) for k in keys]), F.col("pos") + 1)
         ).filter(F.col("value").isNotNull())
-        new_props = (
-            melted.join(
-                F.broadcast(terms.withColumnsRenamed({"name": "key"})), "key"
-            )
-            .select(
+        self.tables["stockprop"], new_props = append(
+            self.tables["stockprop"],
+            melted.join(F.broadcast(terms.withColumnsRenamed({"name": "key"})), "key").select(
                 "stock_id", F.col("cvterm_id").alias("type_id"), "value", "rank"
-            )
-            .localCheckpoint()
+            ),
         )
-        self.tables["stockprop"] = self.tables["stockprop"].unionByName(
-            new_props
-        ).localCheckpoint()
         return {"inventory_props": new_props.count()}
 
     def import_publications(self, rows: DataFrame, id_col: str = "strain_id") -> dict:
@@ -299,20 +281,12 @@ class StockImporter:
         links = (
             rows.withColumnsRenamed({id_col: "uniquename"})
             .join(self._stock_ids(), "uniquename")
-            .join(
-                F.broadcast(
-                    pubs.withColumnsRenamed({"uniquename": "pmid"})
-                ),
-                "pmid",
-            )
+            .join(F.broadcast(pubs.withColumnsRenamed({"uniquename": "pmid"})), "pmid")
             .select("stock_id", "pub_id")
-            .distinct()
-            .join(self.tables["stock_pub"], ["stock_id", "pub_id"], "left_anti")
-            .localCheckpoint()
         )
-        self.tables["stock_pub"] = self.tables["stock_pub"].unionByName(
-            links
-        ).localCheckpoint()
+        self.tables["stock_pub"], links = find_or_create(
+            self.tables["stock_pub"], links, ["stock_id", "pub_id"]
+        )
         return {"stock_pubs": links.count()}
 
     def import_characteristics(
@@ -333,16 +307,13 @@ class StockImporter:
             self.tables["stock_cvterm"] = live.exceptAll(
                 doomed.select(live.columns)
             ).localCheckpoint()
-        links = (
+        self.tables["stock_cvterm"], links = append(
+            self.tables["stock_cvterm"],
             rows.withColumnsRenamed({id_col: "uniquename"})
             .join(self._stock_ids(), "uniquename")
             .join(F.broadcast(terms.withColumnsRenamed({"name": "term"})), "term")
-            .select("stock_id", "cvterm_id", F.lit(pub_id).alias("pub_id"))
-            .localCheckpoint()
+            .select("stock_id", "cvterm_id", F.lit(pub_id).alias("pub_id")),
         )
-        self.tables["stock_cvterm"] = self.tables["stock_cvterm"].unionByName(
-            links
-        ).localCheckpoint()
         return {"characteristics": links.count()}
 
     def import_genotype(self, rows: DataFrame, id_col: str = "strain_id") -> dict:
@@ -381,21 +352,16 @@ class StockImporter:
         phenstatements against the wiped-and-reloaded phenotype table."""
         self.tables["phenotype"] = self.spark.createDataFrame([], SCHEMAS["phenotype"])
         type_id = self._cvterm_id("observation", self.cv_namespace)
-        self._upsert(
-            "phenotype",
-            rows.select(
-                F.col("phenotype").alias("observable"),
-                F.col("assay"),
-                F.col("value"),
-            ),
+        t = self.tables
+        t["phenotype"], _ = find_or_create(
+            t["phenotype"],
+            rows.select(F.col("phenotype").alias("observable"), "assay", "value"),
             ["observable", "assay", "value"],
             "phenotype_id",
         )
-        self._upsert(
-            "environment",
-            rows.select(F.col("environment").alias("name")).filter(
-                F.col("name").isNotNull()
-            ),
+        t["environment"], _ = find_or_create(
+            t["environment"],
+            rows.select(F.col("environment").alias("name")).filter(F.col("name").isNotNull()),
             ["name"],
             "environment_id",
         )
@@ -441,25 +407,17 @@ class StockImporter:
                 "left",
             )
         )
-        stmts = (
+        t["phenstatement"], stmts = find_or_create(
+            t["phenstatement"],
             resolved.select(
                 "phenotype_id",
                 "genotype_id",
                 "environment_id",
                 F.lit(type_id).alias("type_id"),
                 F.coalesce("pub_id", F.lit(default_pub_id)).alias("pub_id"),
-            )
-            .distinct()
-            .join(
-                self.tables["phenstatement"],
-                ["phenotype_id", "genotype_id", "environment_id", "type_id", "pub_id"],
-                "left_anti",
-            )
-            .localCheckpoint()
+            ),
+            ["phenotype_id", "genotype_id", "environment_id", "type_id", "pub_id"],
         )
-        self.tables["phenstatement"] = self.tables["phenstatement"].unionByName(
-            stmts
-        ).localCheckpoint()
         return {"phenstatements": stmts.count()}
 
     def _relationship(
@@ -499,11 +457,10 @@ class StockImporter:
                 subj_col,
             )
             .select("object_id", "subject_id", F.lit(type_id).alias("type_id"))
-            .localCheckpoint()
         )
-        self.tables["stock_relationship"] = self.tables["stock_relationship"].unionByName(
-            edges
-        ).localCheckpoint()
+        self.tables["stock_relationship"], edges = append(
+            self.tables["stock_relationship"], edges
+        )
         return {"relationships": edges.count()}
 
     def import_plasmid_sequences(
@@ -518,8 +475,8 @@ class StockImporter:
         non-DBP ``seq_id`` records a GenBank dbxref. Existing stocks'
         sequence props + features are pruned first (:388-400)."""
         type_id = self._cvterm_id("plasmid_vector", "sequence")
-        self._upsert(
-            "organism",
+        self.tables["organism"], _ = find_or_create(
+            self.tables["organism"],
             self.spark.createDataFrame([(organism,)], "name string"),
             ["name"],
             "organism_id",
@@ -541,39 +498,29 @@ class StockImporter:
             self.tables["stockprop"] = props.exceptAll(
                 doomed.select(props.columns)
             ).localCheckpoint()
-        base = self.tables["feature"].agg(F.max("feature_id").alias("m")).first().m or 0
-        feats = generate_ids(
-            seqs, ["dbp_id", "seq_id"], id_col="feature_id", start=base + 1
-        ).select(
-            "feature_id",
-            F.concat(F.lit("DBP-F"), F.col("feature_id").cast("string")).alias(
-                "uniquename"
+        seqs = _with_plasmid_feature_ids(self.tables["feature"], seqs, ["dbp_id", "seq_id"])
+        self.tables["feature"], feats = append(
+            self.tables["feature"],
+            seqs.select(
+                "feature_id",
+                "uniquename",
+                F.col("sequence").alias("residues"),
+                F.md5("sequence").alias("md5checksum"),
+                F.length("sequence").alias("seqlen"),
+                F.lit(type_id).alias("type_id"),
+                F.when(F.col("seq_id") != F.col("dbp_id"), F.col("seq_id")).alias("dbxref"),
+                F.lit(org_id).alias("organism_id"),
             ),
-            F.col("sequence").alias("residues"),
-            F.md5("sequence").alias("md5checksum"),
-            F.length("sequence").alias("seqlen"),
-            F.lit(type_id).alias("type_id"),
-            F.when(F.col("seq_id") != F.col("dbp_id"), F.col("seq_id")).alias(
-                "dbxref"
-            ),
-            F.lit(org_id).alias("organism_id"),
-            F.col("dbp_id"),
-        ).localCheckpoint()
-        self.tables["feature"] = self.tables["feature"].unionByName(
-            feats.drop("dbp_id")
-        ).localCheckpoint()
-        links = (
-            feats.select(F.col("dbp_id").alias("uniquename"), F.col("uniquename").alias("value"))
+        )
+        self.tables["stockprop"], links = append(
+            self.tables["stockprop"],
+            seqs.select(F.col("dbp_id").alias("uniquename"), F.col("uniquename").alias("value"))
             .join(self._stock_ids(), "uniquename")
             .select(
                 "stock_id", F.lit(type_id).alias("type_id"), "value",
                 F.lit(0).alias("rank"),
-            )
-            .localCheckpoint()
+            ),
         )
-        self.tables["stockprop"] = self.tables["stockprop"].unionByName(
-            links
-        ).localCheckpoint()
         return {"sequence_features": feats.count(), "sequence_props": links.count()}
 
     def import_plasmid_genes(
@@ -620,37 +567,29 @@ class StockImporter:
         )
         n_created = missing.count()
         if n_created:
-            base = (
-                self.tables["feature"].agg(F.max("feature_id").alias("m")).first().m
-                or 0
-            )
-            bare = generate_ids(
-                missing, ["plasmid_id"], id_col="feature_id", start=base + 1
-            ).select(
-                "feature_id",
-                F.concat(F.lit("DBP-F"), F.col("feature_id").cast("string")).alias(
-                    "uniquename"
+            bare = _with_plasmid_feature_ids(self.tables["feature"], missing, ["plasmid_id"])
+            self.tables["feature"], _ = append(
+                self.tables["feature"],
+                bare.select(
+                    "feature_id",
+                    "uniquename",
+                    F.lit(None).cast("string").alias("residues"),
+                    F.lit(None).cast("string").alias("md5checksum"),
+                    F.lit(None).cast("long").alias("seqlen"),
+                    F.lit(seq_type_id).alias("type_id"),
+                    F.lit(None).cast("string").alias("dbxref"),
+                    F.lit(None).cast("long").alias("organism_id"),
                 ),
-                F.lit(None).cast("string").alias("residues"),
-                F.lit(None).cast("string").alias("md5checksum"),
-                F.lit(None).cast("long").alias("seqlen"),
-                F.lit(seq_type_id).alias("type_id"),
-                F.lit(None).cast("string").alias("dbxref"),
-                F.lit(None).cast("long").alias("organism_id"),
-                "plasmid_id",
-                "stock_id",
-            ).localCheckpoint()
-            self.tables["feature"] = self.tables["feature"].unionByName(
-                bare.drop("plasmid_id", "stock_id")
-            ).localCheckpoint()
-            self.tables["stockprop"] = self.tables["stockprop"].unionByName(
+            )
+            self.tables["stockprop"], _ = append(
+                self.tables["stockprop"],
                 bare.select(
                     "stock_id",
                     F.lit(seq_type_id).alias("type_id"),
                     F.col("uniquename").alias("value"),
                     F.lit(0).alias("rank"),
-                )
-            ).localCheckpoint()
+                ),
+            )
             resolved = keyed.join(
                 pfeat.unionByName(
                     bare.select(
@@ -675,11 +614,10 @@ class StockImporter:
                 F.lit(rel_type_id).alias("type_id"),
             )
             .distinct()
-            .localCheckpoint()
         )
-        self.tables["feature_relationship"] = self.tables[
-            "feature_relationship"
-        ].unionByName(edges).localCheckpoint()
+        self.tables["feature_relationship"], edges = append(
+            self.tables["feature_relationship"], edges
+        )
         return {"plasmid_gene_edges": edges.count(), "features_created": n_created}
 
     def import_parent(self, rows: DataFrame) -> dict:
@@ -693,3 +631,19 @@ class StockImporter:
         return self._relationship(
             rows, "part_of", "strain_id", "plasmid_id", subj_pattern=r"^DBP[0-9]{7}"
         )
+
+
+def _with_plasmid_feature_ids(
+    feature: DataFrame, rows: DataFrame, order_by: list[str]
+) -> DataFrame:
+    """``rows`` materialized with the feature ids they will take in
+    ``feature`` (numbered over ``order_by``) and the ``DBP-F<id>``
+    uniquename made from them. The ids are allocated by appending to the
+    id column alone, whose grown copy is dropped: the caller appends the
+    full rows once their uniquename exists."""
+    _, rows = append(
+        feature.select("feature_id"), rows, id_col="feature_id", order_by=order_by
+    )
+    return rows.withColumn(
+        "uniquename", F.concat(F.lit("DBP-F"), F.col("feature_id").cast("string"))
+    )
