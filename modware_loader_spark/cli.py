@@ -151,9 +151,8 @@ def cmd_oboclosure2chado(args) -> dict:
     spark = get_spark("oboclosure2chado")
     catalog = ChadoCatalog(spark, args.catalog)
     onto = ChadoOntologyLoader(spark)
+    closure = ClosureLoader(onto)  # adds the empty cvtermpath restore fills
     restore_loader_state(onto, catalog)
-    closure = ClosureLoader(onto)
-    restore_loader_state(onto, catalog)  # picks up cvtermpath if present
     counts = closure.load_file(args.input)
     if not args.dry_run:
         save_loader_state(onto, catalog)
@@ -168,8 +167,8 @@ def cmd_chado2gff3(args) -> dict:
     catalog = ChadoCatalog(spark, args.catalog)
     loader = _gff3_loader(spark, catalog)
     rows = chado2gff3_rows(loader)
-    write_gff3(rows, args.output, sequence_regions=sequence_regions(loader))
-    return {"features_exported": rows.count()}
+    n = write_gff3(rows, args.output, sequence_regions=sequence_regions(loader))
+    return {"features_exported": n}
 
 
 def cmd_chado2alignmentgff3(args) -> dict:
@@ -190,8 +189,8 @@ def cmd_chado2alignmentgff3(args) -> dict:
         add_description=args.add_description,
     )
     regions = sequence_regions(loader) if args.write_sequence_region else None
-    write_gff3(rows, args.output, sequence_regions=regions)
-    return {"features_exported": rows.count()}
+    n = write_gff3(rows, args.output, sequence_regions=regions)
+    return {"features_exported": n}
 
 
 def cmd_gff3alignment(args) -> dict:
@@ -210,8 +209,7 @@ def cmd_gff3alignment(args) -> dict:
         match_type=args.match_type,
         match_part_distance=args.match_part_distance,
     )
-    write_gff3(kept.drop("line_idx"), args.output)
-    return {"features_kept": kept.count()}
+    return {"features_kept": write_gff3(kept.drop("line_idx"), args.output)}
 
 
 def cmd_chado2fasta(args) -> dict:
@@ -300,8 +298,7 @@ def cmd_chado2canonicalgff3(args) -> dict:
     catalog = ChadoCatalog(spark, args.catalog)
     loader = _gff3_loader(spark, catalog)
     rows = canonical_rows(loader)
-    write_gff3(rows, args.output)
-    return {"features_exported": rows.count()}
+    return {"features_exported": write_gff3(rows, args.output)}
 
 
 def cmd_chado2dictygff3(args) -> dict:
@@ -330,8 +327,7 @@ def cmd_chado2dictygff3(args) -> dict:
         rows = de.dicty_curated_rows(loader, source=args.source or "dictyBase Curator")
     else:
         raise SystemExit(f"unknown variant {args.variant}")
-    write_gff3(rows, args.output)
-    return {"features_exported": rows.count()}
+    return {"features_exported": write_gff3(rows, args.output)}
 
 
 def cmd_blast2gbrowsegff3(args) -> dict:
@@ -360,8 +356,7 @@ def cmd_blast2gbrowsegff3(args) -> dict:
         start_codon_only=args.start_codon_only,
         remove_stop_codon=args.remove_stop_codon,
     )
-    write_gff3(rows, args.output)
-    return {"features_written": rows.count()}
+    return {"features_written": write_gff3(rows, args.output)}
 
 
 def cmd_sumstatsongff3(args) -> dict:
@@ -458,8 +453,7 @@ def cmd_blast2chadogff3(args) -> dict:
         hit_id_parser=args.hit_id_parser,
         query_id_parser=args.query_id_parser,
     )
-    write_gff3(rows, args.output)
-    return {"features": rows.count()}
+    return {"features": write_gff3(rows, args.output)}
 
 
 def cmd_bibtex2chado(args) -> dict:

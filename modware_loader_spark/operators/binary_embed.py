@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from modware_loader_spark.operators.ivf import ensure_min_partitions
+from modware_loader_spark.frames import ensure_min_partitions
 
 WORD_BITS = 32
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import ensure_min_partitions
+
 
 def ngrams(tokens_col: Column, n: int) -> Column:
     """All word n-grams of a token array as space-joined strings.
@@ -89,8 +91,6 @@ def contamination(
     # only when actual splits < cores, so a production corpus with real
     # split counts never pays it), projected to the two columns the
     # inventory reads before the exchange (guide §2.3).
-    from modware_loader_spark.operators.ivf import ensure_min_partitions
-
     slim = documents.select(F.col(id_col), F.col(text_col))
     doc_grams = ngram_inventory(ensure_min_partitions(slim), text_col, id_col, n)
     hits = doc_grams.join(F.broadcast(bench_grams), "gram", "inner")

@@ -10,7 +10,7 @@ the canonical 9x8.
 
 Pipeline shape (mirrors the text SimHash family in ``operators/dedup``):
 
-1. ``image_dhash`` — Arrow-batched ``mapInPandas``: REAL raster decode
+1. ``image_dhash`` — one Arrow map stage: REAL raster decode
    (``functions/media_codecs.decode_rgb``: Pillow if importable, else
    the stdlib PNG/BMP/PPM decoders), then the bit grid, packed into two
    32-bit words (same packing contract as ``operators/binary_embed``, so
@@ -39,16 +39,14 @@ mandated by the north-star baseline (multimodal + dedup families).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from modware_loader_spark.frames import ensure_min_partitions, map_rows
 from modware_loader_spark.functions.media_codecs import decode_rgb, encode_ppm
 from modware_loader_spark.operators.binary_embed import hamming
-from modware_loader_spark.operators.ivf import ensure_min_partitions
 
 GRID_W = 9  # pixels per row -> GRID_W - 1 = 8 bits per row
 GRID_H = 8  # rows -> 64 bits total
@@ -107,49 +105,33 @@ def synth_gray_ppm(
 ) -> DataFrame:
     """One real binary-PPM (P6, 9x8, r=g=b) payload per input row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # the n_bases base patterns are shared by every row, so their
-        # md5s (n_bases x 72) are computed once per task instead of per
-        # document — output-identical to synth_pixels (pinned by
-        # tests/test_search_dsir_imagehash.py round-trip), ~2x fewer
-        # Python md5 calls in the corpus-synthesis stage
-        base_cache: dict[int, list[int]] = {}
+    # the n_bases base patterns are shared by every row, so their md5s
+    # (n_bases x 72) are computed once per task instead of per document
+    # — output-identical to synth_pixels (pinned by
+    # tests/test_search_dsir_imagehash.py round-trip), ~2x fewer Python
+    # md5 calls in the corpus-synthesis stage
+    base_cache: dict[int, list[int]] = {}
 
-        def base_for(b: int) -> list[int]:
-            if b not in base_cache:
-                base_cache[b] = [
-                    _md5_byte(f"b:{b}:{x}:{y}")
-                    for y in range(GRID_H)
-                    for x in range(GRID_W)
-                ]
-            return base_cache[b]
+    def base_for(b: int) -> list[int]:
+        if b not in base_cache:
+            base_cache[b] = [
+                _md5_byte(f"b:{b}:{x}:{y}") for y in range(GRID_H) for x in range(GRID_W)
+            ]
+        return base_cache[b]
 
-        for pdf in it:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for mid in ids:
-                mid = int(mid)
-                gray = list(base_for(mid % n_bases))
-                i = 0
-                for y in range(GRID_H):
-                    for x in range(GRID_W):
-                        if _md5_byte(f"{mid}:{x}:{y}") < noise_threshold:
-                            gray[i] = _md5_byte(f"n:{mid}:{x}:{y}")
-                        i += 1
-                rgb = bytes(g for g in gray for _ in range(3))
-                payloads.append(encode_ppm(GRID_W, GRID_H, rgb))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "image/x-portable-pixmap",
-                    "payload": payloads,
-                }
-            )
+    def row(mid):
+        gray = list(base_for(mid % n_bases))
+        i = 0
+        for y in range(GRID_H):
+            for x in range(GRID_W):
+                if _md5_byte(f"{mid}:{x}:{y}") < noise_threshold:
+                    gray[i] = _md5_byte(f"n:{mid}:{x}:{y}")
+                i += 1
+        rgb = bytes(g for g in gray for _ in range(3))
+        return [(mid, "image/x-portable-pixmap", encode_ppm(GRID_W, GRID_H, rgb))]
 
     # the Python encode stage must not inherit a 1-split local parquet
-    return ensure_min_partitions(df.select(id_col)).mapInPandas(
-        batches, schema=_PPM_SCHEMA
-    )
+    return map_rows(ensure_min_partitions(df.select(id_col)), row, _PPM_SCHEMA)
 
 
 def synth_video_frames(
@@ -175,42 +157,35 @@ def synth_video_frames(
     MJPEG-AVI round-trip tests).
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        base_cache: dict[tuple[int, str], list[int]] = {}
+    base_cache: dict[tuple[int, str], list[int]] = {}
 
-        def base_for(b: int, seg: str) -> list[int]:
-            if (b, seg) not in base_cache:
-                base_cache[(b, seg)] = [
-                    _md5_byte(f"vb:{b}:{seg}:{x}:{y}")
-                    for y in range(GRID_H)
-                    for x in range(GRID_W)
-                ]
-            return base_cache[(b, seg)]
+    def base_for(b: int, seg: str) -> list[int]:
+        if (b, seg) not in base_cache:
+            base_cache[(b, seg)] = [
+                _md5_byte(f"vb:{b}:{seg}:{x}:{y}")
+                for y in range(GRID_H)
+                for x in range(GRID_W)
+            ]
+        return base_cache[(b, seg)]
 
-        for pdf in it:
-            ids, fids, payloads = [], [], []
-            for mid in pdf[id_col].astype("int64"):
-                mid = int(mid)
-                for f in range(n_frames):
-                    seg = "a" if f < cut_at else "b"
-                    gray = list(base_for(mid % n_bases, seg))
-                    i = 0
-                    for y in range(GRID_H):
-                        for x in range(GRID_W):
-                            if _md5_byte(f"v:{mid}:{f}:{x}:{y}") < noise_threshold:
-                                gray[i] = _md5_byte(f"vn:{mid}:{f}:{x}:{y}")
-                            i += 1
-                    rgb = bytes(g for g in gray for _ in range(3))
-                    ids.append(mid)
-                    fids.append(f)
-                    payloads.append(encode_ppm(GRID_W, GRID_H, rgb))
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_index": fids, "payload": payloads}
-            )
+    def row(mid):
+        out = []
+        for f in range(n_frames):
+            gray = list(base_for(mid % n_bases, "a" if f < cut_at else "b"))
+            i = 0
+            for y in range(GRID_H):
+                for x in range(GRID_W):
+                    if _md5_byte(f"v:{mid}:{f}:{x}:{y}") < noise_threshold:
+                        gray[i] = _md5_byte(f"vn:{mid}:{f}:{x}:{y}")
+                    i += 1
+            rgb = bytes(g for g in gray for _ in range(3))
+            out.append((mid, f, encode_ppm(GRID_W, GRID_H, rgb)))
+        return out
 
-    return ensure_min_partitions(df.select(id_col)).mapInPandas(
-        batches,
-        schema=T.StructType(
+    return map_rows(
+        ensure_min_partitions(df.select(id_col)),
+        row,
+        T.StructType(
             [
                 T.StructField("media_id", T.LongType(), False),
                 T.StructField("frame_index", T.IntegerType(), False),
@@ -248,36 +223,25 @@ def image_dhash(media: DataFrame, on_error: str = "raise") -> DataFrame:
     ``multimodal.decode_media``; ``dhash_near_pairs`` ignores NULL rows.
     """
 
-    def one(payload) -> list[int] | None:
-        try:
-            w, h, rgb = decode_rgb(bytes(payload))
-            if (w, h) != (GRID_W, GRID_H):
-                raise ValueError(
-                    f"dhash expects a {GRID_W}x{GRID_H} raster, got {w}x{h}"
-                )
-        except Exception:
-            if on_error == "null":
-                return None
-            raise
+    def row(payload) -> list[tuple]:
+        w, h, rgb = decode_rgb(bytes(payload))
+        if (w, h) != (GRID_W, GRID_H):
+            raise ValueError(f"dhash expects a {GRID_W}x{GRID_H} raster, got {w}x{h}")
         # integer-mean luma: equals the channel value on grayscale
         # rasters (r == g == b, the synth corpus), and gives the
         # documented gray contract on color inputs instead of silently
         # hashing the red channel alone
         gray = [
-            (rgb[3 * i] + rgb[3 * i + 1] + rgb[3 * i + 2]) // 3
-            for i in range(w * h)
+            (rgb[3 * i] + rgb[3 * i + 1] + rgb[3 * i + 2]) // 3 for i in range(w * h)
         ]
-        return dhash_words(gray)
+        return [(dhash_words(gray),)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = [one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"].astype("int64"), "hash_words": out}
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        batches, schema=_DHASH_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"),
+        row,
+        _DHASH_SCHEMA,
+        carry=["media_id"],
+        on_error=on_error,
     )
 
 

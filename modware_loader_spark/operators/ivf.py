@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import ensure_min_partitions
 from modware_loader_spark.operators.similarity import cosine
 
 
@@ -59,21 +60,6 @@ def sq_l2(a, b):
 # r10 shape bit-for-bit, and the pathological large-k literal region
 # (O(k·dim) parse/analyze per job) is unreachable.
 _LITERAL_CELL_BUDGET = 4096
-
-
-def ensure_min_partitions(df: DataFrame) -> DataFrame:
-    """Rebalance a frame that arrives as fewer splits than cores.
-
-    The vector map stages (argmin assignment, PQ encode, Lloyd scans)
-    inherit the source's split count; ONE local parquet file would
-    serialize them onto one core. Guarded on the actual partition count,
-    so a production corpus with real split counts never pays the
-    shuffle. (`.rdd.getNumPartitions()` costs a plan analysis, not a
-    job — cheap next to any of these scans.)"""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
 
 
 def _centroid_literals(centroids: DataFrame) -> list:

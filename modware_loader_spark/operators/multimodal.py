@@ -1,5 +1,6 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` columns
-with typed metadata, processed via Arrow-batched ``mapInPandas``.
+with typed metadata, processed per row over Arrow batches
+(``frames.map_rows``).
 
 Decode and resize are REAL: Pillow when importable, else the stdlib
 codecs in ``functions/media_codecs.py`` (PNG/BMP/PPM/baseline-JPEG/GIF
@@ -18,12 +19,11 @@ query doesn't touch it).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from modware_loader_spark.frames import ensure_min_partitions, map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -62,27 +62,11 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text", id_col: str = "
     )
 
 
-#: Per-payload ceiling for the Arrow decode/resize stages. Arrow ships
-#: ``spark.sql.execution.arrow.maxRecordsPerBatch`` (default 10k) rows
-#: per batch, so one batch's resident size is ~rows x payload — a single
-#: runaway payload (a mislabeled 2 GB video in an image column) would
-#: take the whole Python worker down. 64 MB passes every sane image and
+#: Per-payload ceiling for the Arrow decode/resize/audio/frame stages
+#: (``frames.map_rows`` enforces it). 64 MB passes every sane image and
 #: is far under the worker memory per core; raise it deliberately for
 #: video tables (and drop maxRecordsPerBatch in the same breath).
 MAX_PAYLOAD_BYTES = 64 << 20
-
-
-def _payload_too_big(payload, max_payload_bytes: int, on_error: str, what: str) -> bool:
-    """True → skip (on_error='null'); raises on the 'raise' policy."""
-    if payload is None or len(payload) <= max_payload_bytes:
-        return False
-    if on_error == "null":
-        return True
-    raise ValueError(
-        f"{what}: payload of {len(payload)} bytes exceeds max_payload_bytes="
-        f"{max_payload_bytes}; raise the cap (and lower "
-        "spark.sql.execution.arrow.maxRecordsPerBatch) for large-media tables"
-    )
 
 
 def decode_media(
@@ -91,7 +75,7 @@ def decode_media(
     on_error: str = "raise",
     max_payload_bytes: int = MAX_PAYLOAD_BYTES,
 ) -> DataFrame:
-    """Arrow-batched decode via ``mapInPandas``: payload → dims + feature.
+    """Arrow-batched decode (``frames.map_rows``): payload → dims + feature.
 
     The REAL path (``fake=False``) decodes per payload: Pillow when
     importable (every format it knows), else the stdlib codecs in
@@ -107,8 +91,8 @@ def decode_media(
     libraries touched at all) — used by the driver-gated oracle query,
     where the DuckDB twin restates the md5 arithmetic.
 
-    The batch shape (iterator of pandas DataFrames, one output row per
-    input row, binary column dropped on output) is the production shape.
+    One output row per input row; the binary column is dropped on
+    output and ``n_bytes`` is measured on the JVM side.
     """
 
     # nested (not module-level) so cloudpickle ships everything by value —
@@ -125,49 +109,32 @@ def decode_media(
     def real_decode(payload: bytes) -> tuple:
         from modware_loader_spark.functions import media_codecs as MC
 
+        kind = MC.sniff_media_type(payload)
+        if kind == "wav":
+            _nch, _rate, duration, rms = MC.decode_wav_stats(payload)
+            return None, None, [duration, rms]
         try:
-            kind = MC.sniff_media_type(payload)
-            if kind == "wav":
-                _nch, _rate, duration, rms = MC.decode_wav_stats(payload)
-                return None, None, [duration, rms]
-            try:
-                w, h, rgb = MC.decode_rgb(payload)
-            except ValueError:
-                w, h = MC.decode_dims(payload)  # header-only formats
-                return w, h, None
-            n = w * h or 1
-            mr = sum(rgb[0::3]) / n / 255.0
-            mg = sum(rgb[1::3]) / n / 255.0
-            mb = sum(rgb[2::3]) / n / 255.0
-            luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
-            return w, h, [round(v, 6) for v in (mr, mg, mb, luma)]
-        except Exception:
-            if on_error == "null":
-                return None, None, None
-            raise
+            w, h, rgb = MC.decode_rgb(payload)
+        except ValueError:
+            w, h = MC.decode_dims(payload)  # header-only formats
+            return w, h, None
+        n = w * h or 1
+        mr = sum(rgb[0::3]) / n / 255.0
+        mg = sum(rgb[1::3]) / n / 255.0
+        mb = sum(rgb[2::3]) / n / 255.0
+        luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
+        return w, h, [round(v, 6) for v in (mr, mg, mb, luma)]
 
-    base_decode = fake_decode if fake else real_decode
-
-    def decode(payload):
-        if _payload_too_big(payload, max_payload_bytes, on_error, "decode_media"):
-            return None, None, None
-        return base_decode(payload)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = pdf["payload"].map(decode)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["payload"].map(lambda p: len(p) if p is not None else 0),
-                    "decoded_width": decoded.map(lambda d: d[0]),
-                    "decoded_height": decoded.map(lambda d: d[1]),
-                    "feature": decoded.map(lambda d: d[2]),
-                }
-            )
-
-    return df.mapInPandas(batches, DECODED_SCHEMA)
+    decode = fake_decode if fake else real_decode
+    n_bytes = F.coalesce(F.length("payload"), F.lit(0)).cast("long")
+    return map_rows(
+        df.select("media_id", "media_type", n_bytes.alias("n_bytes"), "payload"),
+        lambda payload: [decode(payload)],
+        DECODED_SCHEMA,
+        carry=["media_id", "media_type", "n_bytes"],
+        on_error=on_error,
+        max_payload_bytes=max_payload_bytes,
+    )
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -205,7 +172,7 @@ def synth_wav_tones(
     ``image_hash.synth_gray_ppm``.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(mid):
         import numpy as np
 
         from modware_loader_spark.functions.audio_features import (
@@ -213,30 +180,17 @@ def synth_wav_tones(
         )
 
         n = np.arange(n_samples)
-        for pdf in it:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for mid in ids:
-                mid = int(mid)
-                f0 = 100 + (mid % 7) * 50
-                f1 = 300 + (mid % 11) * 30
-                x = 0.4 * np.sin(2 * np.pi * f0 * n / rate) + 0.3 * np.sin(
-                    2 * np.pi * f1 * n / rate
-                )
-                payloads.append(encode_wav_pcm16(rate, x))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "audio/wav",
-                    "payload": payloads,
-                }
-            )
+        f0 = 100 + (mid % 7) * 50
+        f1 = 300 + (mid % 11) * 30
+        x = 0.4 * np.sin(2 * np.pi * f0 * n / rate) + 0.3 * np.sin(
+            2 * np.pi * f1 * n / rate
+        )
+        return [(mid, "audio/wav", encode_wav_pcm16(rate, x))]
 
-    from modware_loader_spark.operators.ivf import ensure_min_partitions
-
-    return ensure_min_partitions(df.select(id_col)).mapInPandas(
-        batches,
-        schema=T.StructType(
+    return map_rows(
+        ensure_min_partitions(df.select(id_col)),
+        row,
+        T.StructType(
             [
                 T.StructField("media_id", T.LongType(), False),
                 T.StructField("media_type", T.StringType(), True),
@@ -265,45 +219,31 @@ def audio_features(
     media stages.
     """
 
-    def one(payload):
+    def row(payload):
         from modware_loader_spark.functions.audio_features import (
             mfcc,
             wav_samples,
         )
 
-        if _payload_too_big(payload, max_payload_bytes, on_error, "audio_features"):
-            return None, None, None, None, None
-        try:
-            rate, x = wav_samples(bytes(payload))
-            m = mfcc(x, rate, n_mfcc=n_mfcc)
-            return (
+        rate, x = wav_samples(bytes(payload))
+        m = mfcc(x, rate, n_mfcc=n_mfcc)
+        return [
+            (
                 rate,
                 round(x.size / rate, 6),
                 m.shape[0],
                 [float(v) for v in m.mean(axis=0)],
                 [float(v) for v in m.std(axis=0)],
             )
-        except Exception:
-            if on_error == "null":
-                return None, None, None, None, None
-            raise
+        ]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = pdf["payload"].map(one)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "sample_rate": feats.map(lambda t: t[0]),
-                    "duration_s": feats.map(lambda t: t[1]),
-                    "n_frames": feats.map(lambda t: t[2]),
-                    "mfcc_mean": feats.map(lambda t: t[3]),
-                    "mfcc_std": feats.map(lambda t: t[4]),
-                }
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        batches, AUDIO_FEATURE_SCHEMA
+    return map_rows(
+        df.select("media_id", "payload"),
+        row,
+        AUDIO_FEATURE_SCHEMA,
+        carry=["media_id"],
+        on_error=on_error,
+        max_payload_bytes=max_payload_bytes,
     )
 
 
@@ -349,66 +289,45 @@ def resize_media(
     metadata rewritten — is identical on every path.
     """
 
-    def real_resize(p: bytes) -> tuple[bytes | None, str | None, int | None]:
-        """(payload, media_type, target_dim_or_null) — the type column
-        must describe the re-encoded bytes, not the input (PIL emits PNG,
-        stdlib PPM; a cluster with heterogeneous PIL installs would
-        otherwise mix formats under one stale label)."""
+    def real_resize(media_type, p: bytes) -> list[tuple]:
+        """The type column must describe the re-encoded bytes, not the
+        input (PIL emits PNG, stdlib PPM; a cluster with heterogeneous
+        PIL installs would otherwise mix formats under one stale
+        label)."""
         from modware_loader_spark.functions import media_codecs as MC
 
-        if _payload_too_big(p, max_payload_bytes, on_error, "resize_media"):
-            return None, None, None
-        try:
-            if MC.pil_available():
-                import io
+        if MC.pil_available():
+            import io
 
-                import PIL.Image
+            import PIL.Image
 
-                img = PIL.Image.open(io.BytesIO(p)).convert("RGB")
-                out = io.BytesIO()
-                img.resize((width, height), PIL.Image.LANCZOS).save(out, "PNG")
-                return out.getvalue(), "image/png", 1
-            w, h, rgb = MC.decode_rgb(p)
-            return (
-                MC.encode_ppm(
-                    width, height, MC.resize_rgb_nearest(w, h, rgb, width, height)
-                ),
+            img = PIL.Image.open(io.BytesIO(p)).convert("RGB")
+            out = io.BytesIO()
+            img.resize((width, height), PIL.Image.LANCZOS).save(out, "PNG")
+            return [("image/png", out.getvalue(), width, height)]
+        w, h, rgb = MC.decode_rgb(p)
+        resized = MC.resize_rgb_nearest(w, h, rgb, width, height)
+        return [
+            (
                 "image/x-portable-pixmap",
-                1,
+                MC.encode_ppm(width, height, resized),
+                width,
+                height,
             )
-        except Exception:
-            if on_error == "null":
-                return None, None, None
-            raise
+        ]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fake_resize(media_type, p) -> list[tuple]:
         target = width * height
-        for pdf in it:
-            if fake:
-                payload = pdf["payload"].map(
-                    lambda p: (p or b"")[:target].ljust(target, b"\0")
-                )
-                mtype = pdf["media_type"]
-                out_w = pd.Series([width] * len(pdf), index=pdf.index)
-                out_h = pd.Series([height] * len(pdf), index=pdf.index)
-            else:
-                resized = pdf["payload"].map(real_resize)
-                payload = resized.map(lambda t: t[0])
-                mtype = resized.map(lambda t: t[1])
-                ok = resized.map(lambda t: t[2])
-                out_w = ok.map(lambda v: width if v else None)
-                out_h = ok.map(lambda v: height if v else None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": mtype,
-                    "payload": payload,
-                    "meta_width": out_w,
-                    "meta_height": out_h,
-                }
-            )
+        return [(media_type, (p or b"")[:target].ljust(target, b"\0"), width, height)]
 
-    return df.mapInPandas(batches, RESIZED_SCHEMA)
+    return map_rows(
+        df.select("media_id", "media_type", "payload"),
+        fake_resize if fake else real_resize,
+        RESIZED_SCHEMA,
+        carry=["media_id"],
+        on_error=on_error,
+        max_payload_bytes=max_payload_bytes,
+    )
 
 
 def sample_frames(
@@ -419,8 +338,8 @@ def sample_frames(
     max_payload_bytes: int = MAX_PAYLOAD_BYTES,
 ) -> DataFrame:
     """Arrow-batched frame sampling: one video row → up to ``n_frames``
-    frame rows (uniform stride). The 1→N row expansion inside
-    ``mapInPandas`` is the shape real ffmpeg-backed samplers use.
+    frame rows (uniform stride). The 1→N row expansion inside one Arrow
+    map stage is the shape real ffmpeg-backed samplers use.
 
     The REAL path (``fake=False``) mirrors the Pillow-preferred pattern
     of ``functions/media_codecs.py``: PyAV when importable (any codec;
@@ -442,10 +361,6 @@ def sample_frames(
     def real_split(p: bytes) -> list[bytes]:
         from modware_loader_spark.functions import media_codecs as MC
 
-        # oversize guard raises here under on_error='raise'; under 'null'
-        # the too-big row falls into the except branch below and emits a
-        # single NULL-payload frame row, same as any unsplittable payload
-        _payload_too_big(p, max_payload_bytes, "raise", "sample_frames")
         try:
             import av  # noqa: F401  (optional; absent in this container)
 
@@ -469,39 +384,24 @@ def sample_frames(
             return MC.split_gif_frames(p)
         raise ValueError("unsupported video container (no PyAV; not AVI/GIF)")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if fake:
-                    p = p or b""
-                    step = max(len(p) // n_frames, 1)
-                    for i in range(n_frames):
-                        ids.append(mid)
-                        idxs.append(i)
-                        frames.append(p[i * step : (i + 1) * step])
-                    continue
-                try:
-                    all_frames = real_split(p)
-                except Exception:
-                    if on_error != "null":
-                        raise
-                    ids.append(mid)
-                    idxs.append(0)
-                    frames.append(None)
-                    continue
-                m = len(all_frames)
-                take = (
-                    range(m)
-                    if m <= n_frames
-                    else (i * m // n_frames for i in range(n_frames))
-                )
-                for out_i, src_i in enumerate(take):
-                    ids.append(mid)
-                    idxs.append(out_i)
-                    frames.append(all_frames[src_i])
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_index": idxs, "payload": frames}
-            )
+    def row(p) -> list[tuple]:
+        if fake:
+            p = p or b""
+            step = max(len(p) // n_frames, 1)
+            return [(i, p[i * step : (i + 1) * step]) for i in range(n_frames)]
+        all_frames = real_split(p)
+        m = len(all_frames)
+        take = (
+            range(m) if m <= n_frames else (i * m // n_frames for i in range(n_frames))
+        )
+        return [(out_i, all_frames[src_i]) for out_i, src_i in enumerate(take)]
 
-    return df.mapInPandas(batches, FRAME_SCHEMA)
+    return map_rows(
+        df.select("media_id", "payload"),
+        row,
+        FRAME_SCHEMA,
+        carry=["media_id"],
+        on_error=on_error,
+        max_payload_bytes=max_payload_bytes,
+        null_row=(0, None),
+    )

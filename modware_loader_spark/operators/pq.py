@@ -37,11 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from modware_loader_spark.operators.ivf import (
-    _dist_cell_pairs,
-    _sql_sq_l2,
-    ensure_min_partitions,
-)
+from modware_loader_spark.frames import ensure_min_partitions
+from modware_loader_spark.operators.ivf import _dist_cell_pairs, _sql_sq_l2
 
 
 def _block_books_from_seed_rows(seed_rows, m: int, sub: int) -> list[list]:

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from modware_loader_spark.operators.ivf import ensure_min_partitions
+from modware_loader_spark.frames import ensure_min_partitions
 from modware_loader_spark.operators.text import tokens
 
 
@@ -89,10 +89,14 @@ def _rank_head(head: DataFrame, score_col: str, id_col: str = "doc_id") -> DataF
     ahead = (F.col("__s2") > F.col(score_col)) | (
         (F.col("__s2") == F.col(score_col)) & (F.col("__d2") < F.col(id_col))
     )
+    # one partition sorted by rank: the k rows come back in rank order
+    # (the grouping alone returns them in hash order), with no exchange
     return (
         head.join(F.broadcast(other), ahead, "left")
         .groupBy(id_col, score_col)
         .agg((F.count("__d2") + F.lit(1)).cast("int").alias("rank"))
+        .coalesce(1)
+        .sortWithinPartitions("rank", id_col)
     )
 
 

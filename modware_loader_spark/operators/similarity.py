@@ -21,13 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def ensure_min_partitions(df: DataFrame) -> DataFrame:
-    """Lazy re-export of ``ivf.ensure_min_partitions`` (module-level
-    import would cycle: ``ivf`` imports ``similarity.cosine``)."""
-    from modware_loader_spark.operators.ivf import ensure_min_partitions as _emp
-
-    return _emp(df)
+from modware_loader_spark.frames import ensure_min_partitions
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import ensure_min_partitions
 from modware_loader_spark.operators import classifier as CL
 from modware_loader_spark.operators import decontam as DC
 from modware_loader_spark.operators import packing as PK
@@ -1599,8 +1600,6 @@ def _boilerplate_page_frame(docs: DataFrame, carry: tuple = ()) -> DataFrame:
     dataset, whose 30 splits engaged every worker). Guarded repartition
     — a production corpus with real split counts never pays the shuffle.
     """
-    from modware_loader_spark.operators.ivf import ensure_min_partitions
-
     d = ensure_min_partitions(docs).select(
         "doc_id",
         *carry,
@@ -1747,6 +1746,33 @@ def dedup_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WARC_FIXTURE_DIRS: dict[tuple, str] = {}
 
 
+def _warc_fixture_files(
+    spark: SparkSession, sf_dir: str, memo: dict, synth, prefix: str
+) -> str:
+    """Glob of real multi-record ``.warc.gz`` fixture files: ``synth``
+    (a ``(doc_id, text)`` frame -> ``(media_id, payload)`` records) over
+    the 1-in-11 document slice, 16 records (gzip members) per file in
+    ``media_id`` order. The directory is memoized in ``memo`` per
+    documents-table data identity, so repeated runs reuse one directory
+    and a regenerated table gets fresh bytes."""
+    import os
+    import tempfile
+
+    key = _documents_fingerprint(sf_dir)
+    d = memo.get(key)
+    if d is None or not os.path.isdir(d):
+        docs = load_tables(spark, sf_dir)["documents"].filter(F.col("doc_id") % 11 == 0)
+        payloads = sorted(
+            (int(r["media_id"]), bytes(r["payload"])) for r in synth(docs).collect()
+        )
+        d = tempfile.mkdtemp(prefix=prefix)
+        for fno, i in enumerate(range(0, len(payloads), 16)):
+            with open(os.path.join(d, f"part-{fno:05d}.warc.gz"), "wb") as fh:
+                fh.write(b"".join(p for _, p in payloads[i : i + 16]))
+        memo[key] = d
+    return os.path.join(d, "*.warc.gz")
+
+
 @query(
     "source_warc_files",
     f"""
@@ -1781,27 +1807,12 @@ def source_warc_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     stale-proof under in-process regeneration — r12), so bench's
     cold+warm triple and repeated parity runs reuse one directory
     instead of leaking a fresh mkdtemp + slice collect per invocation."""
-    import os
-    import tempfile
-
     from modware_loader_spark.sources import warc as W
 
-    wkey = _documents_fingerprint(sf_dir)
-    d = _WARC_FIXTURE_DIRS.get(wkey)
-    if d is None or not os.path.isdir(d):
-        t = load_tables(spark, sf_dir)
-        docs = t["documents"].filter(F.col("doc_id") % 11 == 0)
-        payloads = sorted(
-            (int(r["media_id"]), bytes(r["payload"]))
-            for r in W.synth_warc(docs).collect()
-        )
-        d = tempfile.mkdtemp(prefix="mls_warc_")
-        for fno, i in enumerate(range(0, len(payloads), 16)):
-            chunk = payloads[i : i + 16]
-            with open(os.path.join(d, f"part-{fno:05d}.warc.gz"), "wb") as fh:
-                fh.write(b"".join(p for _, p in chunk))
-        _WARC_FIXTURE_DIRS[wkey] = d
-    recs = W.extract_html_text(W.read_warc(spark, os.path.join(d, "*.warc.gz")))
+    files = _warc_fixture_files(
+        spark, sf_dir, _WARC_FIXTURE_DIRS, W.synth_warc, "mls_warc_"
+    )
+    recs = W.extract_html_text(W.read_warc(spark, files))
     return recs.select(
         F.regexp_extract("target_uri", r"/doc/(\d+)$", 1)
         .cast("long")
@@ -2464,29 +2475,18 @@ def pipeline_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle host-keyed rows only; the gate is a broadcast join against
     the rank table; the manifest is one partial-agg pass. The corpus
     itself shuffles exactly once (the md5-uniform shard exchange)."""
-    import os
-    import tempfile
-
     from modware_loader_spark.functions.scalar import hex64, round_half_away
     from modware_loader_spark.operators import graph as G
     from modware_loader_spark.operators.curation import url_host
     from modware_loader_spark.sources import warc as W
 
-    fkey = _documents_fingerprint(sf_dir)
-    d = _CRAWL_FIXTURE_DIRS.get(fkey)
-    if d is None or not os.path.isdir(d):
-        t = load_tables(spark, sf_dir)
-        docs = t["documents"].filter(F.col("doc_id") % 11 == 0)
-        payloads = sorted(
-            (int(r["media_id"]), bytes(r["payload"]))
-            for r in W.synth_warc_linked(docs, n_hosts=_CRAWL_H).collect()
-        )
-        d = tempfile.mkdtemp(prefix="mls_crawl_")
-        for fno, i in enumerate(range(0, len(payloads), 16)):
-            chunk = payloads[i : i + 16]
-            with open(os.path.join(d, f"part-{fno:05d}.warc.gz"), "wb") as fh:
-                fh.write(b"".join(p for _, p in chunk))
-        _CRAWL_FIXTURE_DIRS[fkey] = d
+    files = _warc_fixture_files(
+        spark,
+        sf_dir,
+        _CRAWL_FIXTURE_DIRS,
+        lambda docs: W.synth_warc_linked(docs, n_hosts=_CRAWL_H),
+        "mls_crawl_",
+    )
     # Persist contract (r13): consumed eagerly by the edge/node
     # checkpoints during build AND lazily by the main-content branch of
     # the returned frame — no in-query release point; the bench sweep /
@@ -2496,7 +2496,7 @@ def pipeline_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     pages = (
-        W.read_warc(spark, os.path.join(d, "*.warc.gz"))
+        W.read_warc(spark, files)
         .select(
             F.regexp_extract("target_uri", r"/d/(\d+)$", 1)
             .cast("long")

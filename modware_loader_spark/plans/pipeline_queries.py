@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modware_loader_spark.frames import local_frame
+from modware_loader_spark.frames import ensure_min_partitions, local_frame
 from modware_loader_spark.operators import components as C
 from modware_loader_spark.operators import dedup as D
 from modware_loader_spark.operators import ivf as IVF
@@ -1056,7 +1056,7 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition at entry so a single-file scan doesn't serialize the
     hash-heavy map (SCALE.md local-mode caveat)."""
     t = load_tables(spark, sf_dir)
-    return IVF.ensure_min_partitions(t["documents"]).select(
+    return ensure_min_partitions(t["documents"]).select(
         "doc_id",
         F.explode(TX.winnow_fingerprints("text", k=8, w=4)).alias("fp"),
     )

@@ -166,25 +166,18 @@ def pub2bib_rows(spark, paths: str, pmids: Iterable[str] | None = None):
     (no shuffle) — the right plan for a years-long backlog of nightly
     dumps. Returns ``(file, bibtex)``.
     """
-    import pandas as pd
-
-    keep = None if pmids is None else sorted({str(p) for p in pmids})
-
-    def _convert(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "file": pdf["file"],
-                    "bibtex": [
-                        pubmed_xml_to_bibtex(x, pmids=keep) for x in pdf["value"]
-                    ],
-                }
-            )
-
     from pyspark.sql import functions as F
 
+    from modware_loader_spark.frames import map_rows
+
+    keep = None if pmids is None else sorted({str(p) for p in pmids})
     docs = (
         spark.read.text(paths, wholetext=True)
         .withColumn("file", F.input_file_name())
     )
-    return docs.mapInPandas(_convert, schema="file string, bibtex string")
+    return map_rows(
+        docs.select("file", "value"),
+        lambda xml: [(pubmed_xml_to_bibtex(xml, pmids=keep),)],
+        "file string, bibtex string",
+        carry=["file"],
+    )

@@ -15,7 +15,7 @@ without a single-node sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from modware_loader_spark.frames import local_frame
@@ -73,11 +73,15 @@ def write_gff3(
     path: str,
     sequence_regions: list[tuple[str, int, int]] | None = None,
     attr_col: str = "attributes",
-) -> None:
-    """Ordered single-file GFF3 write with directives.
+) -> int:
+    """Ordered single-file GFF3 write with directives; returns the number
+    of feature lines written.
 
     coalesce(1) is for the file contract (one GFF3 document); at scale
-    write per-seq_id partitioned directories instead.
+    write per-seq_id partitioned directories instead. The count is an
+    ``Observation`` after the sort, in the write's result stage, so it
+    costs no second run of the export plan and a retried map stage
+    cannot count twice.
     """
     spark = features.sparkSession
     header = [("##gff-version 3", "", -2)]
@@ -85,11 +89,15 @@ def write_gff3(
         header.append((f"##sequence-region {sid} {lo} {hi}", sid, -1))
     head_df = local_frame(spark, header, "line string, seq_id string, start long")
     body = gff3_lines(features, attr_col).select("line", "seq_id", "start")
+    written = Observation("gff3_features")
     (
-        head_df.unionByName(body)
+        head_df.withColumn("is_body", F.lit(False))
+        .unionByName(body.withColumn("is_body", F.lit(True)))
         .orderBy(F.col("seq_id"), F.col("start"), F.col("line"))
+        .observe(written, F.count_if("is_body").alias("n"))
         .select("line")
         .coalesce(1)
         .write.mode("overwrite")
         .text(path)
     )
+    return written.get["n"]

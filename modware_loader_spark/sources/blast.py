@@ -26,6 +26,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import map_rows
+
 HSP_SCHEMA = (
     "query_id string, query_desc string, query_len int, "
     "hit_id string, hit_desc string, hit_len int, hit_rank int, hsp_rank int, "
@@ -223,17 +225,12 @@ def read_blast_report(
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
-    def parse(batches):
-        import pandas as pd
+    cols = [f.split()[0] for f in HSP_SCHEMA.split(", ")]
 
-        cols = [f.split()[0] for f in HSP_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows: list[dict] = []
-            for block in pdf["value"]:
-                rows.extend(_parse_query_block(block, algorithm))
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(block):
+        return [tuple(r.get(c) for c in cols) for r in _parse_query_block(block, algorithm)]
 
-    return blocks.mapInPandas(parse, schema=HSP_SCHEMA)
+    return map_rows(blocks, parse, HSP_SCHEMA)
 
 
 def parse_blast_id(col, parser: str | None):

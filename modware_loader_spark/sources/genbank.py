@@ -20,7 +20,7 @@ from modware_loader_spark.sources.stitch import running_stitch
 
 def parse_genbank(spark: SparkSession, path: str) -> dict:
     """→ {metadata: dict, features: DataFrame, sequence: DataFrame}."""
-    lines = _lines_with_index(spark, path).persist()
+    lines = _lines_with_index(spark, path).localCheckpoint()
 
     meta_rows = lines.filter(
         F.col("line").rlike(r"^(LOCUS|DEFINITION|ACCESSION|VERSION|SOURCE)\s")

@@ -113,7 +113,7 @@ def parse_gff3(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
               attributes map<string,array<string>>, line_idx
     sequences: seq_id, sequence (from the ``##FASTA`` tail; empty if none)
     """
-    lines = _lines_with_index(spark, path).persist()
+    lines = _lines_with_index(spark, path).localCheckpoint()
     fasta_row = (
         lines.filter(F.col("line") == "##FASTA").agg(F.min("idx").alias("i")).first()
     )

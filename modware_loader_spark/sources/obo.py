@@ -58,7 +58,7 @@ def parse_obo(spark: SparkSession, path: str) -> dict:
         .withColumn("key", F.regexp_extract("line", r"^([\w-]+):", 1))
         .withColumn("value", F.trim(F.regexp_replace("line", r"^[\w-]+:\s*", "")))
         .filter(F.col("key") != "")
-        .persist()
+        .localCheckpoint()
     )
 
     header = {
@@ -94,7 +94,6 @@ def parse_obo(spark: SparkSession, path: str) -> dict:
             all_of("xref").alias("raw_xrefs"),
         )
         .filter(F.col("raw_id").isNotNull())
-        .persist()
     )
 
     norm = _normalize(F.col("raw_id"))
@@ -127,7 +126,7 @@ def parse_obo(spark: SparkSession, path: str) -> dict:
         F.col("raw_rel"),
         F.col("raw_alt_ids"),
         F.col("raw_xrefs"),
-    ).persist()
+    ).localCheckpoint()
 
     subj = _normalize(F.col("raw_id"))
     is_a_edges = terms.select(

@@ -3,22 +3,31 @@
 The front door of a crawl-derived training-data pipeline: CCNet / C4 /
 RefinedWeb / FineWeb all start from Common-Crawl-shaped WARC files —
 length-prefixed ``WARC/1.0`` records, in practice one gzip member per
-record so readers can skip without decompressing the world. This module
-provides the three pieces the curation stack upstreams from:
+record so readers can skip without decompressing the world.
 
+Every operator here is one composition of the same pure row functions,
+each run inside ONE ``frames.map_rows`` Arrow stage:
+
+- ``_synth_record_bytes``: one deterministic WARC/1.0 response record
+  (WARC named fields, embedded HTTP/1.1 envelope, gzip member with a
+  fixed mtime) around a page — the synthesis analog of the media synths.
 - ``parse_warc_records``: split a bytes blob into WARC records (plain or
   per-record-gzip), parse the WARC named headers and, for ``response``
   records, the embedded HTTP status line + headers — pure Python over
-  ``zlib``, shipped by value into Arrow workers.
-- ``warc_records``: the Spark source — ``(source_file, record bytes)``
-  rows in, one row per record out ``(target_uri, warc_type, http_status,
-  content_length, body binary)`` via ``mapInPandas``; the body bytes
-  never shuffle (hash/extract/filter before anything wide).
-- ``html_to_text``: stdlib ``html.parser`` boilerplate-light text
-  extraction — drops ``script``/``style``/``noscript``, unescapes
-  entities, collapses whitespace runs — the C4-style "text from markup"
-  step (real pipelines layer readability heuristics on top; the parser
-  here is the honest stdlib core, not a regex strip).
+  ``zlib``.
+- ``html_to_text`` / ``main_content`` / ``html_links``: stdlib
+  ``html.parser`` extraction — visible text (``script``/``style``
+  dropped, entities unescaped, whitespace collapsed: the C4-style "text
+  from markup" step), the densitometric main-content block classifier,
+  and the anchor harvest.
+
+The staged operators (``synth_warc`` → ``warc_records`` →
+``extract_html_text`` / ``extract_main_content``) run one link each; the
+synthesis operators ``synth_extract_html_text`` and
+``synth_extract_main_content`` run the same links chained inside one
+stage, so the record bytes never cross the Python/JVM boundary and the
+two paths cannot drift. Body bytes never shuffle: hashing, extraction
+and filters all run map-side.
 
 Scale shape: gzip is not splittable, so the parallelism unit is the
 FILE — exactly how production crawls are laid out (millions of ~1 GB
@@ -39,12 +48,13 @@ import html as _html
 import io
 import re
 import zlib
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from modware_loader_spark.frames import ensure_min_partitions, map_rows
 
 CRLF = b"\r\n"
 
@@ -303,6 +313,53 @@ def main_content(markup: str, min_words: int = 10) -> dict:
     }
 
 
+_MAIN_CONTENT_FIELDS = [
+    T.StructField("n_blocks", T.IntegerType(), False),
+    T.StructField("n_content_blocks", T.IntegerType(), False),
+    T.StructField("main_text", T.StringType(), False),
+    T.StructField("main_words", T.IntegerType(), False),
+]
+
+_TEXT_SCHEMA = T.StructType(
+    [f for f in WARC_SCHEMA.fields if f.name != "body"]
+    + [T.StructField("text", T.StringType(), True)]
+)
+
+_PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+)
+
+
+def _main_content_row(markup: str | None, min_words: int) -> tuple:
+    """``main_content`` as the ``_MAIN_CONTENT_FIELDS`` tuple (NULL
+    markup reads as the empty page)."""
+    mc = main_content(markup if markup is not None else "", min_words)
+    return mc["n_blocks"], mc["n_content_blocks"], mc["main_text"], mc["main_words"]
+
+
+def _records(payload: bytes | None) -> list[tuple]:
+    """``WARC_SCHEMA`` minus ``source``, one tuple per record of a blob."""
+    if payload is None:
+        return []
+    return [
+        (i, r["target_uri"], r["warc_type"], r["http_status"], r["content_length"], r["body"])
+        for i, r in enumerate(parse_warc_records(payload))
+    ]
+
+
+def _decode(body: bytes | None) -> str | None:
+    """utf-8 with U+FFFD substitution — the JVM ``decode(body, 'UTF-8')``."""
+    return None if body is None else bytes(body).decode("utf-8", "replace")
+
+
+def _body_text(body: bytes | None) -> str | None:
+    markup = _decode(body)
+    return None if markup is None else html_to_text(markup)
+
+
 def extract_main_content(
     df: DataFrame, html_col: str = "html", min_words: int = 10
 ) -> DataFrame:
@@ -313,28 +370,12 @@ def extract_main_content(
     carry = [f for f in df.schema.fields if f.name != html_col]
     if len(carry) == len(df.schema.fields):
         raise ValueError(f"extract_main_content: no column {html_col!r}")
-    schema = T.StructType(
-        list(carry)
-        + [
-            T.StructField("n_blocks", T.IntegerType(), False),
-            T.StructField("n_content_blocks", T.IntegerType(), False),
-            T.StructField("main_text", T.StringType(), False),
-            T.StructField("main_words", T.IntegerType(), False),
-        ]
+    return map_rows(
+        df,
+        lambda markup: [_main_content_row(markup, min_words)],
+        T.StructType(carry + _MAIN_CONTENT_FIELDS),
+        carry=[f.name for f in carry],
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf[[f.name for f in carry]].copy()
-            res = [
-                main_content(m if m is not None else "", min_words)
-                for m in pdf[html_col]
-            ]
-            for k in ("n_blocks", "n_content_blocks", "main_text", "main_words"):
-                out[k] = [r[k] for r in res]
-            yield out
-
-    return df.mapInPandas(batches, schema=schema)
 
 
 def warc_records(media: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -352,31 +393,11 @@ def warc_records(media: DataFrame, payload_col: str = "payload") -> DataFrame:
             f"need at least one non-payload column to carry through as "
             f"'source', got columns {media.columns!r}"
         )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {f.name: [] for f in WARC_SCHEMA.fields}
-            for src, payload in zip(pdf[carry], pdf[payload_col]):
-                recs = (
-                    parse_warc_records(bytes(payload))
-                    if payload is not None
-                    else []
-                )
-                for i, r in enumerate(recs):
-                    rows["source"].append(str(src))
-                    rows["record_no"].append(i)
-                    for k in (
-                        "target_uri",
-                        "warc_type",
-                        "http_status",
-                        "content_length",
-                        "body",
-                    ):
-                        rows[k].append(r[k])
-            yield pd.DataFrame(rows)
-
-    return media.select(carry, payload_col).mapInPandas(
-        batches, schema=WARC_SCHEMA
+    return map_rows(
+        media.select(F.col(carry).cast("string").alias("source"), payload_col),
+        _records,
+        WARC_SCHEMA,
+        carry=["source"],
     )
 
 
@@ -385,23 +406,13 @@ def extract_html_text(records: DataFrame) -> DataFrame:
     body run through ``html_to_text``. One Arrow map stage — the body
     bytes are consumed here and do not survive into the (narrow) output,
     so nothing binary ever shuffles."""
-    schema = T.StructType(
-        [f for f in WARC_SCHEMA.fields if f.name != "body"]
-        + [T.StructField("text", T.StringType(), True)]
+    keep = _TEXT_SCHEMA.fieldNames()[:-1]
+    return map_rows(
+        records.select(*keep, "body"),
+        lambda body: [(_body_text(body),)],
+        _TEXT_SCHEMA,
+        carry=keep,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.drop(columns=["body"]).copy()
-            out["text"] = [
-                html_to_text(bytes(b).decode("utf-8", "replace"))
-                if b is not None
-                else None
-                for b in pdf["body"]
-            ]
-            yield out
-
-    return records.mapInPandas(batches, schema=schema)
 
 
 class _LinkExtractor(HTMLParser):
@@ -484,19 +495,12 @@ def extract_links(
     edge building filters the NULLs.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            src, raw, dst = [], [], []
-            for base, markup in zip(pdf[url_col], pdf[html_col]):
-                if markup is None:
-                    continue
-                for h in html_links(markup):
-                    src.append(base)
-                    raw.append(h)
-                    dst.append(resolve_href(base, h))
-            yield pd.DataFrame({"src_url": src, "href": raw, "dst_url": dst})
+    def row(base, markup):
+        if markup is None:
+            return []
+        return [(base, h, resolve_href(base, h)) for h in html_links(markup)]
 
-    return pages.select(url_col, html_col).mapInPandas(batches, schema=LINKS_SCHEMA)
+    return map_rows(pages.select(url_col, html_col), row, LINKS_SCHEMA)
 
 
 def read_warc(spark, path_glob: str) -> DataFrame:
@@ -511,26 +515,18 @@ def read_warc(spark, path_glob: str) -> DataFrame:
     )
 
 
-def _synth_record_bytes(mid: int, text: str | None, gzip_records: bool) -> bytes:
-    """One deterministic WARC/1.0 response record (WARC named fields,
-    embedded HTTP/1.1 envelope, html-escaped body; gzip member with
-    fixed mtime when ``gzip_records``) — shared by ``synth_warc`` and
-    the fused synth→parse→extract operators below, so fusion cannot
-    drift from the staged chain byte-wise."""
-    body_html = (
-        "<html><head><title>doc "
-        + str(mid)
-        + '</title><style>p{color:black}</style></head><body><p>'
-        + _html.escape(text or "")
-        + "</p><script>var x=1;</script></body></html>"
-    ).encode("utf-8")
+def _synth_record_bytes(mid: int, uri: str, body_html: str, gzip_records: bool) -> bytes:
+    """One deterministic WARC/1.0 response record for page ``mid`` at
+    ``uri``: WARC named fields around an HTTP/1.1 200 envelope around
+    ``body_html``; one gzip member with a fixed mtime when
+    ``gzip_records``. Every synthesized record is built here."""
+    body = body_html.encode("utf-8")
     http = (
         b"HTTP/1.1 200 OK" + CRLF
         + b"Content-Type: text/html" + CRLF
-        + b"Content-Length: " + str(len(body_html)).encode() + CRLF
-        + CRLF + body_html
+        + b"Content-Length: " + str(len(body)).encode() + CRLF
+        + CRLF + body
     )
-    uri = f"https://crawl.example.com/doc/{mid}"
     rec = (
         b"WARC/1.0" + CRLF
         + b"WARC-Type: response" + CRLF
@@ -549,6 +545,21 @@ def _synth_record_bytes(mid: int, text: str | None, gzip_records: bool) -> bytes
     return rec
 
 
+def _doc_record(mid: int, text: str | None, gzip_records: bool) -> bytes:
+    """The ``synth_warc`` page of document ``mid``: title, a style block,
+    the html-escaped text as one paragraph, a script block."""
+    return _synth_record_bytes(
+        mid,
+        f"https://crawl.example.com/doc/{mid}",
+        "<html><head><title>doc "
+        + str(mid)
+        + '</title><style>p{color:black}</style></head><body><p>'
+        + _html.escape(text or "")
+        + "</p><script>var x=1;</script></body></html>",
+        gzip_records,
+    )
+
+
 def synth_warc(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -563,57 +574,12 @@ def synth_warc(
     external SQL engine can restate the construction (URI arithmetic,
     escaped body length) without a WARC stack."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col].astype("int64"), pdf[text_col]):
-                mid = int(mid)
-                ids.append(mid)
-                payloads.append(_synth_record_bytes(mid, text, gzip_records))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def row(mid, text):
+        mid = int(mid)
+        return [(mid, _doc_record(mid, text, gzip_records))]
 
-    from modware_loader_spark.operators.ivf import ensure_min_partitions
-
-    return ensure_min_partitions(df.select(id_col, text_col)).mapInPandas(
-        batches,
-        schema=T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), True),
-            ]
-        ),
-    )
-
-
-def _fused_synth_stage(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    gzip_records: bool,
-    schema: T.StructType,
-    emit,
-) -> DataFrame:
-    """Shared scaffold for the fused synth→parse→extract operators: per
-    input row, build the record bytes (``_synth_record_bytes`` —
-    byte-identical to ``synth_warc``), walk them back through the REAL
-    record parser (``parse_warc_records``: gzip member split, header
-    parse, HTTP envelope strip), and let ``emit(rows, mid, record_no,
-    record)`` append the operator-specific output columns."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {f.name: [] for f in schema.fields}
-            for mid, text in zip(pdf[id_col].astype("int64"), pdf[text_col]):
-                mid = int(mid)
-                rec = _synth_record_bytes(mid, text, gzip_records)
-                for i, r in enumerate(parse_warc_records(rec)):
-                    emit(rows, mid, i, r)
-            yield pd.DataFrame(rows)
-
-    from modware_loader_spark.operators.ivf import ensure_min_partitions
-
-    return ensure_min_partitions(df.select(id_col, text_col)).mapInPandas(
-        batches, schema=schema
+    return map_rows(
+        ensure_min_partitions(df.select(id_col, text_col)), row, _PAYLOAD_SCHEMA
     )
 
 
@@ -623,35 +589,23 @@ def synth_extract_html_text(
     text_col: str = "text",
     gzip_records: bool = True,
 ) -> DataFrame:
-    """Fused ``synth_warc → warc_records → extract_html_text`` for the
-    driver-verified synthesis path: the same three functions composed
-    inside ONE Arrow stage (guide §4: each ``mapInPandas`` is a separate
-    JVM↔Python crossing with an Arrow transpose+serialization on each
-    side, and the staged chain additionally ships every gzip'd WARC
-    payload Python→JVM→Python just to hand it to the next Python stage).
-    Output schema/rows identical to the staged chain by construction
-    (same functions, same order); payload bytes never cross the
-    boundary. The staged operators remain the reusable building blocks —
-    production crawls enter via ``read_warc`` where the payload is READ
+    """``synth_warc → warc_records → extract_html_text`` in ONE Arrow
+    stage: the same row functions chained per input row
+    (``_doc_record`` → ``parse_warc_records`` → ``html_to_text``), so
+    the output equals the staged chain's while the gzip'd payloads never
+    cross the JVM↔Python boundary (each ``mapInPandas`` is a separate
+    crossing with an Arrow transpose+serialization on each side).
+    Production crawls enter via ``read_warc``, where the payload is READ
     in the JVM and must cross once anyway."""
-    schema = T.StructType(
-        [f for f in WARC_SCHEMA.fields if f.name != "body"]
-        + [T.StructField("text", T.StringType(), True)]
+
+    def row(mid, text):
+        mid = int(mid)
+        rec = _doc_record(mid, text, gzip_records)
+        return [(str(mid), *r[:-1], _body_text(r[-1])) for r in _records(rec)]
+
+    return map_rows(
+        ensure_min_partitions(df.select(id_col, text_col)), row, _TEXT_SCHEMA
     )
-
-    def emit(rows, mid, record_no, r):
-        rows["source"].append(str(mid))
-        rows["record_no"].append(record_no)
-        for k in ("target_uri", "warc_type", "http_status", "content_length"):
-            rows[k].append(r[k])
-        body = r["body"]
-        rows["text"].append(
-            html_to_text(bytes(body).decode("utf-8", "replace"))
-            if body is not None
-            else None
-        )
-
-    return _fused_synth_stage(df, id_col, text_col, gzip_records, schema, emit)
 
 
 def synth_extract_main_content(
@@ -661,33 +615,24 @@ def synth_extract_main_content(
     min_words: int = 10,
     gzip_records: bool = True,
 ) -> DataFrame:
-    """Fused ``synth_warc → warc_records → decode → extract_main_content``
-    (see ``synth_extract_html_text`` for the boundary arithmetic): one
-    Arrow stage running the record round trip plus the densitometric
-    block classifier (``main_content``). Output identical to the staged
-    chain by construction; the JVM ``decode(body, 'UTF-8')`` step is
-    ``bytes.decode('utf-8', 'replace')`` (both substitute U+FFFD)."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("n_blocks", T.IntegerType(), False),
-            T.StructField("n_content_blocks", T.IntegerType(), False),
-            T.StructField("main_text", T.StringType(), False),
-            T.StructField("main_words", T.IntegerType(), False),
-        ]
+    """``synth_warc → warc_records → decode → extract_main_content`` in
+    ONE Arrow stage (see ``synth_extract_html_text``): the record round
+    trip plus the densitometric block classifier (``main_content``),
+    one row ``(doc_id, n_blocks, n_content_blocks, main_text,
+    main_words)`` per record."""
+
+    def row(mid, text):
+        mid = int(mid)
+        rec = _doc_record(mid, text, gzip_records)
+        return [(mid, *_main_content_row(_decode(r[-1]), min_words)) for r in _records(rec)]
+
+    return map_rows(
+        ensure_min_partitions(df.select(id_col, text_col)),
+        row,
+        T.StructType(
+            [T.StructField("doc_id", T.LongType(), True)] + _MAIN_CONTENT_FIELDS
+        ),
     )
-
-    def emit(rows, mid, record_no, r):
-        body = r["body"]
-        html = (
-            bytes(body).decode("utf-8", "replace") if body is not None else ""
-        )
-        mc = main_content(html, min_words)
-        rows["doc_id"].append(mid)
-        for k in ("n_blocks", "n_content_blocks", "main_text", "main_words"):
-            rows[k].append(mc[k])
-
-    return _fused_synth_stage(df, id_col, text_col, gzip_records, schema, emit)
 
 
 def synth_warc_linked(
@@ -709,62 +654,26 @@ def synth_warc_linked(
     files are reproducible and an external SQL engine can restate the
     whole construction arithmetically."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col].astype("int64"), pdf[text_col]):
-                m = int(mid)
-                host = f"h{m % n_hosts}.example.org"
-                uri = f"https://www.{host}/d/{m}"
-                a1 = (
-                    f"https://h{(m * 7 + 1) % n_hosts}.example.org/p/"
-                    f"{m % 50}?utm_source=feed#sec1"
-                )
-                a2 = f"//WWW.h{(m * 13 + 2) % n_hosts}.example.org:443/x"
-                hub = (
-                    '<a href="https://h0.example.org/hub">hub</a>'
-                    if m % 4 == 0
-                    else ""
-                )
-                body_html = (
-                    "<html><body><p>"
-                    + _html.escape(text or "")
-                    + f'</p><a href="{a1}">one</a><a href="{a2}">two</a>'
-                    + hub
-                    + '<a href="/about">self</a>'
-                    '<a href="mailto:crawl@example.org">mail</a>'
-                    '<a href="#top">top</a><a>bare</a></body></html>'
-                ).encode("utf-8")
-                http = (
-                    b"HTTP/1.1 200 OK" + CRLF
-                    + b"Content-Type: text/html" + CRLF
-                    + b"Content-Length: " + str(len(body_html)).encode() + CRLF
-                    + CRLF + body_html
-                )
-                rec = (
-                    b"WARC/1.0" + CRLF
-                    + b"WARC-Type: response" + CRLF
-                    + ("WARC-Target-URI: " + uri).encode() + CRLF
-                    + b"WARC-Record-ID: <urn:uuid:" + str(m).encode() + b">" + CRLF
-                    + b"Content-Type: application/http;msgtype=response" + CRLF
-                    + b"Content-Length: " + str(len(http)).encode() + CRLF
-                    + CRLF + http + CRLF + CRLF
-                )
-                buf = io.BytesIO()
-                with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                    gz.write(rec)
-                ids.append(m)
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def row(mid, text):
+        m = int(mid)
+        a1 = (
+            f"https://h{(m * 7 + 1) % n_hosts}.example.org/p/"
+            f"{m % 50}?utm_source=feed#sec1"
+        )
+        a2 = f"//WWW.h{(m * 13 + 2) % n_hosts}.example.org:443/x"
+        hub = '<a href="https://h0.example.org/hub">hub</a>' if m % 4 == 0 else ""
+        body_html = (
+            "<html><body><p>"
+            + _html.escape(text or "")
+            + f'</p><a href="{a1}">one</a><a href="{a2}">two</a>'
+            + hub
+            + '<a href="/about">self</a>'
+            '<a href="mailto:crawl@example.org">mail</a>'
+            '<a href="#top">top</a><a>bare</a></body></html>'
+        )
+        uri = f"https://www.h{m % n_hosts}.example.org/d/{m}"
+        return [(m, _synth_record_bytes(m, uri, body_html, True))]
 
-    from modware_loader_spark.operators.ivf import ensure_min_partitions
-
-    return ensure_min_partitions(df.select(id_col, text_col)).mapInPandas(
-        batches,
-        schema=T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), True),
-            ]
-        ),
+    return map_rows(
+        ensure_min_partitions(df.select(id_col, text_col)), row, _PAYLOAD_SCHEMA
     )

@@ -110,3 +110,48 @@ def test_chado_commands_stay_off_the_python_worker(spark, tmp_path, monkeypatch)
     exported = cli.cmd_chado2gff3(Namespace(catalog=catalog, output=out, dry_run=False))
     assert exported == {"features_exported": 15}
     assert glob.glob(os.path.join(out, "part-*"))
+
+
+def test_loads_leave_no_cached_frames(spark, tmp_path):
+    """The GFF3 and OBO loads materialize their source lines with
+    ``localCheckpoint`` (reclaimed by the ContextCleaner), so a
+    long-lived session's CacheManager stays empty after them."""
+    from modware_loader_spark import cli
+
+    spark.catalog.clearCache()
+    cli.cmd_gff3tochado(
+        Namespace(input=os.path.join(FIXTURES, "pinned_genome.gff3"),
+                  catalog=str(tmp_path / "genome"), dry_run=False)
+    )
+    cli.cmd_obo2chado(
+        Namespace(input=os.path.join(FIXTURES, "pinned_onto_v1.obo"),
+                  catalog=str(tmp_path / "onto"), force=False, dry_run=False)
+    )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_chado2gff3_counts_without_rerunning_the_export(spark, tmp_path, monkeypatch):
+    """``features_exported`` comes from the write itself: no ``count()``
+    runs the export plan a second time, and the number equals the
+    feature lines in the written file."""
+    from modware_loader_spark import cli
+
+    catalog = str(tmp_path / "catalog")
+    out = str(tmp_path / "out.gff3")
+    cli.cmd_gff3tochado(
+        Namespace(input=os.path.join(FIXTURES, "pinned_genome.gff3"), catalog=catalog,
+                  dry_run=False)
+    )
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count on the export path")
+
+    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    exported = cli.cmd_chado2gff3(Namespace(catalog=catalog, output=out, dry_run=False))
+    lines = [
+        line
+        for part in glob.glob(os.path.join(out, "part-*"))
+        for line in open(part).read().splitlines()
+    ]
+    assert exported == {"features_exported": sum(not ln.startswith("#") for ln in lines)}
+    assert exported["features_exported"] == 15

@@ -82,7 +82,10 @@ def main() -> None:
         prof: dict = {}
         samples = []
         for r in range(runs):
-            jobs_before = len(tracker.getJobIdsForGroup(None) or [])
+            # one job group per run: the jobs of this run are exactly the
+            # group's, whatever the status store has already evicted
+            group = f"profile:{name}:{r}"
+            sc.setJobGroup(group, f"{name} run {r}")
             t0 = time.perf_counter()
             try:
                 df = qs[name](spark, SF_DIR)
@@ -127,8 +130,11 @@ def main() -> None:
                 spark.catalog.clearCache()  # same sweep as bench.py
             except Exception:
                 pass
-            jobs_after = len(tracker.getJobIdsForGroup(None) or [])
-            prof.setdefault("jobs_per_run", []).append(jobs_after - jobs_before)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            prof.setdefault("jobs_per_run", []).append(
+                len(tracker.getJobIdsForGroup(group))
+            )
+            sc._jsc.clearJobGroup()
         prof["samples"] = samples
         if samples:
             prof["warm"] = min(s["total"] for s in samples)
