@@ -1,6 +1,12 @@
-"""Chado catalog persistence: one parquet directory per table (the
-production shape of the in-memory loader state), with a JDBC mirror for a
-real Chado database.
+"""The Chado catalog: the one schema every loader shares, its live state,
+and its persistence — one parquet directory per table, with a JDBC mirror
+for a real Chado database.
+
+The reference loads everything into one database, and so do the GFF3,
+GenBank, ontology and closure loaders here: each declares the tables it
+uses (columns from :data:`SCHEMAS`) in one :class:`ChadoState`, which
+:func:`save_loader_state` / :func:`restore_loader_state` persist with its
+scalar state. A genome and an ontology share one id space per table.
 
 The reference's persistent state is rows in Pg/SQLite/Oracle via
 DBIx::Class (``lib/Modware/Role/Command/WithBCS.pm:118-121``); its
@@ -21,9 +27,162 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from modware_loader_spark.frames import local_frame
+from modware_loader_spark.operators.merge import find_or_create
+
+SCHEMAS = {
+    # general + cv module
+    "db": "db_id long, name string",
+    "cv": "cv_id long, name string",
+    "dbxref": "dbxref_id long, accession string, db_id long",
+    "cvterm": (
+        "cvterm_id long, name string, definition string, is_obsolete int, "
+        "is_relationshiptype int, cv_id long, dbxref_id long"
+    ),
+    "cvterm_relationship": "object_id long, subject_id long, type_id long",
+    "cvprop": "cv_id long, type_id long, value string",
+    "cvtermsynonym": "cvterm_id long, synonym string, type_id long",
+    "cvtermprop": "cvterm_id long, type_id long, value string",
+    "cvterm_dbxref": "cvterm_id long, dbxref_id long",
+    "cvtermpath": (
+        "object_id long, subject_id long, type_id long, pathdistance int, cv_id long"
+    ),
+    # sequence + companalysis module
+    "feature": (
+        "feature_id long, uniquename string, name string, type_id long, "
+        "organism_id long, dbxref_id long, residues string, md5checksum string, "
+        "seqlen long"
+    ),
+    "featureloc": (
+        "feature_id long, srcfeature_id long, fmin long, fmax long, "
+        "strand int, phase int, rank int"
+    ),
+    "analysis": "analysis_id long, program string, programversion string",
+    "analysisfeature": "feature_id long, significance double, analysis_id long",
+    "synonym": "synonym_id long, name string, type_id long, synonym_sgml string",
+    "feature_synonym": "feature_id long, synonym_id long, pub_id long",
+    "feature_relationship": "object_id long, subject_id long, type_id long",
+    "feature_dbxref": "dbxref_id long, feature_id long",
+    "featureprop": "feature_id long, value string, type_id long",
+}
+
+
+class ChadoState:
+    """The tables of one Chado schema, plus its scalar state."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.tables: dict[str, DataFrame] = {}
+        self.auto_counter = 0
+        self.metadata: dict[str, str] = {}
+
+    def scalars(self) -> dict:
+        """The scalar state: the auto-id counter (the analog of the
+        reference's DB sequence position — without it a fresh process would
+        mint colliding auto uniquenames) and the ontology metadata."""
+        return {"auto_counter": self.auto_counter, "metadata": self.metadata}
+
+    def restore(
+        self, load: Callable[[list[str]], dict[str, DataFrame]], meta: dict | None
+    ) -> None:
+        """Replace each declared table that ``load(names)`` returns, and the
+        scalar state by ``meta`` (as :meth:`scalars` gave it), if any."""
+        self.tables.update(load(list(self.tables)))
+        if meta is not None:
+            self.auto_counter, self.metadata = meta["auto_counter"], meta["metadata"]
+
+    def declare(self, names: Iterable[str]) -> None:
+        """Add each table of ``names`` not held yet, empty."""
+        for name in names:
+            if name not in self.tables:
+                self.tables[name] = local_frame(self.spark, [], SCHEMAS[name])
+
+    def term_ids(self, cv: str | None = None) -> DataFrame:
+        """(name, cvterm_id) of the terms of ``cv``, or of every term."""
+        terms = self.tables["cvterm"]
+        if cv is not None:
+            in_cv = self.tables["cv"].filter(F.col("name") == cv).select("cv_id")
+            terms = terms.join(F.broadcast(in_cv), "cv_id", "left_semi")
+        return terms.select("name", "cvterm_id")
+
+    def term_id(self, name: str, cv: str) -> int:
+        return self.term_ids(cv).filter(F.col("name") == name).first().cvterm_id
+
+    def term_keys(self) -> DataFrame:
+        """Every term under the natural key of its dbxref: (cvterm_id,
+        accession, db, cv_id, is_relationshiptype)."""
+        t = self.tables
+        db = t["db"].select("db_id", F.col("name").alias("db"))
+        return (
+            t["cvterm"].join(t["dbxref"], "dbxref_id").join(F.broadcast(db), "db_id")
+            .select("cvterm_id", "accession", "db", "cv_id", "is_relationshiptype")
+        )
+
+    def resolve_terms(self, df: DataFrame, *roles: str) -> DataFrame:
+        """M5 key resolution (``insert_relationship``,
+        ``share/postgresql.lib:195-219``): for each role, inner-join
+        ``df``'s ``role``/``role_db`` accession and db name to a term of
+        :meth:`term_keys`, adding ``role_id``, ``role_cv_id`` and
+        ``role_is_rel``."""
+        keys = self.term_keys()
+        for r in roles:
+            df = df.join(
+                keys.select(
+                    F.col("accession").alias(r), F.col("db").alias(f"{r}_db"),
+                    F.col("cvterm_id").alias(f"{r}_id"), F.col("cv_id").alias(f"{r}_cv_id"),
+                    F.col("is_relationshiptype").alias(f"{r}_is_rel"),
+                ),
+                [r, f"{r}_db"],
+            )
+        return df
+
+    def find_or_create_names(self, table: str, names: list[str] | DataFrame) -> None:
+        """``db`` or ``cv`` rows by name (a list, or a ``name`` frame)."""
+        if not isinstance(names, DataFrame):
+            names = local_frame(self.spark, names, "name string")
+        self.tables[table], _ = find_or_create(
+            self.tables[table], names, ["name"], f"{table}_id"
+        )
+
+    def find_or_create_terms(self, terms: DataFrame, dbxrefs: DataFrame | None = None) -> None:
+        """find_or_create_cvterm_namespace (``Ontology.pm:295-305``) for the
+        ``(name, cv, accession)`` rows of ``terms``: each cv is found or
+        created by name, and each (name, cv) pair that has no cvterm yet
+        gets an ``internal``-db dbxref ``accession`` and a cvterm. The
+        ``(accession, db_id)`` rows of ``dbxrefs`` are found or created in
+        the same dbxref statement. The ``internal`` db must exist."""
+        t = self.tables
+        self.find_or_create_names("cv", terms.select(F.col("cv").alias("name")))
+        internal = t["db"].filter(F.col("name") == "internal").first().db_id
+        missing = terms.join(
+            F.broadcast(t["cv"].withColumnRenamed("name", "cv")), "cv"
+        ).join(t["cvterm"].select("name", "cv_id"), ["name", "cv_id"], "left_anti")
+        xrefs = missing.select("accession", F.lit(internal).cast("long").alias("db_id"))
+        if dbxrefs is not None:
+            # the caller's rows lead the union: led by the term rows, a
+            # later plan over the checkpointed dbxref table fails in
+            # Spark's union constraint rewrite ("key not found: accession")
+            xrefs = dbxrefs.unionByName(xrefs)
+        t["dbxref"], _ = find_or_create(
+            t["dbxref"], xrefs, ["accession", "db_id"], "dbxref_id"
+        )
+        dx = t["dbxref"].filter(F.col("db_id") == internal).select(
+            "accession", "dbxref_id"
+        )
+        cand = missing.join(F.broadcast(dx), "accession").select(
+            "name",
+            F.lit(None).cast("string").alias("definition"),
+            F.lit(0).alias("is_obsolete"),
+            F.lit(0).alias("is_relationshiptype"),
+            "cv_id",
+            "dbxref_id",
+        )
+        t["cvterm"], _ = find_or_create(t["cvterm"], cand, ["name", "cv_id"], "cvterm_id")
 
 
 class ChadoCatalog:
@@ -138,46 +297,12 @@ class ChadoCatalog:
         }
 
 
-def _state_tables(loader) -> dict[str, DataFrame]:
-    """A loader's tables plus its dims, saved as ``dim_<name>``."""
-    dims = getattr(loader, "dims", {})
-    return {**loader.tables, **{f"dim_{name}": df for name, df in dims.items()}}
-
-
-def _state_meta(loader) -> dict:
-    """A loader's scalar state: the auto-id counter (the analog of the
-    reference's DB sequence position — without it a fresh process would
-    mint colliding auto uniquenames) and its metadata."""
-    return {
-        "auto_counter": getattr(loader, "_auto_counter", 0),
-        "metadata": getattr(loader, "metadata", {}),
-    }
-
-
-def _restore_state(
-    loader, load: Callable[[list[str]], dict[str, DataFrame]], meta: dict | None
-) -> None:
-    """Rehydrate ``loader`` from ``load(names)``, which returns the saved
-    tables among ``names``, and from the scalar state ``meta`` (as written
-    by :func:`_state_meta`), if there is one."""
-    loader.tables.update(load(list(loader.tables)))
-    dims = getattr(loader, "dims", {})
-    for name, df in load([f"dim_{name}" for name in dims]).items():
-        dims[name.removeprefix("dim_")] = df
-    if meta is None:
-        return
-    if hasattr(loader, "_auto_counter"):
-        loader._auto_counter = meta.get("auto_counter", 0)
-    if hasattr(loader, "metadata"):
-        loader.metadata.update(meta.get("metadata", {}))
-
-
 def save_loader_state(loader, catalog: ChadoCatalog) -> None:
-    """Persist a loader's tables + dims + scalar state."""
-    catalog.save(_state_tables(loader))
+    """Persist the tables and scalar state of ``loader``'s Chado state."""
+    catalog.save(loader.chado.tables)
     os.makedirs(catalog.root, exist_ok=True)
     with open(os.path.join(catalog.root, "_meta.json"), "w") as fh:
-        json.dump(_state_meta(loader), fh)
+        json.dump(loader.chado.scalars(), fh)
 
 
 def restore_loader_state(loader, catalog: ChadoCatalog) -> None:
@@ -186,7 +311,7 @@ def restore_loader_state(loader, catalog: ChadoCatalog) -> None:
     if os.path.exists(meta_path):
         with open(meta_path) as fh:
             meta = json.load(fh)
-    _restore_state(loader, catalog.load, meta)
+    loader.chado.restore(catalog.load, meta)
 
 
 # FK-parent-first write order for a REAL Chado RDBMS sink (the reference
@@ -195,8 +320,7 @@ def restore_loader_state(loader, catalog: ChadoCatalog) -> None:
 # referents or a constraint-enforcing database rejects the batch. The
 # embedded-Derby mirror used in tests auto-creates constraint-free
 # tables, but the order is applied unconditionally so the test exercises
-# the exact write sequence a Postgres Chado would need. ``dim_`` staging
-# prefixes order like their base table.
+# the exact write sequence a Postgres Chado would need.
 JDBC_TABLE_ORDER = [
     "db",
     "dbxref",
@@ -221,11 +345,7 @@ JDBC_TABLE_ORDER = [
 
 def _jdbc_ordered(tables: dict[str, DataFrame]) -> list[tuple[str, DataFrame]]:
     rank = {n: i for i, n in enumerate(JDBC_TABLE_ORDER)}
-    key = lambda kv: (
-        rank.get(kv[0][4:] if kv[0].startswith("dim_") else kv[0], len(rank)),
-        kv[0],
-    )
-    return sorted(tables.items(), key=key)
+    return sorted(tables.items(), key=lambda kv: (rank.get(kv[0], len(rank)), kv[0]))
 
 
 def save_loader_state_jdbc(
@@ -234,19 +354,22 @@ def save_loader_state_jdbc(
     properties: dict | None = None,
     batchsize: int = 4000,
 ) -> None:
-    """Persist a loader's tables + dims + scalar state over JDBC — the
-    live-database twin of :func:`save_loader_state` (same table set, the
-    database replaces the parquet directory). Tables write FK-parents
-    first (:data:`JDBC_TABLE_ORDER`), each with ``overwrite`` (the merge
+    """Persist the tables and scalar state of ``loader``'s Chado state
+    over JDBC — the live-database twin of :func:`save_loader_state` (same
+    table set, the database replaces the parquet directory). Tables write
+    FK-parents first (:data:`JDBC_TABLE_ORDER`), each with ``overwrite`` (the merge
     operators already produced the full post-merge state; a real Chado
     deployment with immovable FK constraints would instead append the
     ``new_*`` deltas inside one transaction — same order either way).
     Scalar state (auto-id counter = the reference's sequence position,
     plus loader metadata) lands in a 1-row-per-key ``loader_meta`` table
-    so a fresh process resumes without minting colliding ids."""
+    so a fresh process resumes without minting colliding ids. Its
+    ``tables`` manifest adds this loader's tables to those saved before,
+    so a loader that declares fewer tables leaves the others restorable."""
     props = dict(properties or {})
+    saved = (_jdbc_meta(loader.spark, url, props) or {}).get("tables", [])
     props.setdefault("batchsize", str(batchsize))
-    tables = _state_tables(loader)
+    tables = loader.chado.tables
     for name, df in _jdbc_ordered(tables):
         # Break lineage before the overwrite: a restored loader's
         # untouched tables still READ from the very JDBC table being
@@ -258,9 +381,9 @@ def save_loader_state_jdbc(
             url, name, properties=props
         )
     # one JSON value per key (the counter's JSON text is its decimal)
-    meta = {**_state_meta(loader), "tables": sorted(tables)}
+    meta = {**loader.chado.scalars(), "tables": sorted({*saved, *tables})}
     meta_rows = [(k, json.dumps(v)) for k, v in meta.items()]
-    loader.spark.createDataFrame(meta_rows, "k string, v string").write.mode(
+    local_frame(loader.spark, meta_rows, "k string, v string").write.mode(
         "overwrite"
     ).jdbc(url, "loader_meta", properties=props)
 
@@ -313,25 +436,11 @@ def _jdbc_read_state(
     return reader.load()
 
 
-def restore_loader_state_jdbc(
-    loader, url: str, properties: dict | None = None
-) -> None:
-    """Rehydrate a loader from a JDBC-resident state written by
-    :func:`save_loader_state_jdbc`: the ``loader_meta`` manifest names
-    the saved tables, each is read back as the loader's live side (so
-    the next load's staging DataFrames diff against database-resident
-    rows), and the auto-id counter resumes. Production note: these
-    reads are unpartitioned single-task scans, right for dimension /
-    merge-target tables; a bulk re-export of a billion-row feature
-    table would pass ``partitionColumn`` bounds instead."""
-    props = dict(properties or {})
+def _jdbc_meta(spark: SparkSession, url: str, props: dict) -> dict | None:
+    """The ``loader_meta`` rows written by :func:`save_loader_state_jdbc`,
+    or None when the database holds no saved state yet."""
     try:
-        meta = {
-            r["k"]: r["v"]
-            for r in _jdbc_read_state(
-                loader.spark, url, "loader_meta", props
-            ).collect()
-        }
+        rows = _jdbc_read_state(spark, url, "loader_meta", props).collect()
     except Exception as exc:
         # ONLY a missing loader_meta table means "first run against this
         # database". Any other failure (DB locked by another JVM, network
@@ -349,12 +458,28 @@ def restore_loader_state_jdbc(
                 "object not found",
             )
         ):
-            return  # nothing saved yet — keep the loader's empty state
+            return None
         raise
-    meta = {k: json.loads(v) for k, v in meta.items()}
+    return {r["k"]: json.loads(r["v"]) for r in rows}
+
+
+def restore_loader_state_jdbc(
+    loader, url: str, properties: dict | None = None
+) -> None:
+    """Rehydrate a loader from a JDBC-resident state written by
+    :func:`save_loader_state_jdbc`: the ``loader_meta`` manifest names
+    the saved tables, each is read back as the loader's live side (so
+    the next load's staging DataFrames diff against database-resident
+    rows), and the auto-id counter resumes. Production note: these
+    reads are unpartitioned single-task scans, right for dimension /
+    merge-target tables; a bulk re-export of a billion-row feature
+    table would pass ``partitionColumn`` bounds instead."""
+    props = dict(properties or {})
+    meta = _jdbc_meta(loader.spark, url, props)
+    if meta is None:
+        return  # nothing saved yet — keep the loader's empty state
     saved = set(meta.get("tables", []))
-    _restore_state(
-        loader,
+    loader.chado.restore(
         lambda names: {
             name: _jdbc_read_state(loader.spark, url, name, props)
             for name in names

@@ -36,12 +36,14 @@ import argparse
 import os
 import json
 import sys
+from functools import partial
 
 from modware_loader_spark.catalog import (
     ChadoCatalog,
     restore_loader_state,
     save_loader_state,
 )
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.session import get_spark
 
 
@@ -53,75 +55,67 @@ def _gff3_loader(spark, catalog):
     return loader
 
 
-def cmd_gff3tochado(args) -> dict:
-    spark = get_spark("gff3tochado")
+def _load(args, name: str, make_loader, load) -> dict:
+    """One load command: restore the catalog into ``make_loader(spark)``,
+    run ``load(loader)``, and save the catalog unless ``--dry-run``."""
+    spark = get_spark(name)
     catalog = ChadoCatalog(spark, args.catalog)
-    loader = _gff3_loader(spark, catalog)
-    counts = loader.load_file(args.input)
+    loader = make_loader(spark)
+    restore_loader_state(loader, catalog)
+    counts = load(loader)
     if not args.dry_run:
         save_loader_state(loader, catalog)
     return counts
+
+
+def cmd_gff3tochado(args) -> dict:
+    from modware_loader_spark.plans.gff3_load import ChadoGFF3Loader
+
+    return _load(args, "gff3tochado", ChadoGFF3Loader, lambda ldr: ldr.load_file(args.input))
 
 
 def cmd_gb2chado(args) -> dict:
     from modware_loader_spark.plans.genbank_load import GenBankChadoLoader
 
-    spark = get_spark("gb2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = GenBankChadoLoader(
-        spark,
+    make = partial(
+        GenBankChadoLoader,
         reference_type=args.reference_type,
         id_prefix=args.id_prefix,
         mitochondrial=args.mitochondrial,
     )
-    restore_loader_state(loader.gff3, catalog)
-    counts = loader.load_file(args.input)
-    if not args.dry_run:
-        save_loader_state(loader.gff3, catalog)
-    return counts
+    return _load(args, "gb2chado", make, lambda ldr: ldr.load_file(args.input))
 
 
 def cmd_obo2chado(args) -> dict:
     from modware_loader_spark.plans.ontology_load import ChadoOntologyLoader
 
-    spark = get_spark("obo2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = ChadoOntologyLoader(spark)
-    restore_loader_state(loader, catalog)
-    counts = loader.load_file(args.input, force=args.force)
-    if not args.dry_run:
-        save_loader_state(loader, catalog)
-    return counts
+    return _load(
+        args, "obo2chado", ChadoOntologyLoader,
+        lambda ldr: ldr.load_file(args.input, force=args.force),
+    )
 
 
 def cmd_gbassembly2chado(args) -> dict:
     from modware_loader_spark.plans.genbank_assembly import load_assembly
     from modware_loader_spark.plans.genbank_load import GenBankChadoLoader
 
-    spark = get_spark("gbassembly2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = GenBankChadoLoader(
-        spark, reference_type=args.reference_type, id_prefix=args.prefix
+    make = partial(
+        GenBankChadoLoader, reference_type=args.reference_type, id_prefix=args.prefix
     )
-    restore_loader_state(loader.gff3, catalog)
-    counts = load_assembly(loader, args.input, source=args.source, dbsource=args.dbsource)
-    if not args.dry_run:
-        save_loader_state(loader.gff3, catalog)
-    return counts
+    return _load(
+        args, "gbassembly2chado", make,
+        lambda ldr: load_assembly(ldr, args.input, source=args.source, dbsource=args.dbsource),
+    )
 
 
 def cmd_adhocobo2chado(args) -> dict:
     from modware_loader_spark.plans.adhoc_ontology import adhoc_load
     from modware_loader_spark.plans.ontology_load import ChadoOntologyLoader
 
-    spark = get_spark("adhocobo2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = ChadoOntologyLoader(spark)
-    restore_loader_state(loader, catalog)
-    counts = adhoc_load(loader, args.input, include_metadata=args.include_metadata)
-    if not args.dry_run:
-        save_loader_state(loader, catalog)
-    return counts
+    return _load(
+        args, "adhocobo2chado", ChadoOntologyLoader,
+        lambda ldr: adhoc_load(ldr, args.input, include_metadata=args.include_metadata),
+    )
 
 
 def cmd_dropontofromchado(args) -> dict:
@@ -130,33 +124,26 @@ def cmd_dropontofromchado(args) -> dict:
         drop_ontology,
     )
 
-    spark = get_spark("dropontofromchado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = ChadoOntologyLoader(spark)
-    restore_loader_state(loader, catalog)
-    counts: dict[str, int] = {}
-    for ns in args.namespace.split(","):
-        c = drop_ontology(loader, ns.strip(), partial=args.partial_lookup)
-        for k, v in c.items():
-            counts[k] = counts.get(k, 0) + v
-    if not args.dry_run:
-        save_loader_state(loader, catalog)
-    return counts
+    def drop(loader) -> dict:
+        counts: dict[str, int] = {}
+        for ns in args.namespace.split(","):
+            c = drop_ontology(loader, ns.strip(), partial=args.partial_lookup)
+            for k, v in c.items():
+                counts[k] = counts.get(k, 0) + v
+        return counts
+
+    return _load(args, "dropontofromchado", ChadoOntologyLoader, drop)
 
 
 def cmd_oboclosure2chado(args) -> dict:
     from modware_loader_spark.plans.closure_load import ClosureLoader
     from modware_loader_spark.plans.ontology_load import ChadoOntologyLoader
 
-    spark = get_spark("oboclosure2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    onto = ChadoOntologyLoader(spark)
-    closure = ClosureLoader(onto)  # adds the empty cvtermpath restore fills
-    restore_loader_state(onto, catalog)
-    counts = closure.load_file(args.input)
-    if not args.dry_run:
-        save_loader_state(onto, catalog)
-    return counts
+    return _load(
+        args, "oboclosure2chado",
+        lambda spark: ClosureLoader(ChadoOntologyLoader(spark)),
+        lambda closure: closure.load_file(args.input),
+    )
 
 
 def cmd_chado2gff3(args) -> dict:
@@ -258,14 +245,14 @@ def cmd_gaf2chado(args) -> dict:
     cvterms = cvterm.join(dbxref, "dbxref_id").select("cvterm_id", "accession")
     pubs = got.get("pub")
     if pubs is None:
-        pubs = spark.createDataFrame([], "pub_id long, uniquename string")
+        pubs = local_frame(spark, [], "pub_id long, uniquename string")
     syn = got.get("cvtermsynonym")
     evidence = (
         syn.join(cvterm.select("cvterm_id"), "cvterm_id", "left_semi").select(
             "cvterm_id", F.col("synonym")
         )
         if syn is not None
-        else spark.createDataFrame([], "cvterm_id long, synonym string")
+        else local_frame(spark, [], "cvterm_id long, synonym string")
     )
     loader = GAFLoader(spark, features=features, cvterms=cvterms, pubs=pubs,
                        evidence=evidence)
@@ -756,13 +743,13 @@ def cmd_chado2gaf(args) -> dict:
     )
     pubs = got.get("pub")
     if pubs is None:
-        pubs = spark.createDataFrame([], "pub_id long, uniquename string")
+        pubs = local_frame(spark, [], "pub_id long, uniquename string")
     loader = GAFLoader(
         spark,
         features=got["feature"],
         cvterms=cvterms,
         pubs=pubs,
-        evidence=spark.createDataFrame([], "cvterm_id long, synonym string"),
+        evidence=local_frame(spark, [], "cvterm_id long, synonym string"),
     )
     loader.feature_cvterm = got["feature_cvterm"]
     if "feature_cvtermprop" in got:

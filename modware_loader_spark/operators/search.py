@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from modware_loader_spark.frames import ensure_min_partitions
+from modware_loader_spark.frames import ensure_min_partitions, local_frame
 from modware_loader_spark.operators.text import tokens
 
 
@@ -64,7 +64,7 @@ def _materialize_head(head: DataFrame) -> DataFrame:
             f"_materialize_head got more than {_MAX_HEAD_ROWS} rows — "
             "callers must pre-limit to a small top-k head"
         )
-    return head.sparkSession.createDataFrame(rows, head.schema)
+    return local_frame(head.sparkSession, rows, head.schema)
 
 
 def _rank_head(head: DataFrame, score_col: str, id_col: str = "doc_id") -> DataFrame:

@@ -67,8 +67,9 @@ def adhoc_load(
         raise ValueError("OBO file has neither default-namespace nor ontology header")
 
     # load_namespaces: global cv + _global db + helper namespaces
-    onto._find_or_create_names("db", ["_global", "internal"])
-    onto._find_or_create_names("cv", [cv_name])
+    onto.bootstrap()
+    onto.chado.find_or_create_names("db", ["_global", "internal"])
+    onto.chado.find_or_create_names("cv", [cv_name])
     cv_id = (
         onto.tables["cv"].filter(F.col("name") == cv_name).first().cv_id
     )
@@ -175,9 +176,7 @@ def _refresh_metadata(
     spark = onto.spark
     counts: dict[str, int] = {}
     scope_ids = onto._scope_term_ids()
-    comment_type_id = (
-        onto.tables["cvterm"].filter(F.col("name") == "comment").first().cvterm_id
-    )
+    comment_type_id = onto.chado.term_id("comment", "cvterm_property_type")
     keyed = (
         onto.tables["cvterm"]
         .filter(F.col("cv_id") == cv_id)
@@ -267,27 +266,17 @@ def _create_relationships(
         parsed["relationships"], cv_name,
         [("subject_db", "subject"), ("object_db", "object"), ("type_db", "type")],
     )
-    dbmap = F.broadcast(onto.tables["db"])
-    keyed = (
-        onto.tables["cvterm"]
-        .filter(F.col("cv_id") == cv_id)
-        .join(onto.tables["dbxref"], "dbxref_id")
-        .join(dbmap.select("db_id", F.col("name").alias("db")), "db_id")
-        .select("cvterm_id", "db", "accession")
-        .localCheckpoint()
-    )
     n_all = rels.count()
-
-    def resolve(df, db_col, acc_col, id_alias):
-        k = keyed.withColumnsRenamed(
-            {"db": db_col, "accession": acc_col, "cvterm_id": id_alias}
+    resolved = (
+        onto.chado.resolve_terms(rels, "subject", "object", "type")
+        .filter(
+            (F.col("subject_cv_id") == cv_id)
+            & (F.col("object_cv_id") == cv_id)
+            & (F.col("type_cv_id") == cv_id)
         )
-        return df.join(F.broadcast(k), [db_col, acc_col])
-
-    resolved = resolve(rels, "subject_db", "subject", "subject_id")
-    resolved = resolve(resolved, "object_db", "object", "object_id")
-    resolved = resolve(resolved, "type_db", "type", "type_id")
-    resolved = resolved.select("subject_id", "object_id", "type_id").distinct()
+        .select("subject_id", "object_id", "type_id")
+        .distinct()
+    )
 
     onto.tables["cvterm_relationship"], fresh = find_or_create(
         onto.tables["cvterm_relationship"], resolved, ["subject_id", "object_id", "type_id"]

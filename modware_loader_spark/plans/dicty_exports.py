@@ -56,7 +56,7 @@ CANONICAL_PRIORITY = ("dictyBase Curator", "Sequencing Center")
 
 def _type_names(loader):
     return F.broadcast(
-        loader.dims["cvterm"].select(
+        loader.chado.term_ids("sequence").select(
             F.col("cvterm_id").alias("type_id"), F.col("name").alias("type_name")
         )
     )
@@ -65,7 +65,7 @@ def _type_names(loader):
 def _gff_sources(loader) -> DataFrame:
     """(feature_id, gff_source): each feature's GFF_source dbxref accession
     (the dicty convention for 'which pipeline predicted this')."""
-    db_gff = loader.dims["db"].filter(F.col("name") == "GFF_source").select("db_id")
+    db_gff = loader.tables["db"].filter(F.col("name") == "GFF_source").select("db_id")
     links = (
         loader.tables["feature_dbxref"]
         .select("feature_id", "dbxref_id")
@@ -127,8 +127,10 @@ def _located(loader) -> DataFrame:
 
 def _rel_children(loader, rel_types: list[str]) -> DataFrame:
     """(object_id, subject_id) pairs for the given relationship types."""
-    rel_ids = loader.dims["cvterm"].filter(F.col("name").isin(rel_types)).select(
-        F.col("cvterm_id").alias("type_id")
+    rel_ids = (
+        loader.chado.term_ids("sequence")
+        .filter(F.col("name").isin(rel_types))
+        .select(F.col("cvterm_id").alias("type_id"))
     )
     return loader.tables["feature_relationship"].join(
         F.broadcast(rel_ids), "type_id", "left_semi"
@@ -396,7 +398,7 @@ def _secondary_dbxrefs(loader) -> DataFrame:
     ``db:accession`` with a leading ``DB:`` stripped from the db name and
     GFF_source links excluded — the base writer's Dbxref attribute
     (reference ``FeatureWriter/GFF3.pm:92-101``)."""
-    dbs = loader.dims["db"].select("db_id", F.col("name").alias("db_name"))
+    dbs = loader.tables["db"].select("db_id", F.col("name").alias("db_name"))
     return (
         loader.tables["feature_dbxref"]
         .join(loader.tables["dbxref"], "dbxref_id")

@@ -741,7 +741,7 @@ def s5_genbank_load_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ldr = GenBankChadoLoader(spark)
     ldr.load_file(_GENBANK_FIXTURE)
-    types = ldr.dims["cvterm"].select(
+    types = ldr.chado.term_ids("sequence").select(
         F.col("cvterm_id").alias("type_id"), F.col("name").alias("ftype")
     )
     locs = ldr.tables["featureloc"].select("feature_id", "fmin", "fmax", "strand")

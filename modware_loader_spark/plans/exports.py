@@ -56,7 +56,7 @@ def chado2gff3_rows(loader: ChadoGFF3Loader) -> DataFrame:
     start, end, score, strand, phase, attributes)."""
     t = loader.tables
     type_names = F.broadcast(
-        loader.dims["cvterm"].select(
+        loader.chado.term_ids("sequence").select(
             F.col("cvterm_id").alias("type_id"), F.col("name").alias("type")
         )
     )
@@ -124,11 +124,10 @@ def spliced_sequences(
     → (parent, strand, n_segments, spliced)
     """
     t = loader.tables
-    cv = loader.dims["cvterm"]
     child_tid = F.broadcast(
-        cv.filter((F.col("cv") == "sequence") & (F.col("name") == child_type)).select(
-            F.col("cvterm_id").alias("type_id")
-        )
+        loader.chado.term_ids("sequence")
+        .filter(F.col("name") == child_type)
+        .select(F.col("cvterm_id").alias("type_id"))
     )
     children = t["feature"].join(child_tid, "type_id", "left_semi").select(
         F.col("feature_id").alias("subject_id")
@@ -208,10 +207,8 @@ def chado2alignment_rows(
     """
     t = loader.tables
     match_type = match_type or f"{feature_type}_match"
-    cv = loader.dims["cvterm"]
-    type_id_row = cv.filter(
-        (F.col("name") == feature_type) & (F.col("cv") == "sequence")
-    ).first()
+    seq_terms = loader.chado.term_ids("sequence")
+    type_id_row = seq_terms.filter(F.col("name") == feature_type).first()
     if type_id_row is None:
         return local_frame(
             loader.spark,
@@ -221,7 +218,9 @@ def chado2alignment_rows(
             "attributes map<string,array<string>>",
         )
     prop_names = F.broadcast(
-        cv.select(F.col("cvterm_id").alias("type_id"), F.col("name").alias("prop"))
+        loader.chado.term_ids("feature_property").select(
+            F.col("cvterm_id").alias("type_id"), F.col("name").alias("prop")
+        )
     )
 
     fkey = t["feature"].select("feature_id", "uniquename", "name")
@@ -300,7 +299,7 @@ def chado2alignment_rows(
         F.map_from_entries(entries).alias("attributes"),
     )
 
-    part_of = cv.filter(F.col("name") == "part_of").first()
+    part_of = seq_terms.filter(F.col("name") == "part_of").first()
     rels = t["feature_relationship"]
     if part_of is not None:
         rels = rels.filter(F.col("type_id") == part_of.cvterm_id)

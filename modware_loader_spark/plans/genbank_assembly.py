@@ -165,8 +165,7 @@ def load_assembly(
     features, sequences = assembly_to_gff3_rows(
         loader, elements, source=source, dbsource=dbsource
     )
-    staging = loader.gff3._build_staging(features, sequences)
-    counts = loader.gff3._merge(staging)
+    counts = loader._merge(loader._build_staging(features, sequences))
     # gaps carry an explicit seqlen (Assembly.pm:430-436) but no residues,
     # and the staging path derives seqlen only from residues — patch it in
     gap_lens = features.filter(F.col("type") == "gap").select(

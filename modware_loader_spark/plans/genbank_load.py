@@ -383,10 +383,10 @@ def genbank_to_gff3_rows(
     return features_out, sequences_out
 
 
-class GenBankChadoLoader:
-    """gb2chado / gbassembly2chado: thin front-end over ChadoGFF3Loader —
-    the staging/merge/catalog machinery is shared, only the row shaping is
-    GenBank-specific."""
+class GenBankChadoLoader(ChadoGFF3Loader):
+    """gb2chado / gbassembly2chado: the GFF3 loader with GenBank row
+    shaping — the staging/merge/catalog machinery is shared, only the row
+    shaping is GenBank-specific."""
 
     def __init__(
         self,
@@ -396,19 +396,10 @@ class GenBankChadoLoader:
         id_prefix: str = "GB",
         mitochondrial: bool = False,
     ):
-        self.spark = spark
+        super().__init__(spark, organism_id=organism_id)
         self.reference_type = reference_type
         self.id_prefix = id_prefix
         self.mitochondrial = mitochondrial
-        self.gff3 = ChadoGFF3Loader(spark, organism_id=organism_id)
-
-    @property
-    def tables(self):
-        return self.gff3.tables
-
-    @property
-    def dims(self):
-        return self.gff3.dims
 
     def load_file(self, path: str) -> dict[str, int]:
         parsed = parse_genbank(self.spark, path)
@@ -418,5 +409,4 @@ class GenBankChadoLoader:
             id_prefix=self.id_prefix,
             mitochondrial=self.mitochondrial,
         )
-        staging = self.gff3._build_staging(features, sequences)
-        return self.gff3._merge(staging)
+        return self._merge(self._build_staging(features, sequences))

@@ -151,10 +151,10 @@ def gene_summaries(
     """→ (accession, author, wiki): the export's three TSV columns.
 
     ``loader``: a ChadoGFF3Loader-shaped object (tables featureprop/feature/
-    dbxref + cvterm dim). ``paragraphs``: legacy Paragraph table
+    dbxref/cvterm). ``paragraphs``: legacy Paragraph table
     (paragraph_no, written_by, paragraph_text).
     """
-    t, cvterm = loader.tables, loader.dims["cvterm"]
+    t, cvterm = loader.tables, loader.chado.term_ids()
     para_type = cvterm.where(F.col("name") == "paragraph_no").select(
         F.col("cvterm_id").alias("type_id")
     )

@@ -28,7 +28,14 @@ Merge statements (M1/M5/M11/M12 patterns; golden counts
 - new_dbxref: row_number-dedup by accession
 - dependent tables join through the freshly-updated live feature table
 
-Scale: dims (db, cvterm, analysis) are broadcast-sized; every fact merge
+Types: feature, relationship, synonym and property types resolve against
+the shared ``cv``/``cvterm`` rows (``catalog.ChadoState``), and only the
+missing terms are created, each with an ``internal``-db dbxref
+``<cv>:<name>`` (qualified so it cannot take an ontology's bare-id
+accession, e.g. the ``part_of`` Typedef). One dbxref statement covers the
+source and the term accessions.
+
+Scale: db, cv, cvterm and analysis are broadcast-sized; every fact merge
 shuffles once on uniquename. Each statement's new rows go onto the live
 table through ``operators.merge.append``/``find_or_create``: materialized
 once, counted from that materialization, with lineage bounded across
@@ -40,53 +47,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.catalog import ChadoState
 from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators.merge import append, find_or_create, new_keys
 from modware_loader_spark.sources.gff3 import parse_gff3
 from modware_loader_spark.sources.stitch import running_stitch
 
-EMPTY_SCHEMAS = {
-    "feature": (
-        "feature_id long, uniquename string, name string, type_id long, "
-        "organism_id long, dbxref_id long, residues string, md5checksum string, "
-        "seqlen long"
-    ),
-    "featureloc": (
-        "feature_id long, srcfeature_id long, fmin long, fmax long, "
-        "strand int, phase int, rank int"
-    ),
-    "analysisfeature": "feature_id long, significance double, analysis_id long",
-    "synonym": "synonym_id long, name string, type_id long, synonym_sgml string",
-    "feature_synonym": "feature_id long, synonym_id long, pub_id long",
-    "feature_relationship": "object_id long, subject_id long, type_id long",
-    "dbxref": "dbxref_id long, accession string, db_id long",
-    "feature_dbxref": "dbxref_id long, feature_id long",
-    "featureprop": "feature_id long, value string, type_id long",
-}
-
-DIM_SCHEMAS = {
-    "db": "db_id long, name string",
-    "cvterm": "cvterm_id long, name string, cv string",
-    "analysis": "analysis_id long, program string, programversion string",
-}
+TABLES = (
+    "feature", "featureloc", "analysisfeature", "synonym", "feature_synonym",
+    "feature_relationship", "dbxref", "feature_dbxref", "featureprop",
+    "db", "cv", "cvterm", "analysis",
+)
 
 
 class ChadoGFF3Loader:
-    """Stateful loader over an in-memory Chado catalog (parquet/JDBC in
-    production — the merge plans are identical)."""
+    """Stateful loader over a Chado state (``catalog.ChadoState``) that
+    the catalog's restore/save share with the other loaders (parquet/JDBC
+    in production — the merge plans are identical)."""
 
     def __init__(self, spark: SparkSession, organism_id: int = 1, target_type: str = "EST"):
         self.spark = spark
         self.organism_id = organism_id
         self.target_type = target_type
         self.synonym_pub_id = 1
-        self._auto_counter = 0
-        self.tables = {
-            name: local_frame(spark, [], schema) for name, schema in EMPTY_SCHEMAS.items()
-        }
-        self.dims = {
-            name: local_frame(spark, [], schema) for name, schema in DIM_SCHEMAS.items()
-        }
+        self.chado = ChadoState(spark)
+        self.chado.declare(TABLES)
+        self.tables = self.chado.tables
 
     def load_file(self, path: str) -> dict[str, int]:
         features, sequences = parse_gff3(self.spark, path)
@@ -112,13 +98,13 @@ class ChadoGFF3Loader:
             .withColumn(
                 "fid",
                 F.when(has_id, attrs["ID"][0]).otherwise(
-                    F.concat(F.lit("auto"), (F.col("__auto_rn") + self._auto_counter))
+                    F.concat(F.lit("auto"), (F.col("__auto_rn") + self.chado.auto_counter))
                 ),
             )
             .withColumn("fname", attrs["Name"][0])
             .localCheckpoint()
         )
-        self._auto_counter += feats.filter(~has_id).count()
+        self.chado.auto_counter += feats.filter(~has_id).count()
 
         is_target = attrs["Target"].isNotNull()
         plain = feats.filter(~is_target)
@@ -253,65 +239,50 @@ class ChadoGFF3Loader:
         counts: dict[str, int] = {}
         feature = self.tables["feature"]
 
-        # dims: db / dbxref for sources, cvterms for types+props+synonym type
-        sources = st["feature"].select(F.col("source").alias("accession")).filter(
-            F.col("accession").isNotNull()
-        ).distinct()
-        dbs = (
-            st["feature_dbxref"].select(F.col("db").alias("name")).distinct()
-            .unionByName(local_frame(self.spark, ["GFF_source", "local", "internal"], "name string"))
+        # db, then one dbxref statement for the GFF_source accessions and
+        # the accessions of the missing type terms, then those cvterms
+        t = self.tables
+        dbs = st["feature_dbxref"].select(F.col("db").alias("name")).unionByName(
+            local_frame(self.spark, ["GFF_source", "local", "internal"], "name string")
         )
-        self.dims["db"], _ = find_or_create(self.dims["db"], dbs.distinct(), ["name"], "db_id")
-        db_dim = F.broadcast(self.dims["db"])
-        # source dbxrefs are find-or-created into live dbxref at staging time
-        src_rows = sources.join(
-            db_dim.filter(F.col("name") == "GFF_source").select("db_id"), how="cross"
+        self.chado.find_or_create_names("db", dbs)
+        db_dim = F.broadcast(t["db"])
+        gff_db = db_dim.filter(F.col("name") == "GFF_source").select("db_id")
+        sources = (
+            st["feature"].select(F.col("source").alias("accession"))
+            .filter(F.col("accession").isNotNull())
+            .crossJoin(gff_db)
         )
-        self.tables["dbxref"], _ = find_or_create(
-            self.tables["dbxref"], src_rows.select("db_id", "accession"),
-            ["db_id", "accession"], "dbxref_id",
-        )
-
         type_terms = (
-            st["feature"].select(F.col("type").alias("name")).distinct()
-            .withColumn("cv", F.lit("sequence"))
-            .unionByName(
-                local_frame(
-                    self.spark,
-                    [("part_of", "sequence"), ("derives_from", "sequence"),
-                     ("symbol", "synonym_type")],
-                    "name string, cv string",
-                )
-            )
-            .unionByName(
-                st["featureprop"].select(F.col("prop_type").alias("name")).distinct()
-                .withColumn("cv", F.lit("feature_property"))
-            )
+            st["feature"].select(F.col("type").alias("name"), F.lit("sequence").alias("cv"))
+            .unionByName(local_frame(
+                self.spark,
+                [("part_of", "sequence"), ("derives_from", "sequence"), ("symbol", "synonym_type")],
+                "name string, cv string",
+            ))
+            .unionByName(st["featureprop"].select(
+                F.col("prop_type").alias("name"), F.lit("feature_property").alias("cv")
+            ))
+            .distinct()
+            .withColumn("accession", F.concat_ws(":", "cv", "name"))
         )
-        self.dims["cvterm"], _ = find_or_create(
-            self.dims["cvterm"], type_terms, ["cv", "name"], "cvterm_id"
-        )
-        cvterm_dim = F.broadcast(self.dims["cvterm"])
-        seq_terms = cvterm_dim.filter(F.col("cv") == "sequence").select(
+        self.chado.find_or_create_terms(type_terms, dbxrefs=sources)
+        seq_terms = self.chado.term_ids("sequence").select(
             F.col("name").alias("type"), F.col("cvterm_id").alias("type_id")
         )
-        prop_terms = cvterm_dim.filter(F.col("cv") == "feature_property").select(
+        prop_terms = self.chado.term_ids("feature_property").select(
             F.col("name").alias("prop_type"), F.col("cvterm_id").alias("prop_type_id")
         )
-        synonym_type_id = (
-            cvterm_dim.filter((F.col("cv") == "synonym_type") & (F.col("name") == "symbol"))
-            .first()
-            .cvterm_id
-        )
-        self.dims["analysis"], _ = find_or_create(
-            self.dims["analysis"],
+        synonym_type_id = self.chado.term_id("symbol", "synonym_type")
+        t["analysis"], _ = find_or_create(
+            t["analysis"],
             st["analysisfeature"].select("program").distinct().withColumn(
                 "programversion", F.lit("1.0")
             ),
             ["program"],
             "analysis_id",
         )
-        analysis_dim = F.broadcast(self.dims["analysis"])
+        analysis_dim = F.broadcast(t["analysis"])
 
         # [insert_temp_new_feature_ids] — M1 anti-join on uniquename
         new_ids = new_keys(
@@ -323,7 +294,12 @@ class ChadoGFF3Loader:
 
         # [insert_new_feature] — staging ⟕ featureseq ⋈ new_ids, surrogate ids
         src_xref = F.broadcast(
-            self.dims_dbxref_for_sources(db_dim)
+            t["dbxref"]
+            .join(gff_db, "db_id", "left_semi")
+            .select(
+                F.col("accession").alias("src_accession"),
+                F.col("dbxref_id").alias("src_dbxref_id"),
+            )
         )
         new_feature = (
             st["feature"]
@@ -427,9 +403,7 @@ class ChadoGFF3Loader:
         # [insert_new_feature_relationship] — subject must be new, parent
         # resolved against the post-insert live feature table
         rel_terms = F.broadcast(
-            self.dims["cvterm"].filter(F.col("cv") == "sequence").select(
-                F.col("name").alias("rel_type"), F.col("cvterm_id").alias("rel_type_id")
-            )
+            seq_terms.withColumnsRenamed({"type": "rel_type", "type_id": "rel_type_id"})
         )
         new_fr = (
             st["feature_relationship"]
@@ -498,15 +472,3 @@ class ChadoGFF3Loader:
         self.tables["featureprop"], new_fp = append(self.tables["featureprop"], new_fp)
         counts["new_featureprop"] = new_fp.count()
         return counts
-
-    # ------------------------------------------------------------------
-    def dims_dbxref_for_sources(self, db_dim: DataFrame) -> DataFrame:
-        gff_db = db_dim.filter(F.col("name") == "GFF_source").select("db_id")
-        return (
-            self.tables["dbxref"]
-            .join(gff_db, "db_id", "left_semi")
-            .select(
-                F.col("accession").alias("src_accession"),
-                F.col("dbxref_id").alias("src_dbxref_id"),
-            )
-        )

@@ -22,7 +22,13 @@ The version gate (OBO header date vs stored metadata,
 ``Ontology.pm:206-239``) and namespace bootstrap
 (``find_or_create_namespaces``, ``Ontology.pm:295-305``) are preserved.
 
-Scale: dims (db, cv, scope terms) broadcast; cvterm/dbxref merges shuffle
+The tables live in a ``catalog.ChadoState``, the one schema the GFF3
+loader also restores and saves; the bootstrap runs at each load, after any
+restore. A type a genome load created (``internal``-db accession
+``<cv>:<name>``) is adopted by the file's term of the same (name, cv)
+instead of getting a twin, and the prune never deletes one of them.
+
+Scale: db, cv and scope terms broadcast; cvterm/dbxref merges shuffle
 on (accession, db_id); relationship resolution is three broadcast-able
 joins against the cvterm⋈dbxref key map. Inserts go through
 ``operators.merge.append``/``find_or_create`` (new rows materialized once,
@@ -37,22 +43,25 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modware_loader_spark.catalog import ChadoState
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators.merge import append, find_or_create
 from modware_loader_spark.sources.obo import parse_obo
 
-TABLE_SCHEMAS = {
-    "db": "db_id long, name string",
-    "cv": "cv_id long, name string",
-    "dbxref": "dbxref_id long, accession string, db_id long",
-    "cvterm": (
-        "cvterm_id long, name string, definition string, is_obsolete int, "
-        "is_relationshiptype int, cv_id long, dbxref_id long"
+TABLES = (
+    "db", "cv", "dbxref", "cvterm", "cvterm_relationship", "cvprop",
+    "cvtermsynonym", "cvtermprop", "cvterm_dbxref",
+)
+
+# cv → the terms the namespace bootstrap finds or creates in it, each
+# with the internal-db dbxref of its bare name
+BOOTSTRAP_TERMS = {
+    "cv_property": ("date", "data-version", "saved-by", "remark"),
+    "cvterm_property_type": (
+        "comment", "alt_id", "xref", "cyclic", "reflexive", "transitive",
+        "anonymous", "domain", "range",
     ),
-    "cvterm_relationship": "object_id long, subject_id long, type_id long",
-    "cvprop": "cv_id long, type_id long, value string",
-    "cvtermsynonym": "cvterm_id long, synonym string, type_id long",
-    "cvtermprop": "cvterm_id long, type_id long, value string",
-    "cvterm_dbxref": "cvterm_id long, dbxref_id long",
+    "synonym_type": ("EXACT", "BROAD", "NARROW", "RELATED"),
 }
 
 OBO_DATE_FORMAT = "%d:%m:%Y %H:%M"
@@ -83,47 +92,46 @@ def _cascade_cvterm_delete(tables: dict[str, DataFrame], cvterm_ids: DataFrame) 
 
 
 class ChadoOntologyLoader:
-    """Stateful obo2chado-equivalent loader over an in-memory catalog."""
+    """Stateful obo2chado-equivalent loader over a Chado state
+    (``catalog.ChadoState``)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.tables = {
-            name: spark.createDataFrame([], schema) for name, schema in TABLE_SCHEMAS.items()
-        }
-        self.metadata: dict[str, str] = {}
-        self._bootstrap()
+        self.chado = ChadoState(spark)
+        self.chado.declare(TABLES)
+        self.tables = self.chado.tables
 
-    # -- namespace bootstrap (Ontology.pm:295-305) + the is_a relationship
-    # term the reference test preset fixture (cvprop.tar.bz2) provides
-    def _bootstrap(self) -> None:
-        self._find_or_create_names("db", ["internal"])
-        self._find_or_create_names(
+    def bootstrap(self) -> None:
+        """Namespace bootstrap (Ontology.pm:295-305) + the is_a relationship
+        term the reference test preset fixture (cvprop.tar.bz2) provides.
+        Every statement is a find-or-create, so each load runs it, as the
+        reference does, on whatever state a restore left."""
+        chado = self.chado
+        chado.find_or_create_names("db", ["internal"])
+        chado.find_or_create_names(
             "cv", ["cvterm_property_type", "synonym_type", "relationship", "cv_property"]
         )
-        self._find_or_create_terms(
-            [("date", "cv_property"), ("data-version", "cv_property"),
-             ("saved-by", "cv_property"), ("remark", "cv_property"),
-             ("comment", "cvterm_property_type"), ("alt_id", "cvterm_property_type"),
-             ("xref", "cvterm_property_type"), ("cyclic", "cvterm_property_type"),
-             ("reflexive", "cvterm_property_type"), ("transitive", "cvterm_property_type"),
-             ("anonymous", "cvterm_property_type"), ("domain", "cvterm_property_type"),
-             ("range", "cvterm_property_type"),
-             ("EXACT", "synonym_type"), ("BROAD", "synonym_type"),
-             ("NARROW", "synonym_type"), ("RELATED", "synonym_type")]
+        chado.find_or_create_terms(
+            local_frame(
+                self.spark,
+                [(name, cv, name) for cv, names in BOOTSTRAP_TERMS.items() for name in names],
+                "name string, cv string, accession string",
+            )
         )
         # The Test::Chado cv preset ships the OBO relationship ontology:
         # 'is_a' exists as a relationship-type cvterm reachable through BOTH
         # the internal-db dbxref (obo2chado's normalize of bare 'is_a') and
         # the OBO_REL-db dbxref (owltools closure files say 'OBO_REL:is_a').
-        self._find_or_create_names("db", ["OBO_REL"])
+        chado.find_or_create_names("db", ["OBO_REL"])
         db = self.tables["db"]
         internal = db.filter(F.col("name") == "internal").first().db_id
         obo_rel = db.filter(F.col("name") == "OBO_REL").first().db_id
         rel_cv = self.tables["cv"].filter(F.col("name") == "relationship").first().cv_id
         self.tables["dbxref"], _ = find_or_create(
             self.tables["dbxref"],
-            self.spark.createDataFrame(
-                [("is_a", internal), ("is_a", obo_rel)], "accession string, db_id long"
+            local_frame(
+                self.spark, [("is_a", internal), ("is_a", obo_rel)],
+                "accession string, db_id long",
             ),
             ["accession", "db_id"],
             "dbxref_id",
@@ -143,50 +151,11 @@ class ChadoOntologyLoader:
             self.tables["cvterm"], cand, ["name", "cv_id", "dbxref_id"], "cvterm_id"
         )
 
-    def _find_or_create_names(self, table: str, names: list[str]) -> None:
-        """db or cv rows by name."""
-        rows = self.spark.createDataFrame([(n,) for n in names], "name string")
-        self.tables[table], _ = find_or_create(
-            self.tables[table], rows, ["name"], f"{table}_id"
-        )
-
-    def _find_or_create_terms(self, name_cv: list[tuple[str, str]]) -> None:
-        """find_or_create_cvterm_namespace: internal-db dbxref + cvterm."""
-        rows = self.spark.createDataFrame(name_cv, "name string, cv string")
-        self._find_or_create_names("cv", sorted({cv for _, cv in name_cv}))
-        internal = self.tables["db"].filter(F.col("name") == "internal").first().db_id
-        self.tables["dbxref"], _ = find_or_create(
-            self.tables["dbxref"],
-            rows.select(F.col("name").alias("accession"), F.lit(internal).alias("db_id")),
-            ["accession", "db_id"],
-            "dbxref_id",
-        )
-        cvmap = self.tables["cv"].withColumnRenamed("name", "cv")
-        dx = self.tables["dbxref"].filter(F.col("db_id") == internal).select(
-            F.col("accession").alias("name"), "dbxref_id"
-        )
-        cand = (
-            rows.join(F.broadcast(cvmap), "cv")
-            .join(F.broadcast(dx), "name")
-            .select(
-                "name",
-                F.lit(None).cast("string").alias("definition"),
-                F.lit(0).alias("is_obsolete"),
-                F.lit(0).alias("is_relationshiptype"),
-                "cv_id",
-                "dbxref_id",
-            )
-        )
-        self.tables["cvterm"], _ = find_or_create(
-            self.tables["cvterm"], cand, ["name", "cv_id"], "cvterm_id"
-        )
-
     def _scope_term_ids(self) -> DataFrame:
-        syn_cv = self.tables["cv"].filter(F.col("name") == "synonym_type")
         return F.broadcast(
-            self.tables["cvterm"]
-            .join(syn_cv.select("cv_id"), "cv_id", "left_semi")
-            .select(F.col("name").alias("scope"), F.col("cvterm_id").alias("scope_id"))
+            self.chado.term_ids("synonym_type").withColumnsRenamed(
+                {"name": "scope", "cvterm_id": "scope_id"}
+            )
         )
 
     # ------------------------------------------------------------------
@@ -194,7 +163,7 @@ class ChadoOntologyLoader:
         cvrow = self.tables["cv"].filter(F.col("name") == ns).first()
         if cvrow is None:
             return None
-        trow = self.tables["cvterm"].filter(F.col("name") == prop).first()
+        trow = self.chado.term_ids("cv_property").filter(F.col("name") == prop).first()
         if trow is None:
             return None
         row = (
@@ -208,13 +177,9 @@ class ChadoOntologyLoader:
         """store_metadata (Ontology.pm:241-293): per-namespace cvprop rows
         for date / data-version / saved-by / remark (SCD-1 upsert)."""
         ns = header.get("default-namespace") or header.get("ontology")
-        self._find_or_create_names("cv", [ns])
+        self.chado.find_or_create_names("cv", [ns])
         cv_id = self.tables["cv"].filter(F.col("name") == ns).first().cv_id
-        prop_cv = self.tables["cv"].filter(F.col("name") == "cv_property").first().cv_id
-        types = {
-            r.name: r.cvterm_id
-            for r in self.tables["cvterm"].filter(F.col("cv_id") == prop_cv).collect()
-        }
+        types = {r.name: r.cvterm_id for r in self.chado.term_ids("cv_property").collect()}
         rows = [
             (cv_id, types[key], header[key])
             for key in ("date", "data-version", "saved-by", "remark")
@@ -222,18 +187,18 @@ class ChadoOntologyLoader:
         ]
         if not rows:
             return
-        staged = self.spark.createDataFrame(rows, "cv_id long, type_id long, value string")
+        staged = local_frame(self.spark, rows, "cv_id long, type_id long, value string")
         kept = self.tables["cvprop"].join(
             staged.select("cv_id", "type_id"), ["cv_id", "type_id"], "left_anti"
         )
         self.tables["cvprop"], _ = append(kept, staged)
-        self.metadata[f"{ns}:date"] = header.get("date", "")
+        self.chado.metadata[f"{ns}:date"] = header.get("date", "")
 
     def is_newer(self, header: dict) -> bool:
         """Version gate (Ontology.pm:206-239): header date must be newer
         than the date stored in cvprop for this namespace."""
         ns = header.get("default-namespace") or header.get("ontology")
-        stored = self._cvprop_value(ns, "date") or self.metadata.get(f"{ns}:date") or None
+        stored = self._cvprop_value(ns, "date") or self.chado.metadata.get(f"{ns}:date")
         if not stored or "date" not in header:
             return True
         new = datetime.strptime(header["date"], OBO_DATE_FORMAT)
@@ -241,6 +206,7 @@ class ChadoOntologyLoader:
         return new > old
 
     def load_file(self, path: str, force: bool = False) -> dict[str, int]:
+        self.bootstrap()
         parsed = parse_obo(self.spark, path)
         header = parsed["header"]
         if not force and not self.is_newer(header):
@@ -270,8 +236,9 @@ class ChadoOntologyLoader:
             t["cv"], terms.select(F.col("cv").alias("name")).distinct(), ["name"], "cv_id"
         )
         db_dim, cv_dim = F.broadcast(t["db"]), F.broadcast(t["cv"])
+        internal = t["db"].filter(F.col("name") == "internal").first().db_id
         scope_ids = self._scope_term_ids()
-        comment_type_id = t["cvterm"].filter(F.col("name") == "comment").first().cvterm_id
+        comment_type_id = self.chado.term_id("comment", "cvterm_property_type")
 
         # staging with resolved surrogate dims (cv_id, db_id)
         st = (
@@ -338,11 +305,14 @@ class ChadoOntologyLoader:
             "cvterm_id", "dbxref_id", "accession", "db_id", "cv_id", "name"
         )
 
-        # 1. prune (M3 scoped anti-diff + M4 delete), share/postgresql.lib:248-260,311-318
+        # 1. prune (M3 scoped anti-diff + M4 delete), share/postgresql.lib:248-260,311-318;
+        # no OBO id parses to an internal-db accession with a ':', so the
+        # types a genome load created are not this file's to prune
         scope_cv = st.select("cv_id").distinct()
         scope_db = st.select("db_id").distinct()
         term_delete = (
             keyed.join(st.select("accession", "db_id"), ["accession", "db_id"], "left_anti")
+            .filter((F.col("db_id") != internal) | ~F.col("accession").contains(":"))
             .join(F.broadcast(scope_cv), "cv_id", "left_semi")
             .join(F.broadcast(scope_db), "db_id", "left_semi")
             .select("cvterm_id", "dbxref_id")
@@ -426,43 +396,42 @@ class ChadoOntologyLoader:
                 "is_relationshiptype", "cv_id", "dbxref_id",
             )
         )
-        t["cvterm"], new_terms = append(
-            t["cvterm"], new_terms, id_col="cvterm_id", order_by=["ord", "accession"]
+        # a term of the same (name, cv) that has an internal-db accession
+        # (a genome load's type) takes the file's accession and attributes:
+        # a twin would break Chado's (name, cv_id, is_obsolete) key
+        internal_terms = t["cvterm"].join(
+            t["dbxref"].filter(F.col("db_id") == internal), "dbxref_id", "left_semi"
+        ).select("cvterm_id", "name", "cv_id", F.col("dbxref_id").alias("old_dbxref_id"))
+        adopted = new_terms.join(internal_terms, ["name", "cv_id"]).localCheckpoint()
+        t["cvterm"] = (
+            t["cvterm"]
+            .join(adopted.select("cvterm_id"), "cvterm_id", "left_anti")
+            .select(*t["cvterm"].columns)
+            .unionByName(adopted.select(*t["cvterm"].columns))
+            .localCheckpoint()
         )
-        counts["new_cvterms"] = new_terms.count()
-        new_keyed = new_terms.select("cvterm_id", "accession")
+        replaced = adopted.select(F.col("old_dbxref_id").alias("dbxref_id"))
+        t["dbxref"] = (
+            t["dbxref"]
+            .join(replaced, "dbxref_id", "left_anti")
+            .select(*t["dbxref"].columns)
+            .localCheckpoint()
+        )
+        t["cvterm"], new_terms = append(
+            t["cvterm"],
+            new_terms.join(adopted.select("name", "cv_id"), ["name", "cv_id"], "left_anti"),
+            id_col="cvterm_id",
+            order_by=["ord", "accession"],
+        )
+        new_keyed = new_terms.select("cvterm_id", "accession").unionByName(
+            adopted.select("cvterm_id", "accession")
+        )
+        counts["new_cvterms"] = new_keyed.count()
         add_children(new_keyed, st_alt.join(new_keyed, "accession").localCheckpoint())
 
         # 5. relationships: triple key resolution (M5) + EXCEPT (M6)
-        keymap = t["cvterm"].join(t["dbxref"], "dbxref_id").select(
-            "cvterm_id", "accession", "db_id"
-        )
-        resolved = (
-            rels.join(
-                db_dim.withColumnsRenamed({"name": "subject_db", "db_id": "subject_db_id"}),
-                "subject_db",
-            )
-            .join(db_dim.withColumnsRenamed({"name": "object_db", "db_id": "object_db_id"}), "object_db")
-            .join(db_dim.withColumnsRenamed({"name": "type_db", "db_id": "type_db_id"}), "type_db")
-            .join(
-                keymap.withColumnsRenamed(
-                    {"accession": "subject", "db_id": "subject_db_id", "cvterm_id": "subject_id"}
-                ),
-                ["subject", "subject_db_id"],
-            )
-            .join(
-                keymap.withColumnsRenamed(
-                    {"accession": "object", "db_id": "object_db_id", "cvterm_id": "object_id"}
-                ),
-                ["object", "object_db_id"],
-            )
-            .join(
-                keymap.withColumnsRenamed(
-                    {"accession": "type", "db_id": "type_db_id", "cvterm_id": "type_id"}
-                ),
-                ["type", "type_db_id"],
-            )
-            .select("object_id", "subject_id", "type_id")
+        resolved = self.chado.resolve_terms(rels, "subject", "object", "type").select(
+            "object_id", "subject_id", "type_id"
         )
         t["cvterm_relationship"], new_rels = find_or_create(
             t["cvterm_relationship"], resolved, ["object_id", "subject_id", "type_id"]

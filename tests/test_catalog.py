@@ -27,7 +27,7 @@ def test_persisted_catalog_continues_incremental_load(spark, tmp_path):
 
     fresh = ChadoGFF3Loader(spark)
     restore_loader_state(fresh, catalog)
-    assert fresh._auto_counter == loader._auto_counter  # persisted in _meta.json
+    assert fresh.chado.auto_counter == loader.chado.auto_counter  # persisted in _meta.json
     assert fresh.tables["feature"].count() == 53
     counts = fresh.load_file(os.path.join(FIXTURES, "test2.gff3"))
     assert counts == EXPECT_UPDATE

@@ -46,7 +46,7 @@ def test_load_assembly_coordinates_and_residues(spark):
 
     feat = ldr.tables["feature"]
     loc = ldr.tables["featureloc"]
-    types = ldr.dims["cvterm"].select(
+    types = ldr.chado.term_ids("sequence").select(
         F.col("cvterm_id").alias("type_id"), F.col("name").alias("ftype")
     )
     placed = (

@@ -41,7 +41,7 @@ def test_gb2chado_rows_and_residues(spark):
     ldr = GenBankChadoLoader(spark)
     ldr.load_file(FIX)
     feats = {r.uniquename: r for r in ldr.tables["feature"].collect()}
-    types = {r.cvterm_id: r.name for r in ldr.dims["cvterm"].collect()}
+    types = {r.cvterm_id: r.name for r in ldr.chado.term_ids("sequence").collect()}
 
     scaffold = feats["SCF0001"]
     assert types[scaffold.type_id] == "supercontig"

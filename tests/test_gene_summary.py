@@ -74,9 +74,13 @@ def test_author_mapping(spark):
 
 def test_gene_summaries_join(spark):
     ldr = ChadoGFF3Loader(spark)
-    ldr.dims["cvterm"] = spark.createDataFrame(
-        [(1, "gene", "sequence"), (2, "paragraph_no", "autocreated"), (3, "mRNA", "sequence")],
-        "cvterm_id long, name string, cv string",
+    ldr.tables["cv"] = spark.createDataFrame(
+        [(1, "sequence"), (2, "autocreated")], ldr.tables["cv"].schema
+    )
+    ldr.tables["cvterm"] = spark.createDataFrame(
+        [(1, "gene", None, 0, 0, 1, 1), (2, "paragraph_no", None, 0, 0, 2, 2),
+         (3, "mRNA", None, 0, 0, 1, 3)],
+        ldr.tables["cvterm"].schema,
     )
     ldr.tables["feature"] = spark.createDataFrame(
         [(10, "DDB_G1", "g1", 1, 1, 100, None, None, None),

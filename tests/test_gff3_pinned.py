@@ -55,18 +55,19 @@ SECOND_COUNTS = {
     "new_featureprop": 0,
 }
 DIGESTS = {
-    "feature": "f6b3902e7bda4a81",
+    "feature": "f288de4fd9d6f913",
     "featureloc": "a8e08ef0e2e0343e",
     "analysisfeature": "57bb15340cb6a075",
     "synonym": "def6ef3f4e3bf9a5",
     "feature_synonym": "a9b2e2426ec5c1da",
-    "feature_relationship": "bbe3af13da78ee82",
-    "dbxref": "434dd5e895b2892d",
-    "feature_dbxref": "6640ee10c3cbfee6",
-    "featureprop": "232ee4b0fde92ac0",
-    "dim_db": "1d545d1c839a041e",
-    "dim_cvterm": "b065a2edfcdcaba7",
-    "dim_analysis": "05e93efe7b9036f4",
+    "feature_relationship": "95366ce7e0ac077b",
+    "dbxref": "f86bf318414ce1bf",
+    "feature_dbxref": "1252ba884db7b0c5",
+    "featureprop": "9d7ef5070cdb23f4",
+    "db": "1d545d1c839a041e",
+    "cv": "071e4aec275c836e",
+    "cvterm": "bcb545d6b1f27bf8",
+    "analysis": "05e93efe7b9036f4",
 }
 EXPORT_DIGEST = "1bbf2240298d850c"
 
@@ -82,9 +83,7 @@ def _digest(df) -> str:
 
 
 def _catalog_digests(loader) -> dict:
-    out = {name: _digest(df) for name, df in loader.tables.items()}
-    out.update({f"dim_{name}": _digest(df) for name, df in loader.dims.items()})
-    return out
+    return {name: _digest(df) for name, df in loader.tables.items()}
 
 
 def _export_digest(loader, out: str) -> str:
@@ -97,7 +96,7 @@ def test_incremental_load_pinned(spark, tmp_path):
     loader = ChadoGFF3Loader(spark)
     assert loader.load_file(GFF3) == FIRST_COUNTS
     assert loader.load_file(GFF3) == SECOND_COUNTS
-    assert loader._auto_counter == 8
+    assert loader.chado.auto_counter == 8
     assert _catalog_digests(loader) == DIGESTS
     assert _export_digest(loader, str(tmp_path / "out.gff3")) == EXPORT_DIGEST
 
@@ -111,6 +110,6 @@ def test_restored_load_pinned(spark, tmp_path):
     loader = ChadoGFF3Loader(spark)
     restore_loader_state(loader, catalog)
     assert loader.load_file(GFF3) == SECOND_COUNTS
-    assert loader._auto_counter == 8
+    assert loader.chado.auto_counter == 8
     assert _catalog_digests(loader) == DIGESTS
     assert _export_digest(loader, str(tmp_path / "out.gff3")) == EXPORT_DIGEST

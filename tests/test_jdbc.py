@@ -100,7 +100,7 @@ def test_gff3tochado_end_to_end_over_jdbc(spark, tmp_path):
     # fresh process analog: a NEW loader whose live side is Derby rows
     l2 = ChadoGFF3Loader(spark)
     restore_loader_state_jdbc(l2, url, props)
-    assert l2._auto_counter == l1._auto_counter  # sequence resumes
+    assert l2.chado.auto_counter == l1.chado.auto_counter  # sequence resumes
     c2 = l2.load_file(os.path.join(GFF3_DIR, "test2.gff3"))
     # t/loader/gff3tochado-update.t golden update counts
     assert (
@@ -185,3 +185,56 @@ def test_jdbc_key_range_pushdown_with_clob_columns(spark, tmp_path):
             spark, url, "featureprop", props,
             key_range=("id; DROP TABLE x", 0, 1),
         )
+
+
+def test_mixed_catalog_round_trip_over_jdbc(spark, tmp_path):
+    """A genome, an ontology and the genome again (the in-repo pinned
+    fixtures), each load restoring and saving the whole state as a CLI
+    command does, give the same counts and row-identical tables over
+    Derby as over a parquet catalog; ``loader_meta`` keeps both scalar
+    fields (the GFF3 auto-uniquename counter, the ontology metadata) and
+    lists every table either loader saved."""
+    import json
+    import os
+
+    from modware_loader_spark.catalog import (
+        ChadoCatalog,
+        restore_loader_state,
+        restore_loader_state_jdbc,
+        save_loader_state,
+        save_loader_state_jdbc,
+    )
+    from modware_loader_spark.plans import gff3_load, ontology_load
+    from tests.test_gff3_pinned import FIRST_COUNTS, GFF3, SECOND_COUNTS, _digest
+    from tests.test_loader_pinned import FIX, ONTO_V1_COUNTS
+
+    url, props = _derby(spark, tmp_path, "mixeddb")
+    catalog = ChadoCatalog(spark, str(tmp_path / "catalog"))
+    obo = os.path.join(FIX, "pinned_onto_v1.obo")
+    for restore, save in (
+        (lambda ldr: restore_loader_state_jdbc(ldr, url, props),
+         lambda ldr: save_loader_state_jdbc(ldr, url, props)),
+        (lambda ldr: restore_loader_state(ldr, catalog),
+         lambda ldr: save_loader_state(ldr, catalog)),
+    ):
+        for make, load, want in (
+            (gff3_load.ChadoGFF3Loader, lambda ldr: ldr.load_file(GFF3), FIRST_COUNTS),
+            (ontology_load.ChadoOntologyLoader, lambda ldr: ldr.load_file(obo), ONTO_V1_COUNTS),
+            (gff3_load.ChadoGFF3Loader, lambda ldr: ldr.load_file(GFF3), SECOND_COUNTS),
+        ):
+            loader = make(spark)
+            restore(loader)
+            assert load(loader) == want
+            save(loader)
+
+    meta = {
+        r.k: json.loads(r.v)
+        for r in spark.read.jdbc(url, "loader_meta", properties=props).collect()
+    }
+    assert meta["auto_counter"] == 8
+    assert meta["metadata"] == {"pinned_onto:date": "01:03:2020 10:00"}
+    names = sorted({*gff3_load.TABLES, *ontology_load.TABLES})
+    assert meta["tables"] == names
+    assert {n: _digest(spark.read.jdbc(url, n, properties=props)) for n in names} == {
+        n: _digest(df) for n, df in catalog.load(names).items()
+    }
