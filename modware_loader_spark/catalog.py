@@ -2,11 +2,14 @@
 and its persistence — one parquet directory per table, with a JDBC mirror
 for a real Chado database.
 
-The reference loads everything into one database, and so do the GFF3,
-GenBank, ontology and closure loaders here: each declares the tables it
-uses (columns from :data:`SCHEMAS`) in one :class:`ChadoState`, which
+The reference loads everything into one database, and so does every
+load command here (GFF3, GenBank, ontology, closure, adhoc, GAF, BibTeX,
+organism and stock): each loader declares the tables it uses (columns
+from :data:`SCHEMAS`) in one :class:`ChadoState`, which
 :func:`save_loader_state` / :func:`restore_loader_state` persist with its
-scalar state. A genome and an ontology share one id space per table.
+scalar state. Every loader shares one id space per table: a genome, an
+ontology, the pub types and the stock terms find or create the same
+``cv``/``cvterm`` rows, and a plasmid feature is a ``feature`` row.
 
 The reference's persistent state is rows in Pg/SQLite/Oracle via
 DBIx::Class (``lib/Modware/Role/Command/WithBCS.pm:118-121``); its
@@ -33,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from modware_loader_spark.frames import local_frame
-from modware_loader_spark.operators.merge import find_or_create
+from modware_loader_spark.operators.merge import find_or_create, materialized
 
 SCHEMAS = {
     # general + cv module
@@ -69,6 +72,42 @@ SCHEMAS = {
     "feature_relationship": "object_id long, subject_id long, type_id long",
     "feature_dbxref": "dbxref_id long, feature_id long",
     "featureprop": "feature_id long, value string, type_id long",
+    # organism + pub module
+    "organism": (
+        "organism_id long, genus string, species string, common_name string, "
+        "abbreviation string"
+    ),
+    "pub": (
+        "pub_id long, uniquename string, pubplace string, type_id long, "
+        "title string, volume string, series_name string, pyear string, pages string"
+    ),
+    "pubauthor": "pub_id long, rank int, surname string, givennames string",
+    "pubprop": "pub_id long, type_id long, value string",
+    # GAF annotations (a prop's type is its GAF column name)
+    "feature_cvterm": (
+        "feature_cvterm_id long, feature_id long, cvterm_id long, pub_id long, "
+        "rank int, is_not boolean"
+    ),
+    "feature_cvtermprop": "feature_cvterm_id long, type string, value string",
+    # stock module
+    "stock": (
+        "stock_id long, uniquename string, name string, organism_id long, "
+        "description string, type_id long"
+    ),
+    "stockcollection": "stockcollection_id long, name string, type_id long",
+    "stockcollection_stock": "stockcollection_id long, stock_id long",
+    "stockprop": "stock_id long, type_id long, value string, rank int",
+    "stock_pub": "stock_id long, pub_id long",
+    "stock_cvterm": "stock_id long, cvterm_id long, pub_id long",
+    "stock_relationship": "object_id long, subject_id long, type_id long",
+    "genotype": "genotype_id long, name string, uniquename string, type_id long",
+    "stock_genotype": "stock_id long, genotype_id long",
+    "phenotype": "phenotype_id long, observable string, assay string, value string",
+    "environment": "environment_id long, name string",
+    "phenstatement": (
+        "phenotype_id long, genotype_id long, environment_id long, "
+        "type_id long, pub_id long"
+    ),
 }
 
 
@@ -98,9 +137,19 @@ class ChadoState:
 
     def declare(self, names: Iterable[str]) -> None:
         """Add each table of ``names`` not held yet, empty."""
+        self.clear([name for name in names if name not in self.tables])
+
+    def clear(self, names: Iterable[str]) -> None:
+        """Replace each table of ``names`` by an empty one."""
         for name in names:
-            if name not in self.tables:
-                self.tables[name] = local_frame(self.spark, [], SCHEMAS[name])
+            self.tables[name] = local_frame(self.spark, [], SCHEMAS[name])
+
+    def shaped(self, table: str, df: DataFrame) -> DataFrame:
+        """``df`` under the columns of ``table``, NULL where it has none."""
+        return df.select(*[
+            F.col(f.name) if f.name in df.columns else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in self.tables[table].schema
+        ])
 
     def term_ids(self, cv: str | None = None) -> DataFrame:
         """(name, cvterm_id) of the terms of ``cv``, or of every term."""
@@ -155,8 +204,10 @@ class ChadoState:
         created by name, and each (name, cv) pair that has no cvterm yet
         gets an ``internal``-db dbxref ``accession`` and a cvterm. The
         ``(accession, db_id)`` rows of ``dbxrefs`` are found or created in
-        the same dbxref statement. The ``internal`` db must exist."""
+        the same dbxref statement; ``terms`` is evaluated once for the
+        three statements. The ``internal`` db must exist."""
         t = self.tables
+        terms = materialized(terms)
         self.find_or_create_names("cv", terms.select(F.col("cv").alias("name")))
         internal = t["db"].filter(F.col("name") == "internal").first().db_id
         missing = terms.join(
@@ -322,24 +373,13 @@ def restore_loader_state(loader, catalog: ChadoCatalog) -> None:
 # tables, but the order is applied unconditionally so the test exercises
 # the exact write sequence a Postgres Chado would need.
 JDBC_TABLE_ORDER = [
-    "db",
-    "dbxref",
-    "cv",
-    "cvterm",
-    "cvtermsynonym",
-    "cvterm_relationship",
-    "cvtermprop",
-    "organism",
-    "pub",
-    "synonym",
-    "analysis",
-    "feature",
-    "featureloc",
-    "feature_relationship",
-    "analysisfeature",
-    "feature_synonym",
-    "feature_dbxref",
-    "featureprop",
+    "db", "dbxref", "cv", "cvterm", "cvtermsynonym", "cvterm_relationship", "cvtermprop",
+    "organism", "pub", "pubauthor", "pubprop", "synonym", "analysis",
+    "feature", "featureloc", "feature_relationship", "analysisfeature", "feature_synonym",
+    "feature_dbxref", "featureprop", "feature_cvterm", "feature_cvtermprop",
+    "stockcollection", "stock", "stockcollection_stock", "stockprop", "stock_pub",
+    "stock_cvterm", "stock_relationship", "genotype", "stock_genotype",
+    "environment", "phenotype", "phenstatement",
 ]
 
 

@@ -43,16 +43,23 @@ from modware_loader_spark.catalog import (
     restore_loader_state,
     save_loader_state,
 )
-from modware_loader_spark.frames import local_frame
 from modware_loader_spark.session import get_spark
 
 
-def _gff3_loader(spark, catalog):
+def _restored(name: str, args, make_loader=None):
+    """An export command's loader: ``make_loader(spark)`` (default: the
+    GFF3 loader) with the catalog restored into it."""
     from modware_loader_spark.plans.gff3_load import ChadoGFF3Loader
 
-    loader = ChadoGFF3Loader(spark)
-    restore_loader_state(loader, catalog)
+    spark = get_spark(name)
+    loader = (make_loader or ChadoGFF3Loader)(spark)
+    restore_loader_state(loader, ChadoCatalog(spark, args.catalog))
     return loader
+
+
+def _holds(catalog: str, *tables: str) -> bool:
+    """Whether the catalog directory holds every table of ``tables``."""
+    return all(os.path.isdir(os.path.join(catalog, name)) for name in tables)
 
 
 def _load(args, name: str, make_loader, load) -> dict:
@@ -150,9 +157,7 @@ def cmd_chado2gff3(args) -> dict:
     from modware_loader_spark.plans.exports import chado2gff3_rows, sequence_regions
     from modware_loader_spark.sinks.gff3 import write_gff3
 
-    spark = get_spark("chado2gff3")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = _gff3_loader(spark, catalog)
+    loader = _restored("chado2gff3", args)
     rows = chado2gff3_rows(loader)
     n = write_gff3(rows, args.output, sequence_regions=sequence_regions(loader))
     return {"features_exported": n}
@@ -165,9 +170,7 @@ def cmd_chado2alignmentgff3(args) -> dict:
     )
     from modware_loader_spark.sinks.gff3 import write_gff3
 
-    spark = get_spark("chado2alignmentgff3")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = _gff3_loader(spark, catalog)
+    loader = _restored("chado2alignmentgff3", args)
     rows = chado2alignment_rows(
         loader,
         args.feature_type,
@@ -205,9 +208,7 @@ def cmd_chado2fasta(args) -> dict:
     from modware_loader_spark.plans.exports import spliced_sequences
     from modware_loader_spark.sinks.fasta import write_fasta
 
-    spark = get_spark("chado2fasta")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = _gff3_loader(spark, catalog)
+    loader = _restored("chado2fasta", args)
     if args.feature_type:
         seqs = spliced_sequences(loader, child_type=args.feature_type).select(
             F.col("parent").alias("id"), F.col("spliced").alias("sequence")
@@ -224,8 +225,6 @@ def cmd_gaf2chado(args) -> dict:
     """dictygaf2chado: GAF annotation load against the catalog's feature +
     ontology state, with the dicty appender roles as flags (reference
     dictygaf2chado.pm:21-68 — prune/ncrna/dupes/limit)."""
-    from pyspark.sql import functions as F
-
     from modware_loader_spark.plans.gaf_load import GAFLoader
     from modware_loader_spark.plans.goa_append import (
         append_duplicates,
@@ -235,44 +234,22 @@ def cmd_gaf2chado(args) -> dict:
     )
     from modware_loader_spark.sources.gaf import parse_gaf
 
-    spark = get_spark("gaf2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    got = catalog.load(["feature", "cvterm", "dbxref", "cvtermsynonym", "pub"])
-    features = got.get("feature")
-    cvterm, dbxref = got.get("cvterm"), got.get("dbxref")
-    if features is None or cvterm is None or dbxref is None:
-        raise SystemExit("catalog must hold feature + ontology state first")
-    cvterms = cvterm.join(dbxref, "dbxref_id").select("cvterm_id", "accession")
-    pubs = got.get("pub")
-    if pubs is None:
-        pubs = local_frame(spark, [], "pub_id long, uniquename string")
-    syn = got.get("cvtermsynonym")
-    evidence = (
-        syn.join(cvterm.select("cvterm_id"), "cvterm_id", "left_semi").select(
-            "cvterm_id", F.col("synonym")
-        )
-        if syn is not None
-        else local_frame(spark, [], "cvterm_id long, synonym string")
-    )
-    loader = GAFLoader(spark, features=features, cvterms=cvterms, pubs=pubs,
-                       evidence=evidence)
-    gaf = parse_gaf(spark, args.input)
-    if args.dupes:
-        chr2 = load_chr2_dups(spark, args.chr2dups) if args.chr2dups else None
-        gaf = append_duplicates(gaf, chr2_map=chr2)
-    if args.ncrna:
-        gaf = append_ncrna(gaf, load_ncrna_gaf(spark, args.ncrna))
-    if args.limit:
-        gaf = gaf.limit(args.limit)
-    if args.prune:
-        loader.prune()
-    counts = loader.load(gaf)
-    if not args.dry_run:
-        catalog.save(
-            {"feature_cvterm": loader.feature_cvterm,
-             "feature_cvtermprop": loader.feature_cvtermprop}
-        )
-    return counts
+    def load(loader) -> dict:
+        if not _holds(args.catalog, "feature", "cvterm", "dbxref"):
+            raise SystemExit("catalog must hold feature + ontology state first")
+        gaf = parse_gaf(loader.spark, args.input)
+        if args.dupes:
+            chr2 = load_chr2_dups(loader.spark, args.chr2dups) if args.chr2dups else None
+            gaf = append_duplicates(gaf, chr2_map=chr2)
+        if args.ncrna:
+            gaf = append_ncrna(gaf, load_ncrna_gaf(loader.spark, args.ncrna))
+        if args.limit:
+            gaf = gaf.limit(args.limit)
+        if args.prune:
+            loader.prune()
+        return loader.load(gaf)
+
+    return _load(args, "gaf2chado", GAFLoader, load)
 
 
 def cmd_chado2canonicalgff3(args) -> dict:
@@ -281,9 +258,7 @@ def cmd_chado2canonicalgff3(args) -> dict:
     from modware_loader_spark.plans.dicty_exports import canonical_rows
     from modware_loader_spark.sinks.gff3 import write_gff3
 
-    spark = get_spark("chado2canonicalgff3")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = _gff3_loader(spark, catalog)
+    loader = _restored("chado2canonicalgff3", args)
     rows = canonical_rows(loader)
     return {"features_exported": write_gff3(rows, args.output)}
 
@@ -295,9 +270,7 @@ def cmd_chado2dictygff3(args) -> dict:
     from modware_loader_spark.plans import dicty_exports as de
     from modware_loader_spark.sinks.gff3 import write_gff3
 
-    spark = get_spark("chado2dictygff3")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = _gff3_loader(spark, catalog)
+    loader = _restored("chado2dictygff3", args)
     if args.variant == "canonical":
         rows = de.dicty_canonical_rows(loader)
     elif args.variant == "noncanonical":
@@ -445,23 +418,11 @@ def cmd_blast2chadogff3(args) -> dict:
 
 def cmd_bibtex2chado(args) -> dict:
     """bibtex2chado: BibTeX entries → pub module tables in the catalog
-    (reference bibtex2chado.pm via BibTeX::Parser)."""
-    from modware_loader_spark.plans.bibtex_load import load_bibtex_pubs
+    (reference bibtex2chado.pm via BibTeX::Parser); pubs already in the
+    catalog are kept, the pub types go into cv ``pub_type``."""
+    from modware_loader_spark.plans.bibtex_load import BibTeXLoader
 
-    spark = get_spark("bibtex2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    got = load_bibtex_pubs(spark, args.input)
-    counts = {name: df.count() for name, df in got.items()}
-    if not args.dry_run:
-        catalog.save(
-            {
-                "pub": got["pub"],
-                "pubauthor": got["pubauthor"],
-                "pubprop": got["pubprop"],
-                "pub_type_cvterm": got["cvterm"],
-            }
-        )
-    return counts
+    return _load(args, "bibtex2chado", BibTeXLoader, lambda ldr: ldr.load_file(args.input))
 
 
 def cmd_dictybib(args) -> dict:
@@ -485,19 +446,19 @@ def cmd_dictybib(args) -> dict:
 
 def cmd_dictynonpub2bib(args) -> dict:
     """dictynonpub2bib: non-PubMed pubs rendered as BibTeX articles
-    (reference Export/Command/dictynonpub2bib.pm)."""
+    (reference Export/Command/dictynonpub2bib.pm), abstracts typed by
+    the ``pub_type`` cv."""
+    from modware_loader_spark.plans.bibtex_load import BibTeXLoader
     from modware_loader_spark.plans.bibtex_update import nonpub2bib_rows
-
-    spark = get_spark("dictynonpub2bib")
-    catalog = ChadoCatalog(spark, args.catalog)
-    got = catalog.load(["pub", "pubprop", "pubauthor", "pub_type_cvterm"])
-    for need in ("pub", "pubprop", "pubauthor", "pub_type_cvterm"):
-        if need not in got:
-            raise SystemExit(f"catalog must hold {need} (run bibtex2chado first)")
     from modware_loader_spark.sinks.text import write_single_text
 
+    for need in ("pub", "pubprop", "pubauthor", "cvterm"):
+        if not _holds(args.catalog, need):
+            raise SystemExit(f"catalog must hold {need} (run bibtex2chado first)")
+    loader = _restored("dictynonpub2bib", args, BibTeXLoader)
+    t = loader.tables
     rows = nonpub2bib_rows(
-        got["pub"], got["pubprop"], got["pubauthor"], got["pub_type_cvterm"],
+        t["pub"], t["pubprop"], t["pubauthor"], loader.chado.term_ids("pub_type"),
         timestamp=not args.no_timestamp,
     )
     n = write_single_text(rows, "text", args.output, order_by="citekey")
@@ -599,9 +560,8 @@ def cmd_chado2genesummary(args) -> dict:
     chado2genesummary.pm + WithMediaWikiFormatter)."""
     from modware_loader_spark.plans.gene_summary import gene_summaries
 
-    spark = get_spark("chado2genesummary")
-    catalog = ChadoCatalog(spark, args.catalog)
-    loader = _gff3_loader(spark, catalog)
+    loader = _restored("chado2genesummary", args)
+    spark = loader.spark
     paragraphs = (
         spark.read.option("sep", "\t")
         .csv(args.paragraphs)
@@ -622,16 +582,12 @@ def cmd_chado2genesummary(args) -> dict:
 
 
 def cmd_organism2chado(args) -> dict:
-    """organism2chado: organism TSV → organism table (reference
-    organism2chado.pm; ships its own share/organism.txt when no input)."""
-    from modware_loader_spark.plans.organism_load import load_organisms
+    """organism2chado: organism TSV → organism table, found or created on
+    (genus, species) (reference organism2chado.pm; ships its own
+    share/organism.txt when no input)."""
+    from modware_loader_spark.plans.organism_load import OrganismLoader
 
-    spark = get_spark("organism2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    organisms = load_organisms(spark, args.input)
-    if not args.dry_run:
-        catalog.save({"organism": organisms})
-    return {"organisms": organisms.count()}
+    return _load(args, "organism2chado", OrganismLoader, lambda ldr: ldr.load_file(args.input))
 
 
 def cmd_dictystrain(args) -> dict:
@@ -657,103 +613,74 @@ def cmd_dictyplasmid(args) -> dict:
     return {"plasmids": rows.count(), "invalid": got["invalid"].count()}
 
 
-def _save_stock_importer(imp, catalog) -> None:
-    catalog.save({f"stock_{name}": df for name, df in imp.tables.items()})
+def _stock_props(spark, path):
+    from pyspark.sql import functions as F
+
+    return (
+        spark.read.option("sep", "\t")
+        .csv(path)
+        .toDF("strain_id", "prop_type", "value")
+        .withColumn("line_idx", F.monotonically_increasing_id())
+    )
 
 
 def cmd_dictystrain2chado(args) -> dict:
-    """dictystrain2chado: strain TSV (+ props) → stock module tables
-    (reference Import/Command/dictystrain2chado.pm + StrainImporter)."""
+    """dictystrain2chado: strain TSV (+ props) → stock module tables of
+    the catalog (reference Import/Command/dictystrain2chado.pm +
+    StrainImporter)."""
     from modware_loader_spark.plans.stock_import import StockImporter
     from modware_loader_spark.sources.tsv_stock import parse_strains
-    from pyspark.sql import functions as F
 
-    spark = get_spark("dictystrain2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    imp = StockImporter(spark)
-    strains, invalid = parse_strains(spark, args.input)
-    counts = {"invalid": invalid.count(), **imp.import_stock(strains)}
-    if args.props:
-        props = (
-            spark.read.option("sep", "\t")
-            .csv(args.props)
-            .toDF("strain_id", "prop_type", "value")
-            .withColumn("line_idx", F.monotonically_increasing_id())
-        )
-        counts.update(imp.import_props(props, "dicty_stockcenter_props"))
-    if not args.dry_run:
-        _save_stock_importer(imp, catalog)
-    return counts
+    def load(imp) -> dict:
+        strains, invalid = parse_strains(imp.spark, args.input)
+        counts = {"invalid": invalid.count(), **imp.import_stock(strains)}
+        if args.props:
+            props = _stock_props(imp.spark, args.props)
+            counts.update(imp.import_props(props, "dicty_stockcenter_props"))
+        return counts
+
+    return _load(args, "dictystrain2chado", StockImporter, load)
 
 
 def cmd_dictyplasmid2chado(args) -> dict:
-    """dictyplasmid2chado: plasmid TSV (+ props) → stock module tables
-    (reference Import/Command/dictyplasmid2chado.pm + PlasmidImporter)."""
+    """dictyplasmid2chado: plasmid TSV (+ props) → stock module tables of
+    the catalog (reference Import/Command/dictyplasmid2chado.pm +
+    PlasmidImporter)."""
     from modware_loader_spark.plans.stock_import import StockImporter
     from modware_loader_spark.sources.tsv_stock import parse_plasmids
-    from pyspark.sql import functions as F
 
-    spark = get_spark("dictyplasmid2chado")
-    catalog = ChadoCatalog(spark, args.catalog)
-    imp = StockImporter(spark)
-    plasmids, invalid = parse_plasmids(spark, args.input)
-    counts = {
-        "invalid": invalid.count(),
-        **imp.import_stock(
-            plasmids,
-            stock_type="plasmid",
-            id_col="plasmid_id",
-            name_col="plasmid_name",
-            species_col=None,
-            descr_col="plasmid_descr",
-        ),
-    }
-    if args.props:
-        props = (
-            spark.read.option("sep", "\t")
-            .csv(args.props)
-            .toDF("strain_id", "prop_type", "value")
-            .withColumn("line_idx", F.monotonically_increasing_id())
-        )
-        counts.update(imp.import_props(props, "dicty_stockcenter_props"))
-    if not args.dry_run:
-        _save_stock_importer(imp, catalog)
-    return counts
+    def load(imp) -> dict:
+        plasmids, invalid = parse_plasmids(imp.spark, args.input)
+        counts = {
+            "invalid": invalid.count(),
+            **imp.import_stock(
+                plasmids,
+                stock_type="plasmid",
+                id_col="plasmid_id",
+                name_col="plasmid_name",
+                species_col=None,
+                descr_col="plasmid_descr",
+            ),
+        }
+        if args.props:
+            props = _stock_props(imp.spark, args.props)
+            counts.update(imp.import_props(props, "dicty_stockcenter_props"))
+        return counts
+
+    return _load(args, "dictyplasmid2chado", StockImporter, load)
 
 
 def cmd_chado2gaf(args) -> dict:
     """dictygaf: GAF 2.0 export of the catalog's feature_cvterm state
     (reference Export dictygaf / Export::GAF base)."""
-    from pyspark.sql import functions as F
-
     from modware_loader_spark.plans.gaf_export import chado2gaf_rows
     from modware_loader_spark.plans.gaf_load import GAFLoader
     from modware_loader_spark.sinks.gaf import write_gaf
 
-    spark = get_spark("chado2gaf")
-    catalog = ChadoCatalog(spark, args.catalog)
-    got = catalog.load(
-        ["feature", "cvterm", "dbxref", "pub", "feature_cvterm", "feature_cvtermprop"]
-    )
     for need in ("feature", "cvterm", "dbxref", "feature_cvterm"):
-        if need not in got:
+        if not _holds(args.catalog, need):
             raise SystemExit(f"catalog must hold {need} (run gaf2chado first)")
-    cvterms = got["cvterm"].join(got["dbxref"], "dbxref_id").select(
-        "cvterm_id", "accession"
-    )
-    pubs = got.get("pub")
-    if pubs is None:
-        pubs = local_frame(spark, [], "pub_id long, uniquename string")
-    loader = GAFLoader(
-        spark,
-        features=got["feature"],
-        cvterms=cvterms,
-        pubs=pubs,
-        evidence=local_frame(spark, [], "cvterm_id long, synonym string"),
-    )
-    loader.feature_cvterm = got["feature_cvterm"]
-    if "feature_cvtermprop" in got:
-        loader.feature_cvtermprop = got["feature_cvtermprop"]
+    loader = _restored("chado2gaf", args, GAFLoader)
     rows = chado2gaf_rows(loader, db=args.db, taxon=args.taxon)
     write_gaf(rows, args.output)
     out = {"annotations": rows.count()}

@@ -325,11 +325,18 @@ def append(
         base = live.agg(F.max(id_col).alias("m")).first().m or 0
         new = (generate_ids(new[0], order_by, id_col=id_col, start=base + 1),)
     new = tuple(df.localCheckpoint() for df in new)
-    if not live._jdf.queryExecution().logical().children().isEmpty():
-        live = live.localCheckpoint()
+    live = materialized(live)
     for df in new:
         live = live.unionByName(df.select(*live.columns))
     return (live, *new)
+
+
+def materialized(df: DataFrame) -> DataFrame:
+    """``df`` itself if it is a single leaf (a scan, a local relation or an
+    earlier materialization), else ``df`` materialized once."""
+    if df._jdf.queryExecution().logical().children().isEmpty():
+        return df
+    return df.localCheckpoint()
 
 
 def find_or_create(

@@ -783,11 +783,15 @@ def s13_bibtex2chado_pub(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pub summary. Golden VALUES oracle mirroring the reference's own
     golden counts (``t/loader/bibtex2chado.t``: 5 pubs / 16 authors /
     12 pubprops; pipeline ``plans/bibtex_load.py``)."""
-    from modware_loader_spark.plans.bibtex_load import load_bibtex_pubs
+    from modware_loader_spark.plans.bibtex_load import BibTeXLoader
 
-    t = load_bibtex_pubs(spark, _BIBTEX_FIXTURE)
+    loader = BibTeXLoader(spark)
+    loader.load_file(_BIBTEX_FIXTURE)
+    t = loader.tables
     types = F.broadcast(
-        t["cvterm"].select(F.col("cvterm_id").alias("type_id"), F.col("name").alias("pub_type"))
+        loader.chado.term_ids("pub_type").select(
+            F.col("cvterm_id").alias("type_id"), F.col("name").alias("pub_type")
+        )
     )
     n_auth = t["pubauthor"].groupBy("pub_id").agg(F.count(F.lit(1)).alias("n_authors"))
     n_prop = t["pubprop"].groupBy("pub_id").agg(F.count(F.lit(1)).alias("n_props"))

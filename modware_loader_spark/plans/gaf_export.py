@@ -26,28 +26,25 @@ def chado2gaf_rows(
     synonyms: DataFrame | None = None,
 ) -> DataFrame:
     """→ DataFrame in GAF column layout (arrays for multi-valued cols)."""
-    fc = loader.feature_cvterm
+    t = loader.tables
+    fc = t["feature_cvterm"]
 
     # E8: pivot the prop table once instead of per-row lookups
     props = (
-        loader.feature_cvtermprop.groupBy("feature_cvterm_id")
+        t["feature_cvtermprop"].groupBy("feature_cvterm_id")
         .pivot("type", list(PROP_TYPES))
         .agg(F.first("value"))
     )
 
-    feat = loader.features.select(
+    feat = t["feature"].select(
         "feature_id",
         F.col("uniquename").alias("db_object_id"),
-        *(
-            [F.col("symbol").alias("db_object_symbol")]
-            if "symbol" in loader.features.columns
-            else [F.col("uniquename").alias("db_object_symbol")]
-        ),
+        F.col("uniquename").alias("db_object_symbol"),
     )
-    go = loader.cvterms.select(
+    go = loader.go_terms().select(
         "cvterm_id", F.concat(F.lit("GO:"), F.col("accession")).alias("go_id")
     )
-    pubs = loader.pubs.select("pub_id", F.col("uniquename").alias("db_ref_str"))
+    pubs = t["pub"].select("pub_id", F.col("uniquename").alias("db_ref_str"))
 
     out = (
         fc.join(F.broadcast(props), "feature_cvterm_id", "left")

@@ -21,49 +21,46 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.catalog import ChadoState
 from modware_loader_spark.operators.merge import append
 from modware_loader_spark.sources.gaf import parse_gaf
 
-FEATURE_CVTERM_SCHEMA = (
-    "feature_cvterm_id long, feature_id long, cvterm_id long, pub_id long, "
-    "rank int, is_not boolean"
+# the annotation tables, then the tables the U6 joins read
+TABLES = (
+    "feature_cvterm", "feature_cvtermprop",
+    "feature", "cvterm", "dbxref", "pub", "cvtermsynonym",
 )
 
 # dependent prop rows (reference: feature_cvtermprops created per
 # annotation, GAF.pm:86-140; exported back via the per-row lookups the
 # E8 pivot replaces, Export/GAF.pm:239-253)
-PROP_SCHEMA = "feature_cvterm_id long, type string, value string"
 PROP_TYPES = ("qualifier", "date", "source", "with", "aspect", "evidence")
 
 
 class GAFLoader:
-    """Annotation loader against caller-provided dimension DataFrames:
-    features (feature_id, uniquename), cvterms (cvterm_id, accession),
-    pubs (pub_id, uniquename), evidence (cvterm_id, synonym)."""
+    """Annotation loader over a Chado state (``catalog.ChadoState``): it
+    writes ``feature_cvterm``/``feature_cvtermprop`` and resolves against
+    the state's features (uniquename), GO terms (dbxref accession), pubs
+    (uniquename) and evidence codes (cvterm synonyms)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        features: DataFrame,
-        cvterms: DataFrame,
-        pubs: DataFrame,
-        evidence: DataFrame,
-    ):
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.features = features
-        self.cvterms = cvterms
-        self.pubs = pubs
-        self.evidence = evidence
-        self.feature_cvterm = spark.createDataFrame([], FEATURE_CVTERM_SCHEMA)
-        self.feature_cvtermprop = spark.createDataFrame([], PROP_SCHEMA)
+        self.chado = ChadoState(spark)
+        self.chado.declare(TABLES)
+        self.tables = self.chado.tables
 
     def prune(self) -> None:
         """U5: full-table delete before reload (``Manager.pm:126-139``)."""
-        self.feature_cvterm = self.spark.createDataFrame([], FEATURE_CVTERM_SCHEMA)
-        self.feature_cvtermprop = self.spark.createDataFrame([], PROP_SCHEMA)
+        self.chado.clear(["feature_cvterm", "feature_cvtermprop"])
+
+    def go_terms(self) -> DataFrame:
+        """(cvterm_id, accession) of every term."""
+        t = self.tables
+        return t["cvterm"].join(t["dbxref"], "dbxref_id").select("cvterm_id", "accession")
 
     def resolve(self, gaf: DataFrame) -> DataFrame:
         """U6 resolution joins + validity filter (invalid rows dropped)."""
+        t = self.tables
         go_acc = F.substring_index(F.col("go_id"), ":", -1)
         pubref = F.element_at(F.col("db_ref"), 1)
         resolved = (
@@ -71,7 +68,7 @@ class GAFLoader:
             .withColumn("pubref", pubref)
             .join(
                 F.broadcast(
-                    self.features.select(
+                    t["feature"].select(
                         F.col("uniquename").alias("db_object_id"), "feature_id"
                     )
                 ),
@@ -80,21 +77,21 @@ class GAFLoader:
             )
             .join(
                 F.broadcast(
-                    self.cvterms.select(F.col("accession").alias("go_acc"), "cvterm_id")
+                    self.go_terms().select(F.col("accession").alias("go_acc"), "cvterm_id")
                 ),
                 "go_acc",
                 "left",
             )
             .join(
                 F.broadcast(
-                    self.pubs.select(F.col("uniquename").alias("pubref"), "pub_id")
+                    t["pub"].select(F.col("uniquename").alias("pubref"), "pub_id")
                 ),
                 "pubref",
                 "left",
             )
             .join(
                 F.broadcast(
-                    self.evidence.select(
+                    t["cvtermsynonym"].select(
                         F.col("synonym").alias("evidence_code"),
                         F.col("cvterm_id").alias("evidence_id"),
                     )
@@ -107,8 +104,9 @@ class GAFLoader:
         return resolved.dropna(subset=["feature_id", "cvterm_id", "pub_id"])
 
     def load(self, gaf: DataFrame) -> dict[str, int]:
+        t = self.tables
         valid = self.resolve(gaf).localCheckpoint()
-        live = self.feature_cvterm
+        live = t["feature_cvterm"]
         # U4 get_rank: continue from max existing rank per natural key
         base = live.groupBy("feature_id", "cvterm_id", "pub_id").agg(
             F.max("rank").alias("base_rank")
@@ -128,7 +126,7 @@ class GAFLoader:
         )
         # surrogate ids over the natural-key order — partition-offset
         # row_number (scale-safe M13), not a global window
-        self.feature_cvterm, keyed = append(
+        t["feature_cvterm"], keyed = append(
             live,
             ranked,
             id_col="feature_cvterm_id",
@@ -158,8 +156,8 @@ class GAFLoader:
                 )
             ).alias("p"),
         ).select("feature_cvterm_id", "p.type", "p.value")
-        self.feature_cvtermprop, _ = append(self.feature_cvtermprop, props)
-        return {"loaded": keyed.count(), "total": self.feature_cvterm.count()}
+        t["feature_cvtermprop"], _ = append(t["feature_cvtermprop"], props)
+        return {"loaded": keyed.count(), "total": t["feature_cvterm"].count()}
 
     def load_file(self, path: str) -> dict[str, int]:
         return self.load(parse_gaf(self.spark, path))

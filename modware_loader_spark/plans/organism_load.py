@@ -12,7 +12,9 @@ the row shaping + load:
 - strain rows append the strain to the species (Amoebozoa plugin,
   ``lib/Modware/Plugin/Import/Organism/Amoebozoa.pm``);
 - first-occurrence-wins dedup on the final species string;
-- abbreviation = uc(genus initial) + '.' + species.
+- abbreviation = uc(genus initial) + '.' + species;
+- an organism is found or created on (genus, species); new ones take
+  ids after the live max, in file order.
 """
 
 from __future__ import annotations
@@ -20,12 +22,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from modware_loader_spark.operators.merge import generate_ids
+from modware_loader_spark.catalog import ChadoState
+from modware_loader_spark.operators.merge import append
 
 
-def load_organisms(spark: SparkSession, path: str) -> DataFrame:
-    """TSV (with header line) → organism rows
-    (organism_id, genus, species, common_name, abbreviation)."""
+class OrganismLoader:
+    """organism2chado over a Chado state (``catalog.ChadoState``)."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.chado = ChadoState(spark)
+        self.chado.declare(["organism"])
+        self.tables = self.chado.tables
+
+    def load_file(self, path: str) -> dict[str, int]:
+        """→ the organisms of the file and the ones created."""
+        rows = organism_rows(self.spark, path).localCheckpoint()
+        live = self.tables["organism"]
+        fresh = rows.join(live.select("genus", "species"), ["genus", "species"], "left_anti")
+        self.tables["organism"], new = append(
+            live, fresh, id_col="organism_id", order_by=["ord", "species"]
+        )
+        return {"organisms": rows.count(), "new": new.count()}
+
+
+def organism_rows(spark: SparkSession, path: str) -> DataFrame:
+    """TSV (with header line) → organism rows (genus, species,
+    common_name, abbreviation) and their file order ``ord``."""
     raw = (
         spark.read.option("sep", "\t")
         .option("header", True)
@@ -66,6 +89,4 @@ def load_organisms(spark: SparkSession, path: str) -> DataFrame:
             "ord",
         )
     )
-    return generate_ids(deduped, ["ord", "species"], id_col="organism_id", start=1).drop(
-        "ord"
-    )
+    return deduped

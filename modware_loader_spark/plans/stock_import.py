@@ -39,39 +39,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.catalog import ChadoState
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators.merge import append, find_or_create, generate_ids
 
-SCHEMAS = {
-    "stock": (
-        "stock_id long, uniquename string, name string, organism_id long, "
-        "description string, type_id long"
-    ),
-    "stockcollection": "stockcollection_id long, name string, type_id long",
-    "stockcollection_stock": "stockcollection_id long, stock_id long",
-    "stockprop": "stock_id long, type_id long, value string, rank int",
-    "stock_pub": "stock_id long, pub_id long",
-    "stock_cvterm": "stock_id long, cvterm_id long, pub_id long",
-    "stock_relationship": "object_id long, subject_id long, type_id long",
-    "genotype": "genotype_id long, name string, uniquename string, type_id long",
-    "stock_genotype": "stock_id long, genotype_id long",
-    "phenotype": "phenotype_id long, observable string, assay string, value string",
-    "environment": "environment_id long, name string",
-    "phenstatement": (
-        "phenotype_id long, genotype_id long, environment_id long, "
-        "type_id long, pub_id long"
-    ),
-    "pub": "pub_id long, uniquename string",
-    "organism": "organism_id long, name string",
-    "cv": "cv_id long, name string",
-    "cvterm": "cvterm_id long, name string, cv_id long",
-    # plasmid sequence features + plasmid→gene edges (PlasmidImporter.pm)
-    "feature": (
-        "feature_id long, uniquename string, residues string, "
-        "md5checksum string, seqlen long, type_id long, dbxref string, "
-        "organism_id long"
-    ),
-    "feature_relationship": "object_id long, subject_id long, type_id long",
-}
+# the stock module, then the shared tables its verbs read and write
+TABLES = (
+    "stock", "stockcollection", "stockcollection_stock", "stockprop", "stock_pub",
+    "stock_cvterm", "stock_relationship", "genotype", "stock_genotype",
+    "phenotype", "environment", "phenstatement",
+    "db", "dbxref", "cv", "cvterm", "pub", "organism", "feature",
+    "feature_relationship",
+)
 
 # DataTransformer.pm:9-21 — positional column → strain_inventory term
 STRAIN_INVENTORY_KEYS = [
@@ -87,45 +66,63 @@ CHARACTERISTICS_PUB = "23494302"
 
 
 class StockImporter:
-    """Stateful stock-module catalog + the import verbs."""
+    """The stock import verbs over a Chado state (``catalog.ChadoState``):
+    stocks, their props, pubs, terms, genotypes and phenotypes, and the
+    plasmid sequences as ``feature`` rows."""
 
     def __init__(self, spark: SparkSession, cv_namespace: str = "dicty_stockcenter"):
         self.spark = spark
         self.cv_namespace = cv_namespace
-        self.tables = {
-            name: spark.createDataFrame([], schema) for name, schema in SCHEMAS.items()
-        }
+        self.chado = ChadoState(spark)
+        self.chado.declare(TABLES)
+        self.tables = self.chado.tables
         # existing-stock set from the last import_stock call (refresh scope)
         self._existing: DataFrame | None = None
 
     # -- find-or-create dims (broadcast-sized, anti-join-create) ----------
-    def cvterm_ids(self, cv: str, create: list[str] | None = None) -> DataFrame:
-        """(name, cvterm_id) within one cv, creating listed names."""
-        t = self.tables
-        t["cv"], _ = find_or_create(
-            t["cv"], self.spark.createDataFrame([(cv,)], "name string"), ["name"], "cv_id"
-        )
-        cvrow = t["cv"].filter(F.col("name") == cv).first()
-        if create:
-            rows = self.spark.createDataFrame(
-                [(n, cvrow.cv_id) for n in create], "name string, cv_id long"
-            )
-            t["cvterm"], _ = find_or_create(t["cvterm"], rows, ["name", "cv_id"], "cvterm_id")
-        return t["cvterm"].filter(F.col("cv_id") == cvrow.cv_id).select(
-            "name", "cvterm_id"
-        )
+    def _terms(self, cv: str, names: list[str] | DataFrame | None = None) -> DataFrame:
+        """(name, cvterm_id) of the terms of ``cv``, after finding or
+        creating those of ``names`` (a list, or a ``name`` frame) with an
+        ``internal``-db dbxref ``<cv>:<name>``, as GFF3 types are."""
+        if names is not None:
+            if not isinstance(names, DataFrame):
+                names = local_frame(self.spark, names, "name string")
+            self.chado.find_or_create_names("db", ["internal"])
+            self.chado.find_or_create_terms(names.select(
+                "name",
+                F.lit(cv).alias("cv"),
+                F.concat_ws(":", F.lit(cv), "name").alias("accession"),
+            ))
+        return self.chado.term_ids(cv)
 
     def _cvterm_id(self, name: str, cv: str) -> int:
-        return self.cvterm_ids(cv, create=[name]).filter(
-            F.col("name") == name
-        ).first().cvterm_id
+        return self._terms(cv, [name]).filter(F.col("name") == name).first().cvterm_id
 
     def _pub_ids(self, pmids: DataFrame) -> DataFrame:
         """(uniquename, pub_id) find-or-create by PMID."""
-        self.tables["pub"], _ = find_or_create(
-            self.tables["pub"], pmids.select("uniquename"), ["uniquename"], "pub_id"
+        t = self.tables
+        t["pub"], _ = find_or_create(
+            t["pub"], self.chado.shaped("pub", pmids.select("uniquename")),
+            ["uniquename"], "pub_id",
         )
-        return self.tables["pub"]
+        return t["pub"].select("uniquename", "pub_id")
+
+    def _organism_ids(self, names: DataFrame) -> DataFrame:
+        """(organism, organism_id) for the ``organism`` names of ``names``,
+        found or created on (genus, species): the name split at its first
+        space, as organism2chado splits a scientific name."""
+        named = names.select(
+            "organism",
+            F.substring_index("organism", " ", 1).alias("genus"),
+            F.regexp_extract("organism", r"^\S+ (.*)$", 1).alias("species"),
+        ).distinct()
+        t = self.tables
+        t["organism"], _ = find_or_create(
+            t["organism"], self.chado.shaped("organism", named.drop("organism")),
+            ["genus", "species"], "organism_id",
+        )
+        return named.join(t["organism"].select("genus", "species", "organism_id"),
+                          ["genus", "species"]).select("organism", "organism_id")
 
     def _stock_ids(self) -> DataFrame:
         return self.tables["stock"].select(
@@ -147,7 +144,7 @@ class StockImporter:
         type_id = self._cvterm_id(stock_type, self.cv_namespace)
         t["stockcollection"], _ = find_or_create(
             t["stockcollection"],
-            self.spark.createDataFrame([(collection, type_id)], "name string, type_id long"),
+            local_frame(self.spark, [(collection, type_id)], "name string, type_id long"),
             ["name"],
             "stockcollection_id",
         )
@@ -162,15 +159,11 @@ class StockImporter:
         fresh = keyed.join(live.select("uniquename"), "uniquename", "left_anti")
 
         if species_col:
-            t["organism"], _ = find_or_create(
-                t["organism"],
-                fresh.select(F.col(species_col).alias("name")).filter(
-                    F.col("name").isNotNull()
-                ),
-                ["name"],
-                "organism_id",
-            )
-            org = t["organism"].withColumnsRenamed({"name": species_col})
+            org = self._organism_ids(
+                fresh.select(F.col(species_col).alias("organism")).filter(
+                    F.col("organism").isNotNull()
+                )
+            ).withColumnsRenamed({"organism": species_col})
             fresh = fresh.join(F.broadcast(org), species_col, "left")
         else:
             fresh = fresh.withColumn("organism_id", F.lit(None).cast("long"))
@@ -196,24 +189,22 @@ class StockImporter:
         )
         return {"new": new_rows.count(), "existing": existing.count()}
 
-    def _prune_existing(self, table: str, type_scope: DataFrame | None = None) -> None:
+    def _prune_existing(self, table: str, scope: DataFrame | None = None) -> None:
         """Delete child rows of the existing-stock set (optionally only
-        rows whose type_id is in scope) — the reference's per-row
-        ``$prop->delete`` loops."""
+        rows whose term, the one column of ``scope``, is in scope) — the
+        reference's per-row ``$prop->delete`` loops."""
         if self._existing is None:
             return
         live = self.tables[table]
         doomed = live.join(self._existing.select("stock_id"), "stock_id", "left_semi")
-        if type_scope is not None:
-            doomed = doomed.join(type_scope, "type_id", "left_semi")
+        if scope is not None:
+            doomed = doomed.join(scope, scope.columns, "left_semi")
         # joins move the key column first; exceptAll is positional
         self.tables[table] = live.exceptAll(doomed.select(live.columns)).localCheckpoint()
 
     def import_props(self, rows: DataFrame, cv: str, id_col: str = "strain_id") -> dict:
         """rows: (id, prop_type, value, line_idx)."""
-        terms = self.cvterm_ids(
-            cv, create=[r.prop_type for r in rows.select("prop_type").distinct().collect()]
-        )
+        terms = self._terms(cv, rows.select(F.col("prop_type").alias("name")).distinct())
         self._prune_existing(
             "stockprop", terms.select(F.col("cvterm_id").alias("type_id"))
         )
@@ -248,7 +239,7 @@ class StockImporter:
         against the inventory ontology; ontology terms must pre-exist
         (unknown keys drop, the reference warns per key)."""
         keys = STRAIN_INVENTORY_KEYS if keys is None else keys
-        terms = self.cvterm_ids(cv)
+        terms = self._terms(cv)
         self._prune_existing(
             "stockprop", terms.select(F.col("cvterm_id").alias("type_id"))
         )
@@ -293,20 +284,11 @@ class StockImporter:
         self, rows: DataFrame, cv: str = "strain_characteristics", id_col: str = "strain_id"
     ) -> dict:
         """rows: (id, term)."""
-        terms = self.cvterm_ids(cv)
+        terms = self._terms(cv)
         pub_id = self._pub_ids(
-            self.spark.createDataFrame([(CHARACTERISTICS_PUB,)], "uniquename string")
+            local_frame(self.spark, [CHARACTERISTICS_PUB], "uniquename string")
         ).filter(F.col("uniquename") == CHARACTERISTICS_PUB).first().pub_id
-        if self._existing is not None:
-            live = self.tables["stock_cvterm"]
-            doomed = live.join(
-                self._existing.select("stock_id"), "stock_id", "left_semi"
-            ).join(
-                terms.select(F.col("cvterm_id")), "cvterm_id", "left_semi"
-            )
-            self.tables["stock_cvterm"] = live.exceptAll(
-                doomed.select(live.columns)
-            ).localCheckpoint()
+        self._prune_existing("stock_cvterm", terms.select("cvterm_id"))
         self.tables["stock_cvterm"], links = append(
             self.tables["stock_cvterm"],
             rows.withColumnsRenamed({id_col: "uniquename"})
@@ -319,10 +301,6 @@ class StockImporter:
     def import_genotype(self, rows: DataFrame, id_col: str = "strain_id") -> dict:
         """rows: (id, _, genotype_name) — full wipe then reload
         (:459-461: ``Genotype->delete``), DSC_G-prefixed uniquenames."""
-        self.tables["genotype"] = self.spark.createDataFrame([], SCHEMAS["genotype"])
-        self.tables["stock_genotype"] = self.spark.createDataFrame(
-            [], SCHEMAS["stock_genotype"]
-        )
         type_id = self._cvterm_id("genotype", self.cv_namespace)
         resolved = rows.withColumnsRenamed({id_col: "uniquename"}).join(
             self._stock_ids(), "uniquename"
@@ -350,7 +328,7 @@ class StockImporter:
     ) -> dict:
         """rows: (id, phenotype, environment, assay, pmid, value) —
         phenstatements against the wiped-and-reloaded phenotype table."""
-        self.tables["phenotype"] = self.spark.createDataFrame([], SCHEMAS["phenotype"])
+        self.chado.clear(["phenotype"])
         type_id = self._cvterm_id("observation", self.cv_namespace)
         t = self.tables
         t["phenotype"], _ = find_or_create(
@@ -369,7 +347,7 @@ class StockImporter:
             rows.select(F.col("pmid").alias("uniquename"))
             .filter(F.col("uniquename").isNotNull())
             .unionByName(
-                self.spark.createDataFrame([(default_pub,)], "uniquename string")
+                local_frame(self.spark, [default_pub], "uniquename string")
             )
         )
         default_pub_id = pubs.filter(F.col("uniquename") == default_pub).first().pub_id
@@ -472,48 +450,53 @@ class StockImporter:
         feature per sequence with a generated DBP-prefixed uniquename,
         linked to the stock through a plasmid_vector stockprop whose value
         is the feature uniquename (PlasmidImporter.pm:375-484). A
-        non-DBP ``seq_id`` records a GenBank dbxref. Existing stocks'
-        sequence props + features are pruned first (:388-400)."""
+        non-DBP ``seq_id`` becomes the feature's ``GenBank``-db dbxref.
+        Existing stocks' sequence props + features are pruned first
+        (:388-400)."""
+        t = self.tables
         type_id = self._cvterm_id("plasmid_vector", "sequence")
-        self.tables["organism"], _ = find_or_create(
-            self.tables["organism"],
-            self.spark.createDataFrame([(organism,)], "name string"),
-            ["name"],
-            "organism_id",
-        )
-        org_id = self.tables["organism"].filter(
-            F.col("name") == organism
+        org_id = self._organism_ids(
+            local_frame(self.spark, [organism], "organism string")
         ).first().organism_id
         # prune existing stocks' sequence features + props
         if self._existing is not None:
-            props = self.tables["stockprop"]
+            props = t["stockprop"]
             doomed = props.filter(F.col("type_id") == type_id).join(
                 self._existing.select("stock_id"), "stock_id", "left_semi"
             )
-            self.tables["feature"] = self.tables["feature"].join(
+            t["feature"] = t["feature"].join(
                 doomed.select(F.col("value").alias("uniquename")),
                 "uniquename",
                 "left_anti",
             ).localCheckpoint()
-            self.tables["stockprop"] = props.exceptAll(
+            t["stockprop"] = props.exceptAll(
                 doomed.select(props.columns)
             ).localCheckpoint()
-        seqs = _with_plasmid_feature_ids(self.tables["feature"], seqs, ["dbp_id", "seq_id"])
-        self.tables["feature"], feats = append(
-            self.tables["feature"],
-            seqs.select(
+        self.chado.find_or_create_names("db", ["GenBank"])
+        genbank = t["db"].filter(F.col("name") == "GenBank").first().db_id
+        accessions = seqs.filter(F.col("seq_id") != F.col("dbp_id")).select(
+            F.col("seq_id").alias("accession"), F.lit(genbank).cast("long").alias("db_id")
+        )
+        t["dbxref"], _ = find_or_create(t["dbxref"], accessions, ["accession", "db_id"], "dbxref_id")
+        xrefs = t["dbxref"].filter(F.col("db_id") == genbank).select(
+            F.col("accession").alias("seq_id"), "dbxref_id"
+        )
+        seqs = _with_plasmid_feature_ids(t["feature"], seqs, ["dbp_id", "seq_id"])
+        t["feature"], feats = append(
+            t["feature"],
+            self.chado.shaped("feature", seqs.join(F.broadcast(xrefs), "seq_id", "left").select(
                 "feature_id",
                 "uniquename",
                 F.col("sequence").alias("residues"),
                 F.md5("sequence").alias("md5checksum"),
-                F.length("sequence").alias("seqlen"),
+                F.length("sequence").cast("long").alias("seqlen"),
                 F.lit(type_id).alias("type_id"),
-                F.when(F.col("seq_id") != F.col("dbp_id"), F.col("seq_id")).alias("dbxref"),
+                F.when(F.col("seq_id") != F.col("dbp_id"), F.col("dbxref_id")).alias("dbxref_id"),
                 F.lit(org_id).alias("organism_id"),
-            ),
+            )),
         )
-        self.tables["stockprop"], links = append(
-            self.tables["stockprop"],
+        t["stockprop"], links = append(
+            t["stockprop"],
             seqs.select(F.col("dbp_id").alias("uniquename"), F.col("uniquename").alias("value"))
             .join(self._stock_ids(), "uniquename")
             .select(
@@ -523,19 +506,13 @@ class StockImporter:
         )
         return {"sequence_features": feats.count(), "sequence_props": links.count()}
 
-    def import_plasmid_genes(
-        self, rows: DataFrame, gene_features: DataFrame | None = None
-    ) -> dict:
+    def import_plasmid_genes(self, rows: DataFrame) -> dict:
         """rows: (plasmid_id, gene_id) → part_of edges from the plasmid's
-        sequence feature to the gene feature (PlasmidImporter.pm:485-588);
-        plasmids with no sequence feature get a bare one created +
-        stockprop-linked. ``gene_features``: (uniquename, feature_id) of
-        the gene side — defaults to this importer's feature table, in
-        production the chado catalog's."""
+        sequence feature to the gene ``feature`` of the state
+        (PlasmidImporter.pm:485-588); plasmids with no sequence feature
+        get a bare one created + stockprop-linked."""
         seq_type_id = self._cvterm_id("plasmid_vector", "sequence")
         rel_type_id = self._cvterm_id("part_of", "ro")
-        if gene_features is None:
-            gene_features = self.tables["feature"].select("uniquename", "feature_id")
         keyed = rows.filter(F.col("plasmid_id").rlike(r"^DBP[0-9]{7}"))
         # plasmid feature via the plasmid_vector stockprop
         pfeat = (
@@ -570,16 +547,9 @@ class StockImporter:
             bare = _with_plasmid_feature_ids(self.tables["feature"], missing, ["plasmid_id"])
             self.tables["feature"], _ = append(
                 self.tables["feature"],
-                bare.select(
-                    "feature_id",
-                    "uniquename",
-                    F.lit(None).cast("string").alias("residues"),
-                    F.lit(None).cast("string").alias("md5checksum"),
-                    F.lit(None).cast("long").alias("seqlen"),
-                    F.lit(seq_type_id).alias("type_id"),
-                    F.lit(None).cast("string").alias("dbxref"),
-                    F.lit(None).cast("long").alias("organism_id"),
-                ),
+                self.chado.shaped("feature", bare.select(
+                    "feature_id", "uniquename", F.lit(seq_type_id).alias("type_id")
+                )),
             )
             self.tables["stockprop"], _ = append(
                 self.tables["stockprop"],
@@ -603,8 +573,8 @@ class StockImporter:
             resolved = resolved.filter(F.col("plasmid_feature_id").isNotNull())
         edges = (
             resolved.join(
-                gene_features.withColumnsRenamed(
-                    {"uniquename": "gene_id", "feature_id": "subject_id"}
+                self.tables["feature"].select(
+                    F.col("uniquename").alias("gene_id"), F.col("feature_id").alias("subject_id")
                 ),
                 "gene_id",
             )

@@ -121,7 +121,7 @@ def test_dictystrain2chado_cli(capsys, tmp_path, spark):
     )
     # strain_import.t goldens: 50 new stocks, 85 props (15 rows miss)
     assert res["new"] == 50 and res["props"] == 85
-    stock = spark.read.parquet(os.path.join(cat, "stock_stock"))
+    stock = spark.read.parquet(os.path.join(cat, "stock"))
     assert stock.count() == 50
 
 

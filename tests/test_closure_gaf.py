@@ -12,6 +12,7 @@ from modware_loader_spark.plans.closure_load import ClosureLoader
 from modware_loader_spark.plans.gaf_load import GAFLoader
 from modware_loader_spark.plans.ontology_load import ChadoOntologyLoader
 from modware_loader_spark.sources.gaf import parse_gaf
+from tests.test_loader_pinned import seed_gaf_dims
 
 DATA = "/root/reference/t/test_data"
 
@@ -62,32 +63,27 @@ def test_gaf_parse_and_rank(spark, data_dir):
     assert any(len(r.db_object_synonym) > 5 for r in rows)
 
     # dims covering a subset of the file: unresolved rows must drop (U6)
-    features = spark.createDataFrame(
-        [("DDB_G0277399", 1), ("DDB_G0274035", 2)], "uniquename string, feature_id long"
+    loader = GAFLoader(spark)
+    seed_gaf_dims(
+        loader.chado,
+        [("DDB_G0277399", 1), ("DDB_G0274035", 2)],
+        [("0005515", 10), ("0003676", 11)],
+        [("PMID:16079174", 100), ("GO_REF:0000002", 101)],
+        [("IPI", 201), ("IEA", 202)],
     )
-    cvterms = spark.createDataFrame(
-        [("0005515", 10), ("0003676", 11)], "accession string, cvterm_id long"
-    )
-    pubs = spark.createDataFrame(
-        [("PMID:16079174", 100), ("GO_REF:0000002", 101)], "uniquename string, pub_id long"
-    )
-    evidence = spark.createDataFrame(
-        [("IPI", 201), ("IEA", 202)], "synonym string, cvterm_id long"
-    )
-    loader = GAFLoader(spark, features, cvterms, pubs, evidence)
     counts = loader.load(gaf)
     assert counts["loaded"] == 3  # 2 piaA rows + 1 stip-1 row resolve fully
-    fc = loader.feature_cvterm.orderBy("feature_cvterm_id").collect()
+    fc = loader.tables["feature_cvterm"].orderBy("feature_cvterm_id").collect()
     # U4: the two piaA annotations share (feature, cvterm, pub) → ranks 0,1
     piaa_rows = [r for r in fc if r.feature_id == 1]
     assert sorted(r.rank for r in piaa_rows) == [0, 1]
     # idempotent-ish continuation: reloading bumps ranks, not duplicates ids
     counts2 = loader.load(gaf)
     assert counts2["loaded"] == 3
-    piaa_rows2 = [r for r in loader.feature_cvterm.collect() if r.feature_id == 1]
+    piaa_rows2 = [r for r in loader.tables["feature_cvterm"].collect() if r.feature_id == 1]
     assert sorted(r.rank for r in piaa_rows2) == [0, 1, 2, 3]
     loader.prune()
-    assert loader.feature_cvterm.count() == 0
+    assert loader.tables["feature_cvterm"].count() == 0
 
 
 def test_goa_filters(spark, data_dir):

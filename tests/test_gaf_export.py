@@ -12,6 +12,7 @@ from modware_loader_spark.plans.gaf_export import chado2gaf_rows
 from modware_loader_spark.plans.gaf_load import GAFLoader
 from modware_loader_spark.sinks.gaf import write_gaf
 from modware_loader_spark.sources.gaf import parse_gaf
+from tests.test_loader_pinned import seed_gaf_dims
 
 DATA = "/root/reference/t/test_data"
 
@@ -21,20 +22,14 @@ def test_gaf_round_trip_through_chado(spark, tmp_path):
         pytest.skip("reference fixtures not available")
     gaf = parse_gaf(spark, os.path.join(DATA, "testdicty.gaf2"))
 
-    features = spark.createDataFrame(
-        [("DDB_G0277399", 1, "piaA"), ("DDB_G0274035", 2, "stip-1")],
-        "uniquename string, feature_id long, symbol string",
+    loader = GAFLoader(spark)
+    seed_gaf_dims(
+        loader.chado,
+        [("DDB_G0277399", 1), ("DDB_G0274035", 2)],
+        [("0005515", 10), ("0003676", 11)],
+        [("PMID:16079174", 100), ("GO_REF:0000002", 101)],
+        [("IPI", 201), ("IEA", 202)],
     )
-    cvterms = spark.createDataFrame(
-        [("0005515", 10), ("0003676", 11)], "accession string, cvterm_id long"
-    )
-    pubs = spark.createDataFrame(
-        [("PMID:16079174", 100), ("GO_REF:0000002", 101)], "uniquename string, pub_id long"
-    )
-    evidence = spark.createDataFrame(
-        [("IPI", 201), ("IEA", 202)], "synonym string, cvterm_id long"
-    )
-    loader = GAFLoader(spark, features, cvterms, pubs, evidence)
     loader.load(gaf)
 
     exported = chado2gaf_rows(loader)

@@ -188,12 +188,13 @@ def test_jdbc_key_range_pushdown_with_clob_columns(spark, tmp_path):
 
 
 def test_mixed_catalog_round_trip_over_jdbc(spark, tmp_path):
-    """A genome, an ontology and the genome again (the in-repo pinned
-    fixtures), each load restoring and saving the whole state as a CLI
-    command does, give the same counts and row-identical tables over
-    Derby as over a parquet catalog; ``loader_meta`` keeps both scalar
-    fields (the GFF3 auto-uniquename counter, the ontology metadata) and
-    lists every table either loader saved."""
+    """A genome, an ontology, the genome again, GO-style annotations of
+    its genes and a strain file (the in-repo pinned fixtures), each load
+    restoring and saving the whole state as a CLI command does, give the
+    same counts and row-identical tables over Derby as over a parquet
+    catalog; ``loader_meta`` keeps both scalar fields (the GFF3
+    auto-uniquename counter, the ontology metadata) and lists every table
+    any loader saved."""
     import json
     import os
 
@@ -204,13 +205,35 @@ def test_mixed_catalog_round_trip_over_jdbc(spark, tmp_path):
         save_loader_state,
         save_loader_state_jdbc,
     )
-    from modware_loader_spark.plans import gff3_load, ontology_load
+    from modware_loader_spark.operators.merge import find_or_create
+    from modware_loader_spark.plans import gaf_load, gff3_load, ontology_load, stock_import
+    from modware_loader_spark.sources.tsv_stock import parse_strains
     from tests.test_gff3_pinned import FIRST_COUNTS, GFF3, SECOND_COUNTS, _digest
     from tests.test_loader_pinned import FIX, ONTO_V1_COUNTS
 
     url, props = _derby(spark, tmp_path, "mixeddb")
     catalog = ChadoCatalog(spark, str(tmp_path / "catalog"))
     obo = os.path.join(FIX, "pinned_onto_v1.obo")
+    # two annotations of the pinned genome's genes with pinned ontology
+    # terms, citing one pub
+    gaf = tmp_path / "genes.gaf"
+    gaf.write_text("".join(
+        f"DDB\t{gene}\t{gene}\t\t{term}\tPMID:100\tIDA\t\tP\t\t\tgene\t"
+        "taxon:44689\t20200101\tdictyBase\t\t\n"
+        for gene, term in (("gA", "PO:0000001"), ("gB", "PO:0000002"))
+    ))
+
+    def annotate(ldr):
+        t = ldr.tables
+        t["pub"], _ = find_or_create(
+            t["pub"], ldr.chado.shaped("pub", spark.createDataFrame(
+                [("PMID:100",)], "uniquename string")),
+            ["uniquename"], "pub_id",
+        )
+        return ldr.load_file(str(gaf))
+
+    def strains(imp):
+        return imp.import_stock(parse_strains(spark, os.path.join(FIX, "pinned_strains.tsv"))[0])
     for restore, save in (
         (lambda ldr: restore_loader_state_jdbc(ldr, url, props),
          lambda ldr: save_loader_state_jdbc(ldr, url, props)),
@@ -221,6 +244,8 @@ def test_mixed_catalog_round_trip_over_jdbc(spark, tmp_path):
             (gff3_load.ChadoGFF3Loader, lambda ldr: ldr.load_file(GFF3), FIRST_COUNTS),
             (ontology_load.ChadoOntologyLoader, lambda ldr: ldr.load_file(obo), ONTO_V1_COUNTS),
             (gff3_load.ChadoGFF3Loader, lambda ldr: ldr.load_file(GFF3), SECOND_COUNTS),
+            (gaf_load.GAFLoader, annotate, {"loaded": 2, "total": 2}),
+            (stock_import.StockImporter, strains, {"new": 2, "existing": 0}),
         ):
             loader = make(spark)
             restore(loader)
@@ -233,7 +258,8 @@ def test_mixed_catalog_round_trip_over_jdbc(spark, tmp_path):
     }
     assert meta["auto_counter"] == 8
     assert meta["metadata"] == {"pinned_onto:date": "01:03:2020 10:00"}
-    names = sorted({*gff3_load.TABLES, *ontology_load.TABLES})
+    names = sorted({*gff3_load.TABLES, *ontology_load.TABLES, *gaf_load.TABLES,
+                    *stock_import.TABLES})
     assert meta["tables"] == names
     assert {n: _digest(spark.read.jdbc(url, n, properties=props)) for n in names} == {
         n: _digest(df) for n, df in catalog.load(names).items()

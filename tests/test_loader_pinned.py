@@ -10,6 +10,10 @@ reference fixtures or run only in the slow lane.
 - one ``StockImporter`` session over every import verb;
 - ``GAFLoader.load`` of a small GAF, twice.
 
+The stock and GAF loaders read terms, genes, pubs and evidence codes
+from their Chado state; the tests seed those rows into it
+(:func:`seed_terms`, :func:`seed_gaf_state`).
+
 Each digest is the sha256 of a table"s rows, sorted, under its column
 names (see ``tests/test_gff3_pinned.py``); the returned counts are pinned
 too.
@@ -19,6 +23,9 @@ from __future__ import annotations
 
 import os
 
+from modware_loader_spark.catalog import ChadoState
+from modware_loader_spark.frames import local_frame
+from modware_loader_spark.operators.merge import append
 from modware_loader_spark.plans.adhoc_ontology import adhoc_load
 from modware_loader_spark.plans.closure_load import ClosureLoader
 from modware_loader_spark.plans.gaf_load import GAFLoader
@@ -135,7 +142,7 @@ STOCK_COUNTS = [{"new": 3, "existing": 0},
 STOCK_DIGESTS = {"stock": "b5299b10ab8e1bc2",
  "stockcollection": "e698fdc5f99cdfc2",
  "stockcollection_stock": "e741fc6e796d874b",
- "stockprop": "fd8a064883417924",
+ "stockprop": "876276a09d75ddf1",
  "stock_pub": "13a3326ca1b0dfb1",
  "stock_cvterm": "05004c3d6f5b3c17",
  "stock_relationship": "724b0cd815d0377c",
@@ -144,12 +151,23 @@ STOCK_DIGESTS = {"stock": "b5299b10ab8e1bc2",
  "phenotype": "fb1fbe320082b641",
  "environment": "9da8ac39def094e4",
  "phenstatement": "ea3025bd9a3f97a4",
- "pub": "c19acea4f9a70b46",
- "organism": "9d671f8d4fa5d6c8",
+ "pub": "0a1b72eec582f85d",
+ "organism": "0617b01244371831",
  "cv": "e75ff2fa1d06d6a2",
- "cvterm": "b3c9710a1ed78bbb",
- "feature": "9fdb7f311446d32d",
- "feature_relationship": "464fcb1b61b650d2"}
+ "cvterm": "75163c727654c62e",
+ "feature": "11f083c0233a9f06",
+ "feature_relationship": "9875abbe9502032b"}
+
+
+def seed_terms(chado: ChadoState, cv: str, names: list[str]):
+    """The terms ``names`` of ``cv`` found or created in ``chado`` (as
+    an ontology load would have left them); → (name, cvterm_id) of ``cv``."""
+    chado.find_or_create_names("db", ["internal"])
+    chado.find_or_create_terms(local_frame(
+        chado.spark, [(n, cv, f"{cv}:{n}") for n in names],
+        "name string, cv string, accession string",
+    ))
+    return chado.term_ids(cv)
 
 
 def test_stock_session_pinned(spark):
@@ -174,12 +192,17 @@ def test_stock_session_pinned(spark):
             [("DBP0000001", "DBP0000001", "ATGCATGC"), ("DBP0000002", "AY123456", "GGGCCC")],
             "dbp_id string, seq_id string, sequence string",
         )),
+    ]
+    # the gene side of the plasmid edges: genome features of the state
+    imp.tables["feature"], _ = append(imp.tables["feature"], imp.chado.shaped(
+        "feature",
+        frame([("DDB_G0001", 9001), ("DDB_G0002", 9002)], "uniquename string, feature_id long"),
+    ))
+    counts += [
         imp.import_plasmid_genes(
             frame([("DBP0000001", "DDB_G0001"), ("DBP0000003", "DDB_G0002"),
                    ("DBP0000003", "DDB_G0001"), ("notdbp", "DDB_G0001")],
                   "plasmid_id string, gene_id string"),
-            gene_features=frame([("DDB_G0001", 9001), ("DDB_G0002", 9002)],
-                                "uniquename string, feature_id long"),
         ),
         # second strain load: DBS0000001/2 become the existing set that
         # every later verb prunes and refreshes
@@ -196,7 +219,7 @@ def test_stock_session_pinned(spark):
                   "strain_id string, prop_type string, value string, line_idx long"),
             "dicty_stockcenter_props",
         ),
-        imp.cvterm_ids("strain_inventory", create=["location", "color", "stored as"]).count(),
+        seed_terms(imp.chado, "strain_inventory", ["location", "color", "stored as"]).count(),
         imp.import_inventory(frame(
             [("DBS0000001", "freezer A", "blue", "3", "lab", "axenic", None, None, None, 1),
              ("DBS0000004", "freezer B", None, None, None, "spore", None, None, None, 2)],
@@ -208,7 +231,7 @@ def test_stock_session_pinned(spark):
             [("DBS0000001", "111"), ("DBS0000001", "111"), ("DBS0000002", "222"),
              ("DBS0000004", "111")], "strain_id string, pmid string",
         )),
-        imp.cvterm_ids("strain_characteristics", create=["axenic", "null mutant"]).count(),
+        seed_terms(imp.chado, "strain_characteristics", ["axenic", "null mutant"]).count(),
         imp.import_characteristics(frame(
             [("DBS0000001", "axenic"), ("DBS0000004", "null mutant"),
              ("DBS0000001", "nonexistent term")], "strain_id string, term string",
@@ -239,28 +262,45 @@ def test_stock_session_pinned(spark):
         )),
     ]
     assert counts == STOCK_COUNTS
-    assert _digests(imp.tables) == STOCK_DIGESTS
+    assert _digests({name: imp.tables[name] for name in STOCK_DIGESTS}) == STOCK_DIGESTS
 
 
 GAF_COUNTS = ({"loaded": 5, "total": 5}, {"loaded": 5, "total": 10})
 GAF_DIGESTS = {"feature_cvterm": "20c41b27654085c9", "feature_cvtermprop": "faa809d1edc003f3"}
 
 
-def test_gaf_load_pinned(spark):
-    def frame(rows, schema):
-        return spark.createDataFrame(rows, schema)
+def seed_gaf_dims(chado: ChadoState, features, terms, pubs, evidence) -> None:
+    """Rows of ``chado`` for the genes ``(uniquename, feature_id)``, GO
+    terms ``(accession, cvterm_id)``, pubs ``(uniquename, pub_id)`` and
+    evidence-code synonyms ``(synonym, cvterm_id)`` a GAF resolves against."""
+    spark, t = chado.spark, chado.tables
 
-    loader = GAFLoader(
-        spark,
-        frame([("DDB_G0000001", 1), ("DDB_G0000002", 2), ("DDB_G0000003", 3)],
-              "uniquename string, feature_id long"),
-        frame([("0005515", 10), ("0003676", 11)], "accession string, cvterm_id long"),
-        frame([("PMID:100", 100), ("PMID:200", 101)], "uniquename string, pub_id long"),
-        frame([("IPI", 201), ("IEA", 202)], "synonym string, cvterm_id long"),
+    def rows(table, data, schema):
+        t[table] = chado.shaped(table, local_frame(spark, data, schema))
+
+    rows("feature", features, "uniquename string, feature_id long")
+    rows("dbxref", [(acc, 1000 + i) for i, (acc, _) in enumerate(terms)],
+         "accession string, dbxref_id long")
+    rows("cvterm", [(cid, 1000 + i) for i, (_, cid) in enumerate(terms)],
+         "cvterm_id long, dbxref_id long")
+    rows("pub", pubs, "uniquename string, pub_id long")
+    rows("cvtermsynonym", evidence, "synonym string, cvterm_id long")
+
+
+def seed_gaf_state(chado: ChadoState) -> None:
+    """The dims that ``pinned.gaf`` resolves against."""
+    seed_gaf_dims(
+        chado,
+        [("DDB_G0000001", 1), ("DDB_G0000002", 2), ("DDB_G0000003", 3)],
+        [("0005515", 10), ("0003676", 11)],
+        [("PMID:100", 100), ("PMID:200", 101)],
+        [("IPI", 201), ("IEA", 202)],
     )
+
+
+def test_gaf_load_pinned(spark):
+    loader = GAFLoader(spark)
+    seed_gaf_state(loader.chado)
     gaf = parse_gaf(spark, os.path.join(FIX, "pinned.gaf"))
     assert (loader.load(gaf), loader.load(gaf)) == GAF_COUNTS
-    assert _digests({
-        "feature_cvterm": loader.feature_cvterm,
-        "feature_cvtermprop": loader.feature_cvtermprop,
-    }) == GAF_DIGESTS
+    assert _digests({name: loader.tables[name] for name in GAF_DIGESTS}) == GAF_DIGESTS

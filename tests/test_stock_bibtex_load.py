@@ -54,10 +54,18 @@ def test_plasmid_load_and_dump(spark, data_dir, tmp_path):
     assert all(len(ln.split("\t")) == 6 for ln in lines)
 
 
-def test_bibtex2chado_golden_counts(spark, data_dir):
-    from modware_loader_spark.plans.bibtex_load import load_bibtex_pubs
+def _bibtex_tables(spark, path):
+    """The pub tables of a fresh state after bibtex2chado of ``path``,
+    with ``cvterm`` = the (cvterm_id, name) of the pub types."""
+    from modware_loader_spark.plans.bibtex_load import BibTeXLoader
 
-    t = load_bibtex_pubs(spark, os.path.join(data_dir, "literature", "test.bib"))
+    loader = BibTeXLoader(spark)
+    loader.load_file(path)
+    return {**loader.tables, "cvterm": loader.chado.term_ids("pub_type")}
+
+
+def test_bibtex2chado_golden_counts(spark, data_dir):
+    t = _bibtex_tables(spark, os.path.join(data_dir, "literature", "test.bib"))
     # t/loader/bibtex2chado.t: 5 pubs, 16 authors, 12 pubprops
     assert t["pub"].count() == 5
     assert t["pubauthor"].count() == 16
@@ -71,9 +79,7 @@ def test_bibtex2chado_golden_counts(spark, data_dir):
 
 
 def test_bibtex2chado_record_shapes(spark, data_dir):
-    from modware_loader_spark.plans.bibtex_load import load_bibtex_pubs
-
-    t = load_bibtex_pubs(spark, os.path.join(data_dir, "literature", "test.bib"))
+    t = _bibtex_tables(spark, os.path.join(data_dir, "literature", "test.bib"))
     pubs = {r.uniquename: r for r in t["pub"].collect()}
     types = {r.cvterm_id: r.name for r in t["cvterm"].collect()}
 
@@ -106,10 +112,12 @@ def test_organism2chado_shaping(spark):
     """organism2chado row shaping (``organism2chado.pm:128-150`` +
     Amoebozoa plugin): genus-stripped species, strain-appended species,
     first-wins dedup, abbreviation minting."""
-    from modware_loader_spark.plans.organism_load import load_organisms
+    from modware_loader_spark.plans.organism_load import OrganismLoader
 
     fix = os.path.join(os.path.dirname(__file__), "fixtures", "amoebozoa.tsv")
-    rows = {r.species: r for r in load_organisms(spark, fix).collect()}
+    loader = OrganismLoader(spark)
+    loader.load_file(fix)
+    rows = {r.species: r for r in loader.tables["organism"].collect()}
     # AX4 + AX2 strains are distinct species entries; purpureum deduped
     assert set(rows) == {
         "discoideum AX4",

@@ -8,10 +8,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from modware_loader_spark.operators.merge import append
 from modware_loader_spark.plans.stock_import import (
     PLASMID_INVENTORY_KEYS,
     StockImporter,
 )
+from tests.test_loader_pinned import seed_terms
 
 
 @pytest.fixture()
@@ -70,7 +72,7 @@ def test_import_props_rank_and_refresh(spark, imp):
 def test_import_inventory_melt(spark, imp):
     imp.import_stock(_strains(spark, [("DBS0000001", "s1", "Dd", None)]))
     # ontology preloaded with only some keys → unknown keys drop
-    imp.cvterm_ids("strain_inventory", create=["location", "color", "stored as"])
+    seed_terms(imp.chado, "strain_inventory", ["location", "color", "stored as"])
     inv = spark.createDataFrame(
         [("DBS0000001", "freezer A", "blue", "3", "lab", "axenic", None, None, None, 1),
          ("DBS0000001", "freezer B", None, None, None, "spore", None, None, None, 2)],
@@ -116,7 +118,7 @@ def test_import_publications_dedup(spark, imp):
 @pytest.mark.slowlane
 def test_import_characteristics(spark, imp):
     imp.import_stock(_strains(spark, [("DBS0000001", "s1", "Dd", None)]))
-    imp.cvterm_ids("strain_characteristics", create=["axenic", "null mutant"])
+    seed_terms(imp.chado, "strain_characteristics", ["axenic", "null mutant"])
     ch = spark.createDataFrame(
         [("DBS0000001", "axenic"), ("DBS0000001", "nonexistent term")],
         "strain_id string, term string",
@@ -212,21 +214,22 @@ def test_plasmid_sequences_and_genes(spark, imp):
     )
     r = imp.import_plasmid_sequences(seqs)
     assert r == {"sequence_features": 2, "sequence_props": 2}
-    feats = {f.uniquename: f for f in imp.tables["feature"].collect()}
-    with_xref = [f for f in feats.values() if f.dbxref == "AY123456"]
+    feats = imp.tables["feature"].join(imp.tables["dbxref"], "dbxref_id")
+    with_xref = feats.filter(F.col("accession") == "AY123456").collect()
     assert len(with_xref) == 1 and with_xref[0].seqlen == 6
 
-    # gene link: gene feature supplied externally (chado side)
-    genes = spark.createDataFrame(
-        [("DDB_G0001", 9001)], "uniquename string, feature_id long"
-    )
+    # gene link: a genome feature of the state (chado side)
+    imp.tables["feature"], _ = append(imp.tables["feature"], imp.chado.shaped(
+        "feature",
+        spark.createDataFrame([("DDB_G0001", 9001)], "uniquename string, feature_id long"),
+    ))
     links = spark.createDataFrame(
         [("DBP0000001", "DDB_G0001"),   # existing sequence feature
          ("DBP0000002", "DDB_G0001"),   # existing sequence feature
          ("notdbp", "DDB_G0001")],      # invalid id skipped
         "plasmid_id string, gene_id string",
     )
-    r2 = imp.import_plasmid_genes(links, gene_features=genes)
+    r2 = imp.import_plasmid_genes(links)
     assert r2 == {"plasmid_gene_edges": 2, "features_created": 0}
     rel = imp.tables["feature_relationship"].collect()
     assert all(e.subject_id == 9001 for e in rel)

@@ -87,7 +87,8 @@ def test_plasmid_import_goldens(spark):
     feats = imp.tables["feature"]
     assert feats.count() == 2
     # the genbank record's accession differs from the DBP id → GenBank xref
-    assert feats.filter(F.col("dbxref") == "AF269237").count() == 1
+    xrefs = feats.join(imp.tables["dbxref"], "dbxref_id")
+    assert xrefs.filter(F.col("accession") == "AF269237").count() == 1
     # residues landed with real lengths
     assert feats.filter(F.col("seqlen") > 1000).count() >= 1
     # only the two DBP stocks got a plasmid_vector prop
