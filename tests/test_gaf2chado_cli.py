@@ -1,6 +1,7 @@
 """gaf2chado CLI (reference dictygaf2chado.pm): GAF load against catalog
 state with the dicty appender flags, exercised through cli.main to cover
-the cross-process catalog read path."""
+the cross-process catalog read path. The input is the in-repo GAF 2.0
+fixture ``tests/fixtures/dicty_annotations.gaf``."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import pytest
 
 from modware_loader_spark import cli
 
-REF = "/root/reference/t/test_data"
+GAF = os.path.join(os.path.dirname(__file__), "fixtures", "dicty_annotations.gaf")
 
 
 @pytest.fixture()
@@ -46,7 +47,7 @@ def mini_catalog(spark, tmp_path):
 def test_gaf2chado_cli(mini_catalog, capsys):
     rc = cli.main(
         ["gaf2chado",
-         "--input", os.path.join(REF, "testdicty.gaf2"),
+         "--input", GAF,
          "--catalog", mini_catalog]
     )
     assert rc == 0

@@ -57,14 +57,9 @@ def test_gaf_round_trip_through_chado(spark, tmp_path):
 def test_gaf_writer_format_validation(spark, tmp_path):
     """validate_gaf.t parity: every written line has exactly 17 tab
     columns and column 16 (annotation_extension) is empty when unset —
-    checked on both our writer's output and the reference's own
-    dicty_validate.gaf2 through the same assertion."""
-    import os
-
-    from modware_loader_spark.sinks.gaf import write_gaf
-    from modware_loader_spark.sources.gaf import parse_gaf
-
-    src = "/root/reference/t/test_data/dicty_validate.gaf2"
+    checked on both our writer's output and its input, the in-repo
+    ``tests/fixtures/pinned.gaf``, through the same assertion."""
+    src = os.path.join(os.path.dirname(__file__), "fixtures", "pinned.gaf")
 
     def check(path_glob):
         import glob

@@ -91,14 +91,17 @@ def test_dicty_canonical_plan_shape(spark):
 def test_goa_append_map_side_only(spark):
     """Duplicate expansion must broadcast the tiny map tables — the big
     GAF side never shuffles."""
+    import os
+
     from modware_loader_spark.plans.goa_append import (
         append_duplicates,
         load_chr2_dups,
     )
     from modware_loader_spark.sources.gaf import parse_gaf
 
-    gaf = parse_gaf(spark, "/root/reference/t/test_data/testdicty.gaf2")
-    chr2 = load_chr2_dups(spark, "/root/reference/share/chr2dups.txt")
+    fixtures = os.path.join(os.path.dirname(__file__), "fixtures")
+    gaf = parse_gaf(spark, os.path.join(fixtures, "dicty_annotations.gaf"))
+    chr2 = load_chr2_dups(spark, os.path.join(fixtures, "chr2dups.tsv"))
     plan = (
         append_duplicates(gaf, chr2_map=chr2)
         ._jdf.queryExecution()

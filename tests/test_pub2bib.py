@@ -11,11 +11,18 @@ import re
 import subprocess
 import sys
 
+import pytest
+
 from modware_loader_spark.plans.pub2bib import pub2bib_rows, pubmed_xml_to_bibtex
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 XML = os.path.join(FIX, "pubmed_dictygenomes.xml")
 GOLDEN = "/root/reference/t/test_data/literature/dictygenomespub.bib"
+# the golden is the reference checkout's own XSLT output; it is not
+# restated in the repo, so the comparisons run only where it exists
+needs_golden = pytest.mark.skipif(
+    not os.path.exists(GOLDEN), reason=f"reference golden {GOLDEN} not present"
+)
 
 
 def _norm(text: str) -> list[str]:
@@ -29,6 +36,7 @@ def _golden_entries() -> list[str]:
     return re.split(r"\n(?=@article\{)", bib.strip())[:3]
 
 
+@needs_golden
 def test_matches_reference_golden():
     out = pubmed_xml_to_bibtex(open(XML).read())
     assert _norm(out) == _norm("\n".join(_golden_entries()))
@@ -86,6 +94,7 @@ def test_distributed_pages(spark, tmp_path):
     assert "Exchange" not in plan  # no shuffle: per-file map only
 
 
+@needs_golden
 def test_cli_end_to_end(tmp_path):
     out = tmp_path / "pubs.bib"
     res = subprocess.run(

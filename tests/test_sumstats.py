@@ -1,18 +1,20 @@
 """sumstatsongff3 intron stats (reference sumstatsongff3.pm:39-120).
 
-The expected values are recomputed in-test with an independent plain-Python
-walk of the same GFF3 (sorted-exon gaps per mRNA), mirroring the
-reference's SQLite-store iteration.
+The input is the in-repo ``tests/fixtures/dicty_models.gff3``, which
+holds a multi-exon mRNA. The expected values are recomputed in-test with
+an independent plain-Python walk of the same GFF3 (sorted-exon gaps per
+mRNA), mirroring the reference's SQLite-store iteration.
 """
 
 from __future__ import annotations
 
 import collections
+import os
 
 from modware_loader_spark.plans.sumstats import intron_lengths, intron_stats
 from modware_loader_spark.sources.gff3 import parse_gff3
 
-REF_GFF3 = "/root/reference/t/test_data/gff3/test2.gff3"
+GFF3 = os.path.join(os.path.dirname(__file__), "fixtures", "dicty_models.gff3")
 
 
 def _expected_lengths(path):
@@ -43,24 +45,24 @@ def _expected_lengths(path):
 
 
 def test_intron_lengths_match_plain_python(spark):
-    features, _ = parse_gff3(spark, REF_GFF3)
+    features, _ = parse_gff3(spark, GFF3)
     got = sorted(
         r.intron_length for r in intron_lengths(features).collect()
     )
-    expected = sorted(_expected_lengths(REF_GFF3))
+    expected = sorted(_expected_lengths(GFF3))
     assert expected, "fixture must contain multi-exon transcripts"
     assert got == expected
 
 
 def test_intron_stats_row(spark):
-    features, _ = parse_gff3(spark, REF_GFF3)
+    features, _ = parse_gff3(spark, GFF3)
     row = intron_stats(features, filename="test2.gff3").first()
-    exp = _expected_lengths(REF_GFF3)
+    exp = _expected_lengths(GFF3)
     assert row.file == "test2.gff3" and row.type == "intron"
     assert row.avg_nt == sum(exp) // len(exp)
     assert row.max_nt == max(exp) and row.min_nt == min(exp)
 
 
 def test_source_restriction_empty(spark):
-    features, _ = parse_gff3(spark, REF_GFF3)
+    features, _ = parse_gff3(spark, GFF3)
     assert intron_stats(features, source="no_such_source").count() == 0
