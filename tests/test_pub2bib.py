@@ -15,6 +15,7 @@ import pytest
 
 from modware_loader_spark.plans.pub2bib import pub2bib_rows, pubmed_xml_to_bibtex
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 XML = os.path.join(FIX, "pubmed_dictygenomes.xml")
 GOLDEN = "/root/reference/t/test_data/literature/dictygenomespub.bib"
@@ -92,6 +93,19 @@ def test_distributed_pages(spark, tmp_path):
         assert r.bibtex.count("@article{") == 3
     plan = pub2bib_rows(spark, str(d))._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # no shuffle: per-file map only
+
+
+def test_cli_writes_entries(tmp_path):
+    """The chadopub2bib command on the in-repo XML, with no golden: it
+    exits 0 and writes one @article entry per PubmedArticle."""
+    out = tmp_path / "pubs.bib"
+    res = subprocess.run(
+        [sys.executable, "-m", "modware_loader_spark.cli", "chadopub2bib",
+         "--xml", XML, "--output", str(out)],
+        capture_output=True, text=True, cwd=REPO,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert out.read_text().count("@article{") == 3
 
 
 @needs_golden

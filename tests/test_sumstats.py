@@ -1,9 +1,14 @@
 """sumstatsongff3 intron stats (reference sumstatsongff3.pm:39-120).
 
-The input is the in-repo ``tests/fixtures/dicty_models.gff3``, which
-holds a multi-exon mRNA. The expected values are recomputed in-test with
-an independent plain-Python walk of the same GFF3 (sorted-exon gaps per
-mRNA), mirroring the reference's SQLite-store iteration.
+The input is the hand-written ``tests/fixtures/introns.gff3``: three
+multi-exon mRNAs on both strands with exons listed out of order, one exon
+shared by two isoforms (``Parent=a,b``), a single-exon mRNA and a
+two-exon tRNA (neither yields an intron). Its five introns have distinct
+lengths whose sum is not a multiple of five, so avg, max, min and the
+avg truncation are each observable. The expected values are recomputed
+in-test with an independent plain-Python walk of the same GFF3
+(sorted-exon gaps per mRNA), mirroring the reference's SQLite-store
+iteration.
 """
 
 from __future__ import annotations
@@ -14,7 +19,7 @@ import os
 from modware_loader_spark.plans.sumstats import intron_lengths, intron_stats
 from modware_loader_spark.sources.gff3 import parse_gff3
 
-GFF3 = os.path.join(os.path.dirname(__file__), "fixtures", "dicty_models.gff3")
+GFF3 = os.path.join(os.path.dirname(__file__), "fixtures", "introns.gff3")
 
 
 def _expected_lengths(path):
@@ -56,9 +61,9 @@ def test_intron_lengths_match_plain_python(spark):
 
 def test_intron_stats_row(spark):
     features, _ = parse_gff3(spark, GFF3)
-    row = intron_stats(features, filename="test2.gff3").first()
+    row = intron_stats(features, filename="introns.gff3").first()
     exp = _expected_lengths(GFF3)
-    assert row.file == "test2.gff3" and row.type == "intron"
+    assert row.file == "introns.gff3" and row.type == "intron"
     assert row.avg_nt == sum(exp) // len(exp)
     assert row.max_nt == max(exp) and row.min_nt == min(exp)
 
