@@ -117,6 +117,7 @@ class ChadoState:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.tables: dict[str, DataFrame] = {}
+        self.restored: dict[str, DataFrame] = {}
         self.auto_counter = 0
         self.metadata: dict[str, str] = {}
 
@@ -131,9 +132,18 @@ class ChadoState:
     ) -> None:
         """Replace each declared table that ``load(names)`` returns, and the
         scalar state by ``meta`` (as :meth:`scalars` gave it), if any."""
-        self.tables.update(load(list(self.tables)))
+        self.restored = load(list(self.tables))
+        self.tables.update(self.restored)
         if meta is not None:
             self.auto_counter, self.metadata = meta["auto_counter"], meta["metadata"]
+
+    def changed(self) -> dict[str, DataFrame]:
+        """The tables that are not still the frame :meth:`restore` loaded
+        (every table, when nothing was restored)."""
+        return {
+            name: df for name, df in self.tables.items()
+            if df is not self.restored.get(name)
+        }
 
     def declare(self, names: Iterable[str]) -> None:
         """Add each table of ``names`` not held yet, empty."""
@@ -349,8 +359,9 @@ class ChadoCatalog:
 
 
 def save_loader_state(loader, catalog: ChadoCatalog) -> None:
-    """Persist the tables and scalar state of ``loader``'s Chado state."""
-    catalog.save(loader.chado.tables)
+    """Persist the changed tables (:meth:`ChadoState.changed`) and the
+    scalar state of ``loader``'s Chado state."""
+    catalog.save(loader.chado.changed())
     os.makedirs(catalog.root, exist_ok=True)
     with open(os.path.join(catalog.root, "_meta.json"), "w") as fh:
         json.dump(loader.chado.scalars(), fh)
@@ -403,18 +414,20 @@ def save_loader_state_jdbc(
     ``new_*`` deltas inside one transaction — same order either way).
     Scalar state (auto-id counter = the reference's sequence position,
     plus loader metadata) lands in a 1-row-per-key ``loader_meta`` table
-    so a fresh process resumes without minting colliding ids. Its
-    ``tables`` manifest adds this loader's tables to those saved before,
-    so a loader that declares fewer tables leaves the others restorable."""
+    so a fresh process resumes without minting colliding ids. Only the
+    changed tables (:meth:`ChadoState.changed`) are written; the
+    ``tables`` manifest adds every table of this loader to those saved
+    before, so a loader that declares fewer tables leaves the others
+    restorable."""
     props = dict(properties or {})
     saved = (_jdbc_meta(loader.spark, url, props) or {}).get("tables", [])
     props.setdefault("batchsize", str(batchsize))
     tables = loader.chado.tables
-    for name, df in _jdbc_ordered(tables):
-        # Break lineage before the overwrite: a restored loader's
-        # untouched tables still READ from the very JDBC table being
-        # overwritten (truncate-then-rescan would write back an empty
-        # source); localCheckpoint materializes the rows first. State
+    for name, df in _jdbc_ordered(loader.chado.changed()):
+        # Break lineage before the overwrite: a changed table's plan can
+        # still READ from the very JDBC table being overwritten
+        # (truncate-then-rescan would write back an empty source);
+        # localCheckpoint materializes the rows first. State
         # tables are merge targets/dimensions — driver-memory-sized by
         # design, the billion-row corpus never flows through here.
         df.localCheckpoint().write.mode("overwrite").jdbc(

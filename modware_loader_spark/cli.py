@@ -43,6 +43,7 @@ from modware_loader_spark.catalog import (
     restore_loader_state,
     save_loader_state,
 )
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.session import get_spark
 
 
@@ -817,6 +818,7 @@ def cmd_ivfindex(args) -> dict:
     one file. ``similarity_index_drift``'s share-drift statistic is the
     retrain signal (see operators/ivf.py scale notes)."""
     from modware_loader_spark.operators.ivf import (
+        _centroid_literals,
         append_ivf_index,
         compact_ivf_index,
         ivf_train,
@@ -831,15 +833,16 @@ def cmd_ivfindex(args) -> dict:
             vecs, nlist=int(args.nlist), lloyd_iters=int(args.lloyd_iters),
             id_col=args.id_col, vec_col=args.vec_col, seed_strategy="hash",
         )
-        cents.write.mode("overwrite").format("parquet").saveAsTable(ct)
-        idx = save_ivf_index(
-            vecs, spark.table(ct), t, id_col=args.id_col, vec_col=args.vec_col
-        )
-        return {"rows": idx.count(), "cells": spark.table(ct).count()}
+        local_frame(spark, cents, "cell int, centroid array<double>").write.mode(
+            "overwrite"
+        ).format("parquet").saveAsTable(ct)
+        idx = save_ivf_index(vecs, cents, t, id_col=args.id_col, vec_col=args.vec_col)
+        return {"rows": idx.count(), "cells": len(cents)}
     if args.action == "append":
         vecs = spark.read.parquet(args.input).select(args.id_col, args.vec_col)
         idx = append_ivf_index(
-            vecs, spark.table(ct), t, id_col=args.id_col, vec_col=args.vec_col
+            vecs, _centroid_literals(spark.table(ct)), t,
+            id_col=args.id_col, vec_col=args.vec_col,
         )
         return {"rows": idx.count()}
     if args.action == "compact":

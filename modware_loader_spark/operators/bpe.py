@@ -27,14 +27,14 @@ Spark" shape:
 At 100 TB: the word table is |vocab| rows (~10^8 worst case). Each merge
 step of the relational loop shuffles pair keys (near-uniform) and costs
 one JOB — measured ~0.2 s/merge regardless of corpus size (py4j +
-scheduling is the floor; tools/bpe_depth.py, SCALE.md round-10), so at
-production depth (~30k merges) the job overhead dominates. The
-production path is ``train_merges_driver``: the distributed corpus pass
-runs once, the vocabulary table collects to the driver (bounded by
-|vocab| — the centroid/codebook bounded-artifact class, one tier
-larger), and the classic in-memory incremental-count loop trains at
-memory speed (~140x the relational rate measured, output
-exact-equivalent by construction and by test). The relational loop
+scheduling is the floor; SCALE.md round-10, "BPE merge training at
+depth"), so at production depth (~30k merges) the job overhead
+dominates. The production path is ``train_merges_driver``: the
+distributed corpus pass runs once, the vocabulary table collects to
+the driver (bounded by |vocab| — the centroid/codebook
+bounded-artifact class, one tier larger), and the classic in-memory
+incremental-count loop trains at memory speed (~140x the relational
+rate measured, output exact-equivalent by construction and by test). The relational loop
 stays for cluster-sized vocabularies; ``checkpoint_every`` truncates its
 fold-chain lineage (sweep knee: 25).
 
@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators.text import tokens
 
 END_OF_WORD = "</w>"
@@ -183,7 +184,7 @@ def train_merges_driver(
     """Production-DEPTH merge training: identical output to
     ``train_merges`` (property-tested), different execution shape.
 
-    The round-10 depth measurement (tools/bpe_depth.py) showed the
+    The round-10 depth measurement (SCALE.md round-10) showed the
     relational loop is driver/job-overhead-bound: ~0.2 s per merge
     REGARDLESS of corpus size (sf0.1 vs sf0.01 ratio 0.91 — py4j +
     job scheduling is the floor), i.e. ~100 minutes at a production
@@ -271,7 +272,8 @@ def merge_table(spark, steps: list[tuple[int, str, str, int]]) -> DataFrame:
     right_sym, merged_sym, pair_count)`` — a LocalRelation (the rules
     were already reduced to driver scale by construction)."""
     rows = [(s, l, r, l + r, c) for s, l, r, c in steps]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "step int, left_sym string, right_sym string,"
         " merged_sym string, pair_count long",

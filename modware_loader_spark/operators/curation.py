@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators.text import tokens
 
 # Gopher's "must contain >= 2 of these" stopword list (Rae et al. 2021
@@ -364,8 +365,7 @@ def url_blocklist_flags(
     millions-of-domains list would be force-broadcast into executor
     OOM), so the hint is gated on list size; past the gate the plain
     equi-join lets AQE pick broadcast vs shuffle from the real size.
-    An empty blocklist short-circuits to blocked=0/keep=1 (and
-    ``createDataFrame([])`` cannot infer a schema anyway).
+    An empty blocklist short-circuits to blocked=0/keep=1.
     Returns (id, url_host, blocked, keep).
     """
     spark = df.sparkSession
@@ -386,8 +386,9 @@ def url_blocklist_flags(
             F.lit(0).alias("blocked"),
             F.lit(1).alias("keep"),
         )
-    bl = spark.createDataFrame(
-        [(d,) for d in norm],
+    bl = local_frame(
+        spark,
+        norm,
         T.StructType([T.StructField("url_host", T.StringType(), False)]),
     ).withColumn("__blocked", F.lit(1))
     if len(norm) <= 100_000:

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from modware_loader_spark.frames import ensure_min_partitions
+from modware_loader_spark.frames import ensure_min_partitions, local_frame
 from modware_loader_spark.operators.similarity import cosine
 
 
@@ -62,13 +62,15 @@ def sq_l2(a, b):
 _LITERAL_CELL_BUDGET = 4096
 
 
-def _centroid_literals(centroids: DataFrame) -> list:
-    """Collect the (tiny) centroid table driver-side, sorted by cell id.
+# Trained centroids are one driver list ``[(cell, [float, ...])]``,
+# sorted by cell id: nlist×dim doubles (a few MB at production
+# nlist=2^16·d=128) that every executor needs verbatim anyway. Every
+# function below takes that list; it enters a plan either as literals
+# or as one ``local_frame`` row, never as a frame that is collected back.
 
-    Same class of driver touch as dim/header fetches: nlist×dim doubles
-    (a few MB at production nlist=2^16·d=128) that every executor needs
-    verbatim anyway.
-    """
+
+def _centroid_literals(centroids: DataFrame) -> list:
+    """The centroid list of a saved ``(cell, centroid)`` table."""
     return sorted(
         ((r["cell"], [float(x) for x in r["centroid"]]) for r in centroids.collect()),
         key=lambda t: t[0],
@@ -111,8 +113,8 @@ def _cent_array_row(spark, cents: list):
     ordinary broadcast-table size at any production nlist.
     """
     data = [([(int(cell), [float(x) for x in vec]) for cell, vec in cents],)]
-    return spark.createDataFrame(
-        data, "__cents array<struct<cell:int, centroid:array<double>>>"
+    return local_frame(
+        spark, data, "__cents array<struct<cell:int, centroid:array<double>>>"
     )
 
 
@@ -146,8 +148,8 @@ def _dist_cell_pairs(vec_col: str, cents: list, vec_sql: str | None = None):
     return F.expr(_dist_cell_pairs_sql(vec, cents))
 
 
-def _nearest_cell(vectors: DataFrame, centroids: DataFrame, id_col: str,
-                  vec_col: str, cents: list | None = None) -> DataFrame:
+def _nearest_cell(vectors: DataFrame, cents: list, id_col: str,
+                  vec_col: str) -> DataFrame:
     """Assign each vector to the centroid with min rounded squared-L2
     (tie-break: smaller cell id).
 
@@ -161,12 +163,7 @@ def _nearest_cell(vectors: DataFrame, centroids: DataFrame, id_col: str,
     size, still zero shuffle, bit-identical arithmetic. (The r10
     ``min_by`` fallback this replaces paid a full-corpus hash exchange
     on the id — measured strictly dominated at every k, SCALE.md r11.)
-
-    ``cents``: pass the already-collected literal list to skip the
-    collect (callers that train + assign + probe reuse one collect).
     """
-    if cents is None:
-        cents = _centroid_literals(centroids)
     dim = len(cents[0][1]) if cents else 0
     if cents and len(cents) * dim <= _LITERAL_CELL_BUDGET:
         return vectors.withColumn(
@@ -195,7 +192,8 @@ def ivf_train(
     train_points_per_cell: int | None = None,
     n_rows: int | None = None,
 ):
-    """Train IVF centroids: ``(cell, centroid array<double>)``.
+    """Train IVF centroids: the driver list ``[(cell, [float, ...])]``,
+    sorted by cell id.
 
     ``seed_strategy``:
 
@@ -267,19 +265,18 @@ def ivf_train(
         )
         .collect()
     )
-    centroids = df.sparkSession.createDataFrame(
-        [(i, r.centroid) for i, r in enumerate(sorted(seed_rows, key=lambda r: r.seed_id))],
-        "cell int, centroid array<double>",
-    )
+    cents = [
+        (i, list(r.centroid))
+        for i, r in enumerate(sorted(seed_rows, key=lambda r: r.seed_id))
+    ]
     vectors = ensure_min_partitions(df.select(id_col, vec_col))
     tr_vectors = (
         vectors
         if train_df is df
         else ensure_min_partitions(train_df.select(id_col, vec_col))
     )
-    cents = _centroid_literals(centroids)
     for _ in range(lloyd_iters):
-        assigned = _nearest_cell(tr_vectors, centroids, id_col, vec_col, cents=cents)
+        assigned = _nearest_cell(tr_vectors, cents, id_col, vec_col)
         by_dim = assigned.select(
             "cell", F.posexplode(F.col(vec_col)).alias("pos", "val")
         )
@@ -295,53 +292,35 @@ def ivf_train(
                 6,
             ).alias("m")
         )
-        centroids = (
-            means.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.getField("m"),
-                ).alias("centroid")
-            )
-        )
-        # Materialize the step driver-side (nlist×dim doubles — KBs) and
-        # carry a local-relation frame forward: each Lloyd step is one
-        # Spark job, and downstream assign/probe/fallback consumers read
-        # the tiny local relation instead of re-running (or checkpointing)
-        # the whole training chain per consumer.
-        cents = _centroid_literals(centroids)
-        centroids = df.sparkSession.createDataFrame(
-            cents, "cell int, centroid array<double>"
-        )
+        # One Spark job per Lloyd step: the nlist×dim means (KBs) come
+        # back to the driver and become the next step's list, so the
+        # assign/probe consumers downstream never re-run the training chain.
+        step: dict[int, list] = {}
+        for r in means.collect():
+            step.setdefault(r["cell"], []).append((r["pos"], r["m"]))
+        cents = [(c, [m for _, m in sorted(step[c])]) for c in sorted(step)]
     if not return_assignment:
-        return centroids
+        return cents
     # Persist contract (r13): the assignment is returned for reuse by
     # query batches — no in-operator release point; caller/bench sweep
     # releases. MEMORY_AND_DISK: a 100 TB assignment spills, never
     # evicts mid-probe.
     from pyspark.storagelevel import StorageLevel
 
-    assigned = _nearest_cell(
-        vectors, centroids, id_col, vec_col, cents=cents
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    return centroids, assigned
+    assigned = _nearest_cell(vectors, cents, id_col, vec_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    return cents, assigned
 
 
 def ivf_assign(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cents: list | None = None,
 ) -> DataFrame:
-    """Corpus rows + their ``cell`` id (map-side vs broadcast centroids).
-
-    ``cents``: the already-collected literal list (``_centroid_literals``
-    order) — callers that hold the driver-side centroid artifact skip
-    the collect job (r13; same contract as ``_nearest_cell``)."""
-    return _nearest_cell(
-        df.select(id_col, vec_col), centroids, id_col, vec_col, cents=cents
-    )
+    """Corpus rows + their ``cell`` id (map-side vs broadcast centroids)."""
+    return _nearest_cell(df.select(id_col, vec_col), centroids, id_col, vec_col)
 
 
 def _py_sq_l2_6dp(a: list, b: list) -> float:
@@ -359,11 +338,10 @@ def _py_sq_l2_6dp(a: list, b: list) -> float:
 
 def assign_two_level(
     vectors: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     n_groups: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cents: list | None = None,
 ) -> DataFrame:
     """Two-level (inverted-multi-index-style) cell assignment: argmin
     over ``n_groups`` SUPERcentroids first, then argmin over only that
@@ -399,18 +377,16 @@ def assign_two_level(
     whose super can still win rows, so empty groups borrow their
     super's adoptive group's member list rather than being skipped.
     """
-    if cents is None:
-        cents = _centroid_literals(centroids)
-    k = len(cents)
+    k = len(centroids)
     if k == 0:
         raise ValueError("assign_two_level: empty centroid table")
     import math
 
     s = n_groups or max(1, math.isqrt(k))
-    supers = cents[:s]
+    supers = centroids[:s]
     groups: dict[int, list] = {sid: [] for sid, _ in supers}
     home: dict[int, int] = {}
-    for cell, vec in cents:
+    for cell, vec in centroids:
         best = min(
             ((_py_sq_l2_6dp(vec, svec), sid) for sid, svec in supers),
         )[1]
@@ -418,7 +394,7 @@ def assign_two_level(
         if cell in groups:  # this centroid IS a super: remember its group
             home[cell] = best
     vec = f"`{vec_col}`"
-    dim = len(cents[0][1])
+    dim = len(centroids[0][1])
     if k * dim > _LITERAL_CELL_BUDGET:
         # Array form (r11): supers as one broadcast ARRAY column and the
         # sid -> member-list mapping as a broadcast MAP column — the IMI
@@ -446,7 +422,8 @@ def assign_two_level(
                 },
             )
         ]
-        aux = vectors.sparkSession.createDataFrame(
+        aux = local_frame(
+            vectors.sparkSession,
             data,
             "__supers array<struct<cell:int, centroid:array<double>>>, "
             "__groups map<int, array<struct<cell:int, centroid:array<double>>>>",
@@ -494,7 +471,7 @@ def assign_two_level(
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
-    centroids: DataFrame | None = None,
+    centroids: list | None = None,
     k: int = 5,
     nlist: int = 8,
     nprobe: int = 2,
@@ -532,8 +509,8 @@ def ivf_topk(
             "cell",
         )
     elif centroids is None:
-        # trained centroids come back as a driver-local relation (KBs), so
-        # the assign/probe consumers below share one materialization — no
+        # trained centroids come back as a driver list (KBs), so the
+        # assign/probe consumers below share one materialization — no
         # checkpoint, no re-run of the training chain per consumer. The
         # corpus assignment rides along persisted (VERDICT r05 item 3):
         # identical to ivf_assign(corpus, centroids) by construction, but
@@ -562,13 +539,12 @@ def ivf_topk(
     # and explode the first nprobe entries; no window, no shuffle of the
     # query side before the cell join.
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    cents = _centroid_literals(centroids)
-    if cents and len(cents) * len(cents[0][1]) <= _LITERAL_CELL_BUDGET:
+    if centroids and len(centroids) * len(centroids[0][1]) <= _LITERAL_CELL_BUDGET:
         probes = q.select(
             "query_id",
             "q_vec",
             F.explode(
-                F.slice(F.array_sort(_dist_cell_pairs("q_vec", cents)), 1, nprobe)
+                F.slice(F.array_sort(_dist_cell_pairs("q_vec", centroids)), 1, nprobe)
             ).alias("__p"),
         ).select("query_id", "q_vec", F.col("__p").getField("cell").alias("cell"))
     else:
@@ -576,7 +552,7 @@ def ivf_topk(
         # per-row (dist, cell) struct array and slice nprobe — no window,
         # no shuffle of the query side (the r10 version here paid a
         # window sort over the q×k expansion).
-        cent_row = _cent_array_row(q.sparkSession, cents)
+        cent_row = _cent_array_row(q.sparkSession, centroids)
         probes = (
             q.crossJoin(F.broadcast(cent_row))
             .select(
@@ -607,7 +583,7 @@ def ivf_topk(
 
 def cell_outlier_flags(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     sigma: float = 2.0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -635,8 +611,7 @@ def cell_outlier_flags(
     shuffle), one cell-cardinality aggregation, and a broadcast stats
     re-attach — the corpus never shuffles.
     """
-    cents = _centroid_literals(centroids)
-    m = F.array_min(_dist_cell_pairs(vec_col, cents))
+    m = F.array_min(_dist_cell_pairs(vec_col, centroids))
     assigned = df.select(
         F.col(id_col),
         m.getField("cell").alias("cell"),
@@ -664,7 +639,7 @@ def cell_outlier_flags(
 
 def save_ivf_index(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     table: str,
     n_buckets: int | None = None,
     id_col: str = "vec_id",
@@ -687,7 +662,7 @@ def save_ivf_index(
     """
     spark = df.sparkSession
     if n_buckets is None:
-        n_buckets = centroids.count()
+        n_buckets = len(centroids)
     assigned = ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col)
     (
         assigned.write.mode("overwrite")
@@ -701,7 +676,7 @@ def save_ivf_index(
 
 def append_ivf_index(
     new_batch: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     table: str,
     n_buckets: int | None = None,
     id_col: str = "vec_id",
@@ -731,7 +706,7 @@ def append_ivf_index(
     """
     spark = new_batch.sparkSession
     if n_buckets is None:
-        n_buckets = centroids.count()
+        n_buckets = len(centroids)
     assigned = ivf_assign(new_batch, centroids, id_col=id_col, vec_col=vec_col)
     (
         assigned.write.mode("append")

@@ -29,6 +29,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators.sampling import hash_uniform
 
 
@@ -110,7 +111,7 @@ def exclusive_prefix_sum(
     for pid, tot in totals:
         offsets.append((pid, acc))
         acc += int(tot)
-    offs = sess.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
+    offs = local_frame(sess, offsets or [(0, 0)], "__pid int, __off long")
     return (
         ranked.join(F.broadcast(offs), "__pid", "left")
         .withColumn(

@@ -269,14 +269,14 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    cents: list | None = None,
+    centroids: list | None = None,
     books: list[list] | None = None,
 ) -> DataFrame:
     """Classic IVF-PQ (Jégou et al. 2011 §V): coarse IVF cells bound the
     scan, PQ codes bound the per-candidate cost — the composition the
     IVF and PQ docstrings promise, and the shape that holds at 100 TB.
 
-    ``cents``/``books`` accept a pre-trained coarse-centroid list and PQ
+    ``centroids``/``books`` accept a pre-trained coarse-centroid list and PQ
     codebooks (the "index built once" production contract — callers
     memoize them per dataset and repeat query batches skip training).
 
@@ -289,18 +289,11 @@ def ivfpq_topk(
     touched). ADC ranks a ``shortlist``, exact squared-L2 re-ranks it.
     Returns ``(query_id, target_id, l2_dist, rank)``.
     """
-    from modware_loader_spark.operators.ivf import (
-        _centroid_literals,
-        _dist_cell_pairs,
-        ivf_train,
-        sq_l2,
-    )
+    from modware_loader_spark.operators.ivf import _dist_cell_pairs, ivf_train, sq_l2
 
-    if cents is None:
-        cents = _centroid_literals(
-            ivf_train(corpus, nlist=nlist, lloyd_iters=lloyd_iters,
-                      id_col=id_col, vec_col=vec_col)
-        )
+    if centroids is None:
+        centroids = ivf_train(corpus, nlist=nlist, lloyd_iters=lloyd_iters,
+                              id_col=id_col, vec_col=vec_col)
     if books is None:
         books = pq_train(corpus, m=m, ksub=ksub, dim=dim,
                          lloyd_iters=lloyd_iters,
@@ -308,7 +301,7 @@ def ivfpq_topk(
     sub = len(books[0][0][1])
     enc = ensure_min_partitions(corpus).select(
         F.col(id_col).alias("target_id"),
-        F.array_min(_dist_cell_pairs(vec_col, cents)).getField("cell").alias("cell"),
+        F.array_min(_dist_cell_pairs(vec_col, centroids)).getField("cell").alias("cell"),
         _codes_expr(books, sub, vec_col).alias("codes"),
     )
     dtab = _adc_tables(books, sub)
@@ -319,7 +312,7 @@ def ivfpq_topk(
         "query_id",
         "__dtab",
         F.explode(
-            F.slice(F.array_sort(_dist_cell_pairs("q_vec", cents)), 1, nprobe)
+            F.slice(F.array_sort(_dist_cell_pairs("q_vec", centroids)), 1, nprobe)
         ).alias("__p"),
     ).select("query_id", "__dtab", F.col("__p").getField("cell").alias("cell"))
     adc = F.expr(" + ".join(f"__dtab[{b}][codes[{b}]]" for b in range(len(books))))

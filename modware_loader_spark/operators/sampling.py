@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators.text import tokens
 
 # 2^32: the md5 prefix is 8 hex digits = 32 bits, so dividing by 2^32
@@ -192,8 +193,10 @@ def mixture_rates(
         (s, int(n), min(1.0, norm.get(s, 0.0) * budget / n) if n else 0.0)
         for s, n in sorted(counts.items(), key=lambda kv: (kv[0] is None, kv[0] or ""))
     ]
-    return df.sparkSession.createDataFrame(
-        rows or [("", 0, 0.0)], f"{source_col} string, n_rows long, rate double"
+    return local_frame(
+        df.sparkSession,
+        rows or [("", 0, 0.0)],
+        f"{source_col} string, n_rows long, rate double",
     )
 
 

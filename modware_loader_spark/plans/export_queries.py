@@ -11,6 +11,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.functions import normalize_id
 from modware_loader_spark.operators.asof import asof_join
 from modware_loader_spark.operators.closure import transitive_closure
@@ -287,7 +288,7 @@ def e13_skip_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows whose key is in a user-supplied skip file — anti-join against the
     (broadcast) skip set."""
     t = load_tables(spark, sf_dir)
-    skip = spark.createDataFrame([(3,), (7,), (11,), (42,), (77,)], ["s_suppkey"])
+    skip = local_frame(spark, [3, 7, 11, 42, 77], "s_suppkey long")
     return (
         t["supplier"]
         .join(F.broadcast(skip), ["s_suppkey"], "left_anti")

@@ -42,7 +42,7 @@ def chado2gaf_rows(
         F.col("uniquename").alias("db_object_symbol"),
     )
     go = loader.go_terms().select(
-        "cvterm_id", F.concat(F.lit("GO:"), F.col("accession")).alias("go_id")
+        "cvterm_id", F.concat_ws(":", "go_db", "go_acc").alias("go_id")
     )
     pubs = t["pub"].select("pub_id", F.col("uniquename").alias("db_ref_str"))
 

@@ -24,11 +24,12 @@ from pyspark.sql import functions as F
 from modware_loader_spark.catalog import ChadoState
 from modware_loader_spark.operators.merge import append
 from modware_loader_spark.sources.gaf import parse_gaf
+from modware_loader_spark.sources.obo import _normalize
 
 # the annotation tables, then the tables the U6 joins read
 TABLES = (
     "feature_cvterm", "feature_cvtermprop",
-    "feature", "cvterm", "dbxref", "pub", "cvtermsynonym",
+    "feature", "cvterm", "dbxref", "db", "pub", "cvtermsynonym",
 )
 
 # dependent prop rows (reference: feature_cvtermprops created per
@@ -40,8 +41,8 @@ PROP_TYPES = ("qualifier", "date", "source", "with", "aspect", "evidence")
 class GAFLoader:
     """Annotation loader over a Chado state (``catalog.ChadoState``): it
     writes ``feature_cvterm``/``feature_cvtermprop`` and resolves against
-    the state's features (uniquename), GO terms (dbxref accession), pubs
-    (uniquename) and evidence codes (cvterm synonyms)."""
+    the state's features (uniquename), GO terms (dbxref db name and
+    accession), pubs (uniquename) and evidence codes (cvterm synonyms)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -54,17 +55,26 @@ class GAFLoader:
         self.chado.clear(["feature_cvterm", "feature_cvtermprop"])
 
     def go_terms(self) -> DataFrame:
-        """(cvterm_id, accession) of every term."""
+        """(cvterm_id, go_db, go_acc) of every term: the db name and
+        accession of its dbxref, the two halves of an OBO id."""
         t = self.tables
-        return t["cvterm"].join(t["dbxref"], "dbxref_id").select("cvterm_id", "accession")
+        db = t["db"].select("db_id", F.col("name").alias("go_db"))
+        return (
+            t["cvterm"].join(t["dbxref"], "dbxref_id").join(F.broadcast(db), "db_id")
+            .select("cvterm_id", "go_db", F.col("accession").alias("go_acc"))
+        )
 
     def resolve(self, gaf: DataFrame) -> DataFrame:
-        """U6 resolution joins + validity filter (invalid rows dropped)."""
+        """U6 resolution joins + validity filter (invalid rows dropped).
+        A GO id splits into (db, accession) as the OBO loader splits it,
+        so ``GO:0000001`` binds only to the GO term, never to another
+        ontology's ``0000001``."""
         t = self.tables
-        go_acc = F.substring_index(F.col("go_id"), ":", -1)
+        go = _normalize(F.col("go_id"))
         pubref = F.element_at(F.col("db_ref"), 1)
         resolved = (
-            gaf.withColumn("go_acc", go_acc)
+            gaf.withColumn("go_db", go["db"])
+            .withColumn("go_acc", go["accession"])
             .withColumn("pubref", pubref)
             .join(
                 F.broadcast(
@@ -75,13 +85,7 @@ class GAFLoader:
                 "db_object_id",
                 "left",
             )
-            .join(
-                F.broadcast(
-                    self.go_terms().select(F.col("accession").alias("go_acc"), "cvterm_id")
-                ),
-                "go_acc",
-                "left",
-            )
+            .join(F.broadcast(self.go_terms()), ["go_db", "go_acc"], "left")
             .join(
                 F.broadcast(
                     t["pub"].select(F.col("uniquename").alias("pubref"), "pub_id")

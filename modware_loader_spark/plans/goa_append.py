@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.sources.gaf import parse_gaf
 
 # The actin duplicate group from the reference role's __DATA__ section
@@ -51,7 +52,7 @@ def duplicate_groups_df(spark: SparkSession, groups: dict[str, list[str]] | None
     """(group_name, member_id) rows for the duplicate-gene groups."""
     groups = DUPLICATE_GROUPS if groups is None else groups
     rows = [(g, m) for g, members in groups.items() for m in members]
-    return spark.createDataFrame(rows, "group_name string, member_id string")
+    return local_frame(spark, rows, "group_name string, member_id string")
 
 
 def load_chr2_dups(spark: SparkSession, path: str) -> DataFrame:

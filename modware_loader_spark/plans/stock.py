@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.operators.merge import generate_ids
 from modware_loader_spark.sources.tsv_stock import parse_plasmids, parse_strains
 
@@ -38,7 +39,7 @@ def load_strains(
         raw = spark.read.option("sep", "\t").csv(props_path).toDF(*PROP_COLUMNS)
         props = raw.filter(F.col("strain_id").rlike(r"^DBS[0-9]{7}"))
     else:
-        props = spark.createDataFrame([], "strain_id string, prop_type string, prop_value string")
+        props = local_frame(spark, [], "strain_id string, prop_type string, prop_value string")
     return {"strains": strains, "props": props, "invalid": invalid}
 
 
@@ -115,8 +116,8 @@ def load_plasmids(
         raw = spark.read.option("sep", "\t").csv(props_path).toDF(*PLASMID_PROP_COLUMNS)
         props = raw.filter(F.col("plasmid_id").rlike(r"^DBP[0-9]{7}"))
     else:
-        props = spark.createDataFrame(
-            [], "plasmid_id string, prop_type string, prop_value string"
+        props = local_frame(
+            spark, [], "plasmid_id string, prop_type string, prop_value string"
         )
     return {"plasmids": plasmids, "props": props, "invalid": invalid}
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.sources.gaf import GAF_COLUMNS, MULTI_VALUED
 
 
@@ -22,7 +23,7 @@ def gaf_lines(df: DataFrame) -> DataFrame:
 
 def write_gaf(df: DataFrame, path: str) -> None:
     spark = df.sparkSession
-    header = spark.createDataFrame([("!gaf-version: 2.0", 0)], "line string, ord int")
+    header = local_frame(spark, [("!gaf-version: 2.0", 0)], "line string, ord int")
     body = gaf_lines(df).withColumn("ord", F.lit(1))
     (
         header.unionByName(body)

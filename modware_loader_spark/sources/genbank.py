@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from modware_loader_spark.frames import local_frame
 from modware_loader_spark.sources.gff3 import _lines_with_index
 from modware_loader_spark.sources.stitch import running_stitch
 
@@ -40,9 +41,11 @@ def parse_genbank(spark: SparkSession, path: str) -> dict:
         F.min(F.when(F.col("line").startswith("ORIGIN"), F.col("idx"))).alias("o"),
     ).first()
 
-    features = spark.createDataFrame(
-        [], "feat_id long, feature_key string, location string, start long, "
-            "end long, strand int, qualifiers map<string,array<string>>"
+    features = local_frame(
+        spark,
+        [],
+        "feat_id long, feature_key string, location string, start long, "
+        "end long, strand int, qualifiers map<string,array<string>>",
     )
     if bounds.f is not None and bounds.o is not None:
         fl = lines.filter((F.col("idx") > bounds.f) & (F.col("idx") < bounds.o))
@@ -156,5 +159,5 @@ def parse_genbank(spark: SparkSession, path: str) -> dict:
             .select(F.lit(metadata.get("locus_name", "")).alias("seq_id"), "sequence")
         )
     else:
-        seq = spark.createDataFrame([], "seq_id string, sequence string")
+        seq = local_frame(spark, [], "seq_id string, sequence string")
     return {"metadata": metadata, "features": features, "sequence": seq}

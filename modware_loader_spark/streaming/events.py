@@ -396,7 +396,7 @@ def stream_temperature_gate(
 
 def stream_semantic_gate(
     stream_vecs: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     history: DataFrame,
     threshold: float = 0.4,
     id_col: str = "vec_id",
@@ -420,11 +420,10 @@ def stream_semantic_gate(
     ``semantic_incremental_flags`` on the micro-batch (foreachBatch)
     or downstream in the batch compactor.
     """
-    from modware_loader_spark.operators.ivf import _centroid_literals, _nearest_cell
+    from modware_loader_spark.operators.ivf import _nearest_cell
     from modware_loader_spark.operators.similarity import cosine
 
-    cents = _centroid_literals(centroids)
-    assigned = _nearest_cell(stream_vecs, centroids, id_col, vec_col, cents=cents)
+    assigned = _nearest_cell(stream_vecs, centroids, id_col, vec_col)
     h = history.select(
         F.col(id_col).alias("__h_id"),
         F.col(vec_col).alias("__h_vec"),

@@ -9,7 +9,9 @@ the first one loaded.
 - ``bibtex2chado`` twice: the second run finds every pub, and each pub
   type is a term of cv ``pub_type``;
 - ``organism2chado`` twice keeps the organism ids, and a plasmid import
-  on the same catalog finds the AX4 organism instead of adding one.
+  on the same catalog finds the AX4 organism instead of adding one;
+- ``gaf2chado`` after ``gff3tochado`` rewrites no file of ``feature``,
+  which it only reads.
 """
 
 from __future__ import annotations
@@ -47,6 +49,7 @@ def test_gaf2chado_twice_keeps_the_first_annotations(spark, capsys, tmp_path):
     dims = {
         "feature": ([(1, "DDB_G0000001"), (2, "DDB_G0000002"), (3, "DDB_G0000003")],
                     "feature_id long, uniquename string"),
+        "db": ([(1, "GO")], "db_id long, name string"),
         "dbxref": ([(1000, "0005515", 1), (1001, "0003676", 1)],
                    "dbxref_id long, accession string, db_id long"),
         "cvterm": ([(10, "protein binding", 1, 1000), (11, "nucleic acid binding", 1, 1001)],
@@ -154,3 +157,32 @@ def test_organism2chado_twice_keeps_the_ids(spark, capsys, tmp_path):
     assert organisms() == first
     feature = _tables(spark, root, "feature")["feature"]
     assert [r.organism_id for r in feature.collect()] == [ax4]
+
+
+def test_gaf2chado_leaves_the_genome_files(spark, capsys, tmp_path):
+    """A load command writes only the tables it changed: ``gaf2chado``
+    after ``gff3tochado`` reads ``feature`` but rewrites none of its
+    files, and saves its annotations."""
+    root = str(tmp_path / "catalog")
+    _run(capsys, "gff3tochado", "--input", os.path.join(FIX, "pinned_genome.gff3"),
+         "--catalog", root)
+    _run(capsys, "obo2chado", "--input", os.path.join(FIX, "pinned_onto_v1.obo"),
+         "--catalog", root)
+    _run(capsys, "bibtex2chado", "--input", os.path.join(FIX, "pinned.bib"),
+         "--catalog", root)
+    gaf = tmp_path / "genes.gaf"
+    gaf.write_text("".join(
+        f"DDB\t{gene}\t{gene}\t\t{term}\t20443635\tIDA\t\tP\t\t\tgene\t"
+        "taxon:44689\t20200101\tdictyBase\t\t\n"
+        for gene, term in (("gA", "PO:0000001"), ("gB", "PO:0000002"))
+    ))
+
+    def files(table):
+        d = os.path.join(root, table)
+        return {n: os.stat(os.path.join(d, n)).st_mtime_ns for n in os.listdir(d)}
+
+    before = files("feature")
+    counts = _run(capsys, "gaf2chado", "--input", str(gaf), "--catalog", root)
+    assert counts == {"loaded": 2, "total": 2}
+    assert files("feature") == before
+    assert _tables(spark, root, "feature_cvterm")["feature_cvterm"].count() == 2

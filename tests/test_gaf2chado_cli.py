@@ -23,9 +23,10 @@ def mini_catalog(spark, tmp_path):
             [(1, "DDB_G0277399"), (2, "DDB_G0286355")],
             "feature_id long, uniquename string",
         ),
+        "db": spark.createDataFrame([(1, "GO")], "db_id long, name string"),
         "dbxref": spark.createDataFrame(
-            [(100, "0005515"), (101, "0000910"), (102, "0000146")],
-            "dbxref_id long, accession string",
+            [(100, "0005515", 1), (101, "0000910", 1), (102, "0000146", 1)],
+            "dbxref_id long, accession string, db_id long",
         ),
         "cvterm": spark.createDataFrame(
             [(10, 100), (11, 101), (12, 102)], "cvterm_id long, dbxref_id long"

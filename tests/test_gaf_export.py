@@ -83,3 +83,33 @@ def test_gaf_writer_format_validation(spark, tmp_path):
     n_out, ext_out = check(os.path.join(out, "part-*.txt"))
     assert n_out == n_ref
     assert ext_out == 0
+
+
+def test_go_id_keeps_its_db_prefix(spark, tmp_path):
+    """A GO id resolves on (db, accession): in a catalog that also holds
+    ``PO:0000001``, one ``GO:0000001`` row binds to the GO term only, and
+    the export prints that term's own ``GO:0000001``."""
+    from modware_loader_spark.frames import local_frame
+
+    loader = GAFLoader(spark)
+    chado, t = loader.chado, loader.tables
+
+    def rows(table, data, schema):
+        t[table] = chado.shaped(table, local_frame(spark, data, schema))
+
+    rows("feature", [("DDB_G0000001", 1)], "uniquename string, feature_id long")
+    rows("db", [("GO", 1), ("PO", 2)], "name string, db_id long")
+    rows("dbxref", [("0000001", 1, 1000), ("0000001", 2, 1001)],
+         "accession string, db_id long, dbxref_id long")
+    rows("cvterm", [(10, 1000), (11, 1001)], "cvterm_id long, dbxref_id long")
+    rows("pub", [("PMID:100", 100)], "uniquename string, pub_id long")
+    rows("cvtermsynonym", [("IDA", 201)], "synonym string, cvterm_id long")
+    src = tmp_path / "one.gaf"
+    src.write_text(
+        "DDB\tDDB_G0000001\tgeneA\t\tGO:0000001\tPMID:100\tIDA\t\tP\t\t\tgene\t"
+        "taxon:44689\t20200101\tdictyBase\t\t\n"
+    )
+    assert loader.load_file(str(src)) == {"loaded": 1, "total": 1}
+    assert [r.cvterm_id for r in t["feature_cvterm"].collect()] == [10]
+    exported = chado2gaf_rows(loader)
+    assert [r.go_id for r in exported.collect()] == ["GO:0000001"]

@@ -381,10 +381,7 @@ def test_assign_two_level_agreement_and_edge_cases(spark):
     assert two_full == flat
     # duplicated super vectors: group 1 empty (its centroid ties to
     # super 0 and loses on sid) — rows must still assign, never -1
-    dup = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [5.0, 5.0]), (3, [9.0, 9.0])],
-        "cell int, centroid array<double>",
-    )
+    dup = [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [5.0, 5.0]), (3, [9.0, 9.0])]
     rows = spark.createDataFrame(
         [(10, [0.1, 0.1]), (11, [8.0, 8.0])], "vec_id long, embedding array<float>"
     )

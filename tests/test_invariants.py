@@ -407,11 +407,11 @@ def test_ivf_train_cap_inactive_at_small_n(spark, sf_dir):
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     n = emb.count()
-    plain = ivf_train(emb, nlist=8, lloyd_iters=1).collect()
+    plain = ivf_train(emb, nlist=8, lloyd_iters=1)
     capped = ivf_train(
         emb, nlist=8, lloyd_iters=1,
         train_points_per_cell=(n // 8) + 1, n_rows=n,
-    ).collect()
+    )
     assert sorted(map(tuple, plain)) == sorted(map(tuple, capped))
 
 
@@ -424,11 +424,10 @@ def test_nearest_cell_array_fallback_matches_literal(spark, sf_dir):
     from modware_loader_spark.session import load_tables
 
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    cents_df = IVF.ivf_train(emb, nlist=8, lloyd_iters=1)
-    cents = IVF._centroid_literals(cents_df)
+    cents = IVF.ivf_train(emb, nlist=8, lloyd_iters=1)
     lit = {
         (r.vec_id, r.cell)
-        for r in IVF._nearest_cell(emb, cents_df, "vec_id", "embedding", cents=cents)
+        for r in IVF._nearest_cell(emb, cents, "vec_id", "embedding")
         .select("vec_id", "cell")
         .collect()
     }
@@ -437,9 +436,7 @@ def test_nearest_cell_array_fallback_matches_literal(spark, sf_dir):
     try:
         arr = {
             (r.vec_id, r.cell)
-            for r in IVF._nearest_cell(
-                emb, cents_df, "vec_id", "embedding", cents=cents
-            )
+            for r in IVF._nearest_cell(emb, cents, "vec_id", "embedding")
             .select("vec_id", "cell")
             .collect()
         }
@@ -455,14 +452,14 @@ def test_ivf_topk_array_fallback_matches_literal(spark, sf_dir):
     from modware_loader_spark.session import load_tables
 
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    cents_df = IVF.ivf_train(emb, nlist=8, lloyd_iters=1)
+    cents = IVF.ivf_train(emb, nlist=8, lloyd_iters=1)
     queries = emb.limit(20)
 
     def run():
         return {
             tuple(r)
             for r in IVF.ivf_topk(
-                queries, emb, cents_df, k=5, nprobe=2
+                queries, emb, cents, k=5, nprobe=2
             ).collect()
         }
 
@@ -526,13 +523,12 @@ def test_assign_two_level_array_form_matches_case_form(spark, sf_dir):
     from modware_loader_spark.session import load_tables
 
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    cents_df = IVF.ivf_train(emb, nlist=16, lloyd_iters=1)
-    cents = IVF._centroid_literals(cents_df)
+    cents = IVF.ivf_train(emb, nlist=16, lloyd_iters=1)
 
     def run():
         return {
             (r.vec_id, r.cell)
-            for r in IVF.assign_two_level(emb, cents_df, cents=cents)
+            for r in IVF.assign_two_level(emb, cents)
             .select("vec_id", "cell")
             .collect()
         }

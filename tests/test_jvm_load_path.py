@@ -2,7 +2,8 @@
 ``LocalRelation``s (``frames.local_frame``), text files are read with a
 JVM scan whose line index equals ``zipWithIndex``'s, and neither
 ``gff3tochado`` nor ``chado2gff3`` reaches a list-backed
-``createDataFrame`` or ``SparkContext.textFile``."""
+``createDataFrame`` or ``SparkContext.textFile``. No engine module but
+``frames.py`` calls ``createDataFrame`` at all."""
 
 from __future__ import annotations
 
@@ -22,6 +23,25 @@ FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
 def _relation(df) -> str:
     return df._jdf.queryExecution().analyzed().nodeName()
+
+
+def test_create_data_frame_only_in_frames():
+    """``frames.local_frame`` is the one driver→JVM path: no other engine
+    module calls ``createDataFrame`` (comments and strings aside)."""
+    import io
+    import tokenize
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)), "modware_loader_spark")
+    calls = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if os.path.relpath(path, pkg) == "frames.py":
+            continue
+        with open(path, encoding="utf-8") as fh:
+            toks = list(tokenize.generate_tokens(io.StringIO(fh.read()).readline))
+        for tok, nxt in zip(toks, toks[1:]):
+            if tok.string == "createDataFrame" and nxt.string == "(":
+                calls.append(f"{os.path.relpath(path, pkg)}:{tok.start[0]}")
+    assert calls == []
 
 
 def test_local_frame_zero_rows(spark):

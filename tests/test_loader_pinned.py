@@ -271,16 +271,18 @@ GAF_DIGESTS = {"feature_cvterm": "20c41b27654085c9", "feature_cvtermprop": "faa8
 
 def seed_gaf_dims(chado: ChadoState, features, terms, pubs, evidence) -> None:
     """Rows of ``chado`` for the genes ``(uniquename, feature_id)``, GO
-    terms ``(accession, cvterm_id)``, pubs ``(uniquename, pub_id)`` and
-    evidence-code synonyms ``(synonym, cvterm_id)`` a GAF resolves against."""
+    terms ``(accession, cvterm_id)`` of the ``GO`` db, pubs
+    ``(uniquename, pub_id)`` and evidence-code synonyms ``(synonym,
+    cvterm_id)`` a GAF resolves against."""
     spark, t = chado.spark, chado.tables
 
     def rows(table, data, schema):
         t[table] = chado.shaped(table, local_frame(spark, data, schema))
 
     rows("feature", features, "uniquename string, feature_id long")
-    rows("dbxref", [(acc, 1000 + i) for i, (acc, _) in enumerate(terms)],
-         "accession string, dbxref_id long")
+    rows("db", [("GO", 1)], "name string, db_id long")
+    rows("dbxref", [(acc, 1, 1000 + i) for i, (acc, _) in enumerate(terms)],
+         "accession string, db_id long, dbxref_id long")
     rows("cvterm", [(cid, 1000 + i) for i, (_, cid) in enumerate(terms)],
          "cvterm_id long, dbxref_id long")
     rows("pub", pubs, "uniquename string, pub_id long")

@@ -284,18 +284,16 @@ def test_semdedup_keep_rule_vs_bruteforce(spark):
 
 def test_driver_registry_contract():
     """The driver records the FIRST 50 queries() entries — pin the
-    contract the round-5 rotation depends on: every name unique, every
-    query has a same-named oracle (or a deliberate rows-only omission),
-    every deprioritized name exists, and the head window is exactly 50
-    (a rename or over-demotion silently shrinks driver coverage)."""
+    contract the rotation depends on: every name unique, every query has
+    a same-named oracle (or a deliberate rows-only omission), and the
+    head window is exactly 50 (a rename or over-demotion silently
+    shrinks driver coverage)."""
     import __spark_entry__ as e
 
     qs, osql = e.queries(), e.oracle_sql()
     names = list(qs)
     assert len(names) == len(set(names))
     assert set(osql) <= set(qs)
-    missing = [d for d in e._DEPRIORITIZED if d not in qs]
-    assert not missing, missing
     head = names[:50]
     assert len(head) == 50
     # rotation freshness goal, computed from the recorded CORRECTNESS

@@ -93,8 +93,11 @@ def test_chado2gaf_compress(capsys, tmp_path, spark):
         [(5, 100)], "cvterm_id long, dbxref_id long"
     ).write.parquet(os.path.join(cat, "cvterm"))
     spark.createDataFrame(
-        [(100, "0008150")], "dbxref_id long, accession string"
+        [(100, "0008150", 1)], "dbxref_id long, accession string, db_id long"
     ).write.parquet(os.path.join(cat, "dbxref"))
+    spark.createDataFrame([(1, "GO")], "db_id long, name string").write.parquet(
+        os.path.join(cat, "db")
+    )
     spark.createDataFrame(
         [(10, "PMID:1")], "pub_id long, uniquename string"
     ).write.parquet(os.path.join(cat, "pub"))
