@@ -24,8 +24,9 @@ materialized leaf plus the newest rows (use ``checkpoint`` instead of
 Scale notes (100 TB): M1–M12 are pure DataFrame expressions, so predicate
 pushdown / column pruning reach the scan; merges on a natural key shuffle
 once on that key; dim-sided lookups (M5) should pass ``broadcast=True``.
-Only small values reach the driver: M13 collects one count per
-partition, and :func:`append` reads the live max id with one ``first()``.
+Only small values reach the driver: M13 numbers rows with
+``stitch.dense_index`` (one count per range partition), and
+:func:`append` reads the live max id with one ``first()``.
 
 Operator numbering follows SURVEY.md §2.3.
 """
@@ -37,7 +38,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from modware_loader_spark.frames import local_frame
+from modware_loader_spark.sources.stitch import dense_index
 
 
 def new_keys(staging: DataFrame, live: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -229,6 +230,25 @@ def distinct_insert(staging: DataFrame, live: DataFrame, keys: Sequence[str]) ->
     return staging.distinct().join(live.select(*keys).distinct(), list(keys), "left_anti")
 
 
+def range_sorted(df: DataFrame, order_by: Sequence[Column | str]) -> DataFrame:
+    """``df`` in ``order_by`` order across its partitions, plus ``__pid``
+    (partition id) and ``__mid`` (a monotonic id, increasing in that order
+    over the whole frame), pinned with one eager ``localCheckpoint`` so the
+    sampled range bounds cannot shift between jobs that read it.
+
+    Range-repartitioning puts strictly smaller keys in partition p than in
+    p+1 (AQE picks and may coalesce the partition count); a sort inside
+    each partition completes the order. No partition sees the whole input.
+    """
+    return (
+        df.repartitionByRange(*order_by)
+        .sortWithinPartitions(*order_by)
+        .withColumn("__pid", F.spark_partition_id())
+        .withColumn("__mid", F.monotonically_increasing_id())
+        .localCheckpoint(eager=True)
+    )
+
+
 def generate_ids(
     df: DataFrame,
     order_by: Sequence[Column | str],
@@ -244,64 +264,17 @@ def generate_ids(
     order — deterministic and reproducible, which the oracle can replicate.
 
     Scale shape: a bare ``Window.orderBy`` would sort the whole input through
-    ONE task. Instead we range-repartition on the canonical order (so
-    partition p holds strictly smaller keys than partition p+1), rank locally
-    inside each partition (a *partitioned* window — parallel), and add
-    per-partition cumulative offsets computed from a tiny count-per-partition
-    aggregate (the zipWithIndex pattern). Output ids are identical to the
-    global ``row_number`` whenever ``order_by`` is a total order (ties are
-    ambiguous under any engine). The ranked frame is pinned with
-    ``localCheckpoint`` so the sampled range bounds cannot shift between the
-    offset computation and the final projection.
+    ONE task. Instead the rows are put in order partition-parallel
+    (:func:`range_sorted`) and numbered by ``stitch.dense_index`` over
+    (partition id, monotonic id): the zipWithIndex pattern, one count per
+    partition. Output ids are identical to the global ``row_number``
+    whenever ``order_by`` is a total order (ties are ambiguous under any
+    engine).
     """
-    sess = df.sparkSession
-    try:
-        npart = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:
-        npart = 32
-    ranked = (
-        df.repartitionByRange(npart, *order_by)
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn(
-            "__rn",
-            F.row_number().over(Window.partitionBy("__pid").orderBy(*order_by)),
-        )
-        .localCheckpoint(eager=True)
-    )
-    counts = sorted(
-        (r["__pid"], r["__cnt"])
-        for r in ranked.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    offs = local_frame(sess, offsets or [(0, 0)], "__pid int, __off long")
-    idc = F.col("__off") + F.col("__rn") + F.lit(start - 1)
-    out = ranked.join(F.broadcast(offs), "__pid", "left")
+    out = dense_index(range_sorted(df, order_by), ["__pid"], "__mid", id_col, start)
     if prefix:
-        out = out.withColumn(id_col, F.concat(F.lit(prefix), idc.cast("string")))
-    else:
-        out = out.withColumn(id_col, idc.cast("long"))
-    return out.drop("__pid", "__rn", "__off")
-
-
-def upsert(
-    live: DataFrame,
-    staging: DataFrame,
-    keys: Sequence[str],
-    update_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Full merge: SCD-1 update of matched rows + append of new rows.
-
-    Composition of M1 + M8 — the Spark equivalent of Oracle
-    ``MERGE INTO … WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT``
-    (``WithOracle.pm:172-220``).
-    """
-    update_cols = update_cols or [c for c in staging.columns if c not in keys]
-    updated = scd1_update(live, staging, keys, update_cols)
-    fresh = new_keys(staging, live, keys).select(*live.columns)
-    return updated.unionByName(fresh)
+        out = out.withColumn(id_col, F.concat(F.lit(prefix), F.col(id_col).cast("string")))
+    return out.drop("__pid", "__mid")
 
 
 def append(

@@ -13,13 +13,12 @@ cleaned corpus into fixed-budget training sequences.
   not a parallel operator).
 
 The prefix sum is the scale-critical part: a bare ``sum() OVER
-(ORDER BY ...)`` serializes the corpus through one task. We reuse the
-zipWithIndex shape proven in ``operators.merge.generate_ids``:
-range-repartition on the canonical order, *local* cumulative sums inside
-each range partition (partitioned window — parallel), then add
-per-partition offsets from a partition-totals aggregate (tiny,
-driver-collected, broadcast back). Identical result to the global
-window, no single-partition stage anywhere.
+(ORDER BY ...)`` serializes the corpus through one task. Instead the
+rows are put in the canonical order partition-parallel
+(``merge.range_sorted``, shared with M13 ids) and summed by
+``stitch.running_stitch`` over their monotonic id: local sums per fixed
+chunk, chunk offsets folded on the driver. Identical result to the
+global window, no single-partition stage anywhere.
 """
 
 from __future__ import annotations
@@ -29,8 +28,9 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from modware_loader_spark.frames import local_frame
+from modware_loader_spark.operators.merge import range_sorted
 from modware_loader_spark.operators.sampling import hash_uniform
+from modware_loader_spark.sources.stitch import running_stitch
 
 
 def chunk_text(
@@ -81,44 +81,17 @@ def exclusive_prefix_sum(
     order, computed partition-parallel (no global-window stage).
 
     Output rows = input rows + ``out_col`` = sum of all strictly-earlier
-    weights. The ranked frame is localCheckpoint-pinned so the sampled
-    range bounds cannot shift between the totals job and the final
-    projection (same guard as ``merge.generate_ids``).
+    weights: the inclusive ``running_stitch`` sum over the monotonic id of
+    ``merge.range_sorted``, minus the row's own weight. That id increases
+    in the canonical order, and numbering the rows densely first
+    (``merge.generate_ids``) would only add its count job and its join.
     """
-    sess = df.sparkSession
-    try:
-        npart = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:
-        npart = 32
-    local_w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ranked = (
-        df.repartitionByRange(npart, *order_by)
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn("__incl", F.sum(F.col(weight_col).cast("long")).over(local_w))
-        .localCheckpoint(eager=True)
-    )
-    totals = sorted(
-        (r["__pid"], r["__tot"])
-        for r in ranked.groupBy("__pid")
-        .agg(F.sum(F.col(weight_col).cast("long")).alias("__tot"))
-        .collect()
-    )
-    offsets, acc = [], 0
-    for pid, tot in totals:
-        offsets.append((pid, acc))
-        acc += int(tot)
-    offs = local_frame(sess, offsets or [(0, 0)], "__pid int, __off long")
+    weight = F.col(weight_col).cast("long")
+    ranked = range_sorted(df, order_by)
     return (
-        ranked.join(F.broadcast(offs), "__pid", "left")
-        .withColumn(
-            out_col,
-            F.col("__off") + F.col("__incl") - F.col(weight_col).cast("long"),
-        )
-        .drop("__pid", "__incl", "__off")
+        running_stitch(ranked, counts={"__incl": weight}, idx_col="__mid")
+        .withColumn(out_col, F.col("__incl") - weight)
+        .drop("__pid", "__mid", "__incl")
     )
 
 

@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 
 from modware_loader_spark.operators.merge import generate_ids
 from modware_loader_spark.plans.genbank_load import GenBankChadoLoader
-from modware_loader_spark.sources.gff3 import _lines_with_index
-from modware_loader_spark.sources.stitch import running_stitch
+from modware_loader_spark.sources.stitch import line_index, running_stitch
 
 # Assembly.pm:161-177
 CONTIG_RGX = r"^(\w+)\.(\d{1,2}):(\d+)\.\.(\d+)$"
@@ -38,7 +37,7 @@ def parse_contig_joins(spark, path: str) -> DataFrame:
     """CONTIG sections → one row per join element:
     (locus, pos, element). Handles multi-record files and wrapped CONTIG
     continuation lines."""
-    lines = _lines_with_index(spark, path)
+    lines = line_index(spark, path)
     is_locus = F.col("line").startswith("LOCUS")
     # the current top-level keyword (column-0 word) carried forward over
     # continuation lines — chunked two-phase stitch, no global window

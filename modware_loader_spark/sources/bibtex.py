@@ -13,13 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modware_loader_spark.sources.gff3 import _lines_with_index
-from modware_loader_spark.sources.stitch import running_stitch
+from modware_loader_spark.sources.stitch import line_index, running_stitch
 
 
 def parse_bibtex(spark: SparkSession, path: str) -> DataFrame:
     """→ (entry_type, citekey, fields map<string,string>)."""
-    lines = _lines_with_index(spark, path)
+    lines = line_index(spark, path)
     is_entry = F.col("line").rlike(r"^@\w+\{")
     tagged = running_stitch(
         lines,

@@ -15,13 +15,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from modware_loader_spark.frames import local_frame
-from modware_loader_spark.sources.gff3 import _lines_with_index
-from modware_loader_spark.sources.stitch import running_stitch
+from modware_loader_spark.sources.stitch import line_index, running_stitch
 
 
 def parse_genbank(spark: SparkSession, path: str) -> dict:
     """→ {metadata: dict, features: DataFrame, sequence: DataFrame}."""
-    lines = _lines_with_index(spark, path).localCheckpoint()
+    lines = line_index(spark, path).localCheckpoint()
 
     meta_rows = lines.filter(
         F.col("line").rlike(r"^(LOCUS|DEFINITION|ACCESSION|VERSION|SOURCE)\s")

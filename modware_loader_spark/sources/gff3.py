@@ -7,19 +7,18 @@ parsing via Bio::GFF3::LowLevel): per line → feature hashref with a
 file to FASTA records; ``##`` directives are passed through; ``#`` comments
 skipped.
 
-Spark shape: one JVM text scan with a dense global line index (the line's
-position inside its file block plus the block's offset — the indexes
-``zipWithIndex`` would give, without a Python worker), the FASTA boundary
-found with one tiny agg, then two branch DataFrames. Attributes parse as
+Spark shape: one JVM text scan with a dense global line index
+(``stitch.line_index``), the FASTA boundary found with one tiny agg, then
+two branch DataFrames. Attributes parse as
 ``str_to_map(';', '=')`` + comma-split → ``map<string, array<string>>`` —
 all JVM-side. Values are percent-decoded (%2C/%3B/%09 … —
 ``Bio::GFF3::LowLevel`` semantics) with literal '+' untouched; the GFF3
 writer re-escapes, so reserved characters round-trip.
 
 Scale: the feature branch is embarrassingly parallel. The FASTA-tail
-``>``-header assignment needs the global line order; it runs through the
-chunked two-phase prefix stitch (``sources/stitch.py``), so a genome-sized
-tail never funnels through a single-partition window.
+``>``-header assignment needs the global line order; it runs through
+``stitch.running_stitch``, so a genome-sized tail never funnels through a
+single-partition window.
 """
 
 from __future__ import annotations
@@ -28,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from modware_loader_spark.frames import local_frame
-from modware_loader_spark.sources.stitch import running_stitch
+from modware_loader_spark.sources.stitch import line_index, running_stitch
 
 FEATURE_COLS = [
     "seq_id",
@@ -44,40 +43,11 @@ FEATURE_COLS = [
 ]
 
 
-def _lines_with_index(spark: SparkSession, path: str) -> DataFrame:
-    """``(line, idx)`` for every line of the text file(s) at ``path``, with
-    ``idx`` dense from 0 in file order (files by path).
-
-    ``monotonically_increasing_id`` numbers rows consecutively inside a
-    scan partition, and each file block is scanned by exactly one
-    partition, so a row's position in its block is its id minus the
-    block's smallest id. One small aggregate counts the lines per block;
-    Python folds those counts into per-block shifts, which join back
-    as a broadcast ``LocalRelation``."""
-    raw = spark.read.text(path).select(
-        F.col("value").alias("line"),
-        F.col("_metadata.file_path").alias("__file"),
-        F.col("_metadata.file_block_start").alias("__block"),
-        F.monotonically_increasing_id().alias("__id"),
-    )
-    blocks = raw.groupBy("__file", "__block").agg(
-        F.count(F.lit(1)).alias("n"), F.min("__id").alias("first")
-    )
-    shifts, acc = [], 0
-    for r in sorted(blocks.collect(), key=lambda r: (r["__file"], r["__block"])):
-        shifts.append((r["__file"], r["__block"], acc - r["first"]))
-        acc += r["n"]
-    shift = local_frame(spark, shifts, "__file string, __block long, __shift long")
-    return raw.join(F.broadcast(shift), ["__file", "__block"]).select(
-        "line", (F.col("__id") + F.col("__shift")).alias("idx")
-    )
-
-
 def parse_fasta(spark: SparkSession, path: str) -> DataFrame:
     """Standalone FASTA scan (reference S6 — ``Bio::SeqIO -format fasta``):
     → (seq_id, sequence), wrap-joined. Same grouping as the GFF3
     ``##FASTA`` tail."""
-    lines = _lines_with_index(spark, path)
+    lines = line_index(spark, path)
     tagged = running_stitch(
         lines,
         lasts={
@@ -113,7 +83,7 @@ def parse_gff3(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
               attributes map<string,array<string>>, line_idx
     sequences: seq_id, sequence (from the ``##FASTA`` tail; empty if none)
     """
-    lines = _lines_with_index(spark, path).localCheckpoint()
+    lines = line_index(spark, path).localCheckpoint()
     fasta_row = (
         lines.filter(F.col("line") == "##FASTA").agg(F.min("idx").alias("i")).first()
     )

@@ -23,8 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modware_loader_spark.sources.gff3 import _lines_with_index
-from modware_loader_spark.sources.stitch import running_stitch
+from modware_loader_spark.sources.stitch import line_index, running_stitch
 
 MULTI_KEYS = ("synonym", "is_a", "relationship", "alt_id", "subset", "xref")
 SINGLE_KEYS = ("id", "name", "namespace", "def", "comment", "is_obsolete")
@@ -46,7 +45,7 @@ def _normalize(col):
 
 def parse_obo(spark: SparkSession, path: str) -> dict:
     """Returns {header: dict, terms, relationships, synonyms, alt_ids}."""
-    lines = _lines_with_index(spark, path)
+    lines = line_index(spark, path)
     is_header = F.col("line").isin("[Term]", "[Typedef]")
     tagged = (
         running_stitch(

@@ -18,7 +18,7 @@ from modware_loader_spark import cli
 REF = "/root/reference/t/test_data"
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 
-pytestmark = pytest.mark.skipif(
+needs_ref = pytest.mark.skipif(
     not os.path.isdir(REF), reason="reference test data absent"
 )
 
@@ -45,6 +45,7 @@ def test_blast2chadogff3_cli(capsys, tmp_path):
     assert "match_part" in text
 
 
+@needs_ref
 def test_bibtex_pub_round_trip(capsys, tmp_path, spark):
     cat = str(tmp_path / "pubcat")
     res = _run(
@@ -100,6 +101,7 @@ def test_organism2chado_cli(capsys, tmp_path):
     assert os.path.isdir(os.path.join(cat, "organism"))
 
 
+@needs_ref
 def test_dictystrain_dump_cli(capsys, tmp_path):
     out = str(tmp_path / "strains")
     res = _run(
@@ -112,6 +114,7 @@ def test_dictystrain_dump_cli(capsys, tmp_path):
     assert part and "DSC_G0000001" in open(os.path.join(out, part[0])).read()
 
 
+@needs_ref
 def test_dictystrain2chado_cli(capsys, tmp_path, spark):
     cat = str(tmp_path / "stockcat")
     res = _run(
@@ -153,6 +156,7 @@ def test_legacydump_colleague_cli(capsys, tmp_path, spark):
     assert "ann@u.edu" in open(os.path.join(out, part[0])).read()
 
 
+@needs_ref
 def test_chado2gaf_cli(capsys, tmp_path, spark):
     cat = str(tmp_path / "gafcat")
     frames = {

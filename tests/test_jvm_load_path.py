@@ -16,7 +16,7 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 from modware_loader_spark.frames import local_frame
-from modware_loader_spark.sources.gff3 import _lines_with_index
+from modware_loader_spark.sources.stitch import line_index
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -94,7 +94,7 @@ def test_lines_with_index_equals_zip_with_index(spark, text_file, max_bytes):
     try:
         raw = spark.read.text(text_file)
         parts = raw.rdd.getNumPartitions()
-        got = sorted((r.idx, r.line) for r in _lines_with_index(spark, text_file).collect())
+        got = sorted((r.idx, r.line) for r in line_index(spark, text_file).collect())
     finally:
         spark.conf.set(key, old)
     assert parts == 1 if max_bytes is None else parts >= 8

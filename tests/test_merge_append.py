@@ -1,11 +1,13 @@
 """``operators.merge.append`` / ``find_or_create``: the live-table half of
 every loader's merge (id allocation, idempotent find-or-create, bounded
-lineage)."""
+lineage), and the M13 ids they allocate with."""
 
 from __future__ import annotations
 
+import pytest
+
 from modware_loader_spark.frames import local_frame
-from modware_loader_spark.operators.merge import append, find_or_create
+from modware_loader_spark.operators.merge import append, find_or_create, generate_ids
 
 SCHEMA = "db_id long, name string"
 
@@ -92,3 +94,29 @@ def test_new_frames_keep_their_extra_columns(spark):
     assert first.columns == ["db_id", "name", "note"]
     assert live.columns == ["db_id", "name"]
     assert _rows(live) == [(1, "a"), (5, "p"), (6, "q")]
+
+
+@pytest.mark.parametrize("n, prefix", [(300, ""), (300, "auto-"), (0, "auto-")])
+def test_generate_ids_equal_row_number_across_partitions(spark, n, prefix):
+    # unique keys in shuffled order, over 8 range partitions AQE may not merge
+    keys = [(k * 7919) % 1000 for k in range(n)]
+    df = local_frame(spark, [(k, f"n{k}") for k in keys], "k long, name string")
+    conf = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {key: spark.conf.get(key) for key in conf}
+    for key, value in conf.items():
+        spark.conf.set(key, value)
+    try:
+        got = generate_ids(df, ["k"], id_col="gid", prefix=prefix, start=5)
+        rows = sorted(tuple(r) for r in got.collect())
+    finally:
+        for key, value in old.items():
+            spark.conf.set(key, value)
+    assert got.columns == ["k", "name", "gid"]
+    want = sorted(
+        (k, f"n{k}", f"{prefix}{rn + 5 - 1}" if prefix else rn + 5 - 1)
+        for rn, k in enumerate(sorted(keys), start=1)
+    )
+    assert rows == want

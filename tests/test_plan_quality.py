@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 
 import pytest
@@ -244,8 +245,15 @@ def test_no_single_partition_exchange_anywhere(spark, sf_dir):
     source-relation count within the per-query budget (default:
     distinct source tables + 2; overrides documented above —
     cache-stable, see the override block comment)."""
+    from modware_loader_spark.plans.export_queries import _BIBTEX_FIXTURE
+
+    # s13 builds from the reference checkout's literature/test.bib, which the
+    # repo does not hold; test_oracle_parity skips that case the same way.
+    absent = set() if os.path.exists(_BIBTEX_FIXTURE) else {"s13_bibtex2chado_pub"}
     offenders = {}
     for name, fn in entrymod.queries().items():
+        if name in absent:
+            continue
         df = fn(spark, sf_dir)
         qe = df._jdf.queryExecution()
         plan = qe.executedPlan().toString()
